@@ -199,6 +199,40 @@ HEADLINE = [
 ]
 
 
+def bench_line(timings: dict[str, float], n_runs: int, sf_val) -> str:
+    """The one JSON line the bench prints, keyed by bare "qNN"."""
+    compact = {name.split("_", 1)[0]: round(t, 2) for name, t in timings.items()}
+    assert len(compact) == len(timings), "qNN prefixes must stay unique"
+    out = {
+        "queries": compact,
+        "per_query": f"min_of_{n_runs}",
+        "sf": sf_val,
+        "metric": "headline_queries_total_wall_clock",
+        "unit": "sec",
+        "value": round(sum(timings.values()), 3),
+    }
+    # compact separators (no spaces) keep ~140 entries well under the
+    # 2000-char tail window that records this line, at 2-decimal
+    # resolution; if the catalog ever outgrows that, degrade to 1
+    # decimal of the raw timing floored at 0.1 s (so no query prints as
+    # 0 and reads as dropped; flooring the 2-decimal value let a <5 ms
+    # query round to 0.0) — NEVER to integers: r14's integer fallback
+    # quantized every sub-second query to 0/1 and gutted the per-query
+    # comparison (73 phantom regressions).
+    line = json.dumps(out, separators=(",", ":"))
+    if len(line) > 1900:
+        out["queries"] = {
+            name.split("_", 1)[0]: max(0.1, round(t, 1))
+            for name, t in timings.items()
+        }
+        line = json.dumps(out, separators=(",", ":"))
+    assert len(line) <= 1900, (
+        f"bench line {len(line)} chars exceeds the 2000-char tail window; "
+        "shrink the encoding without dropping resolution below 0.1 s"
+    )
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -254,34 +288,7 @@ def main() -> None:
     ) as fh:
         json.dump(detail, fh)
 
-    compact = {name.split("_", 1)[0]: round(t, 2) for name, t in timings.items()}
-    assert len(compact) == len(timings), "qNN prefixes must stay unique"
-    out = {
-        "queries": compact,
-        "per_query": f"min_of_{n_runs}",
-        "sf": sf_val,
-        "metric": "headline_queries_total_wall_clock",
-        "unit": "sec",
-        "value": round(sum(timings.values()), 3),
-    }
-    # compact separators (no spaces) keep ~140 entries well under the
-    # driver's 2000-char tail window at 2-decimal resolution; if the
-    # catalog ever outgrows that, degrade to 1 decimal (floored at 0.1 s
-    # so no query prints as 0 and reads as dropped) — NEVER to integers:
-    # r14's integer fallback quantized every sub-second query to 0/1 and
-    # gutted the driver's per-query comparison (73 phantom regressions).
-    line = json.dumps(out, separators=(",", ":"))
-    if len(line) > 1900:
-        out["queries"] = {
-            k: max(0.1, round(v, 1)) if v > 0 else 0.0
-            for k, v in compact.items()
-        }
-        line = json.dumps(out, separators=(",", ":"))
-    assert len(line) <= 1900, (
-        f"bench line {len(line)} chars exceeds the driver's tail window; "
-        "shrink the encoding without dropping resolution below 0.1 s"
-    )
-    print(line)
+    print(bench_line(timings, n_runs, sf_val))
     spark.stop()
 
 

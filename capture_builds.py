@@ -19,8 +19,8 @@ subtrees = {
     "video_gram_postings_build": multimodal.video_gram_postings(
         multimodal.synthesize_token_video(d)),
     # q146/q149: PGM synthesis + dhash
-    "dhash_build": multimodal.image_dhash_bands(
-        multimodal.synthesize_minhash_pgm(d)) if hasattr(multimodal, "image_dhash_bands") else None,
+    "dhash_bands_build": multimodal.dhash_bands_from_pgm(
+        multimodal.synthesize_minhash_pgm(d)),
     # q143/q145/q150/q151: positional gram postings
     "positional_grams_build": dedupe.positional_gram_hashes(d, "doc_id", "text", k=8),
     # q137/q138/q145: winnowing fingerprints
@@ -29,8 +29,6 @@ subtrees = {
     "cdc_chunks_build": dedupe.cdc_chunks(d, "doc_id", "text"),
 }
 for name, df in subtrees.items():
-    if df is None:
-        print("skip", name); continue
     txt = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     with open(f"plans/r15/{name}.txt", "w") as fh:
         fh.write(txt)

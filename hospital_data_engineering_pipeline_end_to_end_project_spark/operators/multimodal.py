@@ -497,9 +497,15 @@ def synthesize_wav_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         for pdf in batches:
             ids = pdf["media_id"]
             mask = ids.notna().to_numpy()
-            # fillna(0) BEFORE the int64 cast: routing non-null ids
-            # through float64 would round ids beyond 2^53
+            # fillna(0) before the int64 cast keeps ids beyond 2^53
+            # exact only in NULL-free batches: a batch holding any NULL
+            # id already arrives from Arrow as float64, rounded
             iv = ids.fillna(0).to_numpy(dtype="int64")
+            if (iv[mask] < 0).any():
+                raise ValueError(
+                    "synthesize_wav_media needs non-negative ids; got "
+                    f"{int(iv[mask].min())}"
+                )
             ns = 64 + iv % 64
             base = (iv * 31) % 65536
             wave = ((base[:, None] + sevens[None, :]) % 65536).astype("<u2")

@@ -1,4 +1,4 @@
-"""Adaptive pre-expansion parallelism.
+"""Adaptive pre-expansion parallelism, and concurrent pipelines.
 
 Row-expanding operators (word shingling is a ~50x explode, per-token
 hashing, per-pair scoring) do their heavy expression work in the stage
@@ -19,11 +19,48 @@ Round-robin is safe for these callers because every downstream result
 is partition-layout-invariant (keyed aggregations / equi-joins over the
 exploded rows), and Spark's indeterminate-stage rollback re-runs the
 full stage set on fetch-failure retry.
+
+:func:`run_concurrently` is the job-level counterpart: independent
+pipelines of small jobs (the six Silver entities, the Gold tables)
+submitted from one thread each, labelled with the caller's job group.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
+
+
+def run_concurrently(
+    spark: SparkSession, tasks: dict[str, Callable[[], T]]
+) -> dict[str, T]:
+    """Run independent Spark pipelines at the same time, one Python
+    thread each, and return their results in the order of ``tasks``.
+
+    A pipeline of small writes spends most of its time on per-job work
+    (planning, scheduling, commit) while each job runs only 1-2 tasks.
+    Submitting the pipelines together overlaps one pipeline's per-job
+    work with another's tasks.  The pool has one thread per task, so
+    there is nothing to tune.
+
+    Each thread target is wrapped with ``inheritable_thread_target``
+    (pinned-thread mode, PySpark's default), so the caller's local
+    properties — job group, description, scheduler pool — and session
+    tags label every job a pipeline fires.  If a task raises, the
+    exception of the first failing task in ``tasks`` order is re-raised
+    after every task has finished."""
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futures = {name: pool.submit(inherit(fn)) for name, fn in tasks.items()}
+        # leaving the block waits for every task, so no pipeline is
+        # still writing when an exception propagates
+    return {name: f.result() for name, f in futures.items()}
 
 
 def fan_out(

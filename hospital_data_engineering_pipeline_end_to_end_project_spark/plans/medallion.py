@@ -21,22 +21,29 @@ Delta table and the same specs drive ``MERGE`` instead.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import cleanse
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import scd2
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import (
+    run_concurrently,
+)
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources import delta_io, schemas
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import (
     CORRUPT_COL,
     read_csv,
     read_ndjson,
+)
+from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.writers import (
+    write_observed,
 )
 
 
@@ -172,6 +179,11 @@ ENTITIES: dict[str, EntitySpec] = {
 }
 
 
+def _state_aggs() -> dict[str, Column]:
+    """The state audit aggregates: all versions, current versions."""
+    return {"rows": F.count(F.lit(1)), "current": F.count_if(F.col(scd2.CURRENT))}
+
+
 class SilverStore:
     """Versioned SCD2 state store, one directory per entity.
 
@@ -216,10 +228,21 @@ class SilverStore:
     #: so Spark's parquet reader ignores it like ``_SUCCESS``
     EPOCH_FILE = "_applied_batch"
 
+    def _state_counts(self, entity: str) -> dict[str, int]:
+        """``{"rows", "current"}`` of a stored state in one aggregate
+        job (the delta backend's audit: a MERGE has no written
+        DataFrame to observe)."""
+        aggs = [c.alias(k) for k, c in _state_aggs().items()]
+        return self.read(entity).agg(*aggs).first().asDict()
+
     def write(
         self, entity: str, df: DataFrame, applied_batch: int | None = None
-    ) -> None:
-        """Swap in a new state; with ``applied_batch`` the batch id is
+    ) -> dict[str, int]:
+        """Swap in a new state and return its ``{"rows", "current"}``
+        counts.  On the parquet backend they are observed on the write
+        job itself; the delta backend aggregates the committed table.
+
+        With ``applied_batch`` the batch id is
         written INSIDE the new state directory before the rename, so
         state and epoch publish in the same atomic step (the streaming
         ledger's crash-window closure — see
@@ -233,15 +256,18 @@ class SilverStore:
             if applied_batch is not None:
                 with open(os.path.join(target, self.EPOCH_FILE), "w") as fh:
                     fh.write(str(applied_batch))
-            return
+            return self._state_counts(entity)
         tmp = f"{target}.tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
+        counts = write_observed(
+            df, lambda d: d.write.mode("overwrite").parquet(tmp), **_state_aggs()
+        )
         if applied_batch is not None:
             with open(os.path.join(tmp, self.EPOCH_FILE), "w") as fh:
                 fh.write(str(applied_batch))
         if os.path.exists(target):
             shutil.rmtree(target)
         os.replace(tmp, target)
+        return counts
 
     def last_applied(self, entity: str) -> int | None:
         """Batch id committed WITH the current state, or None if the
@@ -258,19 +284,22 @@ class SilverStore:
         spec: EntitySpec,
         batch: DataFrame,
         processing_date: str,
-    ) -> None:
-        """SCD2-merge one cleansed batch into the entity's state."""
+    ) -> dict[str, int]:
+        """SCD2-merge one cleansed batch into the entity's state;
+        returns the new state's ``{"rows", "current"}`` counts."""
         if not self.exists(spec.name):
-            self.write(spec.name, scd2.initial_load(batch, spec.scd2, processing_date))
-        elif self.state_format == "delta":
+            return self.write(
+                spec.name, scd2.initial_load(batch, spec.scd2, processing_date)
+            )
+        if self.state_format == "delta":
             delta_io.scd2_delta_merge(
                 self.spark, self.path(spec.name), batch, spec.scd2, processing_date
             )
-        else:
-            self.write(
-                spec.name,
-                scd2.merge(self.read(spec.name), batch, spec.scd2, processing_date),
-            )
+            return self._state_counts(spec.name)
+        return self.write(
+            spec.name,
+            scd2.merge(self.read(spec.name), batch, spec.scd2, processing_date),
+        )
 
 
 def read_bronze(spark: SparkSession, raw_dir: str, spec: EntitySpec) -> DataFrame:
@@ -295,17 +324,19 @@ def run_silver_entity(
     associative currency arithmetic instead of the reference's
     doubles; doubles remain the default for reference parity).
 
-    Mirrors the reference's per-entity flow (SURVEY 3.2) with metrics
-    taken via ``observe``-free counts on the written state (the
-    reference recomputes full lineage for its audit count,
-    ``Silver Layer.py:125``).
+    Mirrors the reference's per-entity flow (SURVEY 3.2).  Every
+    returned count is observed (``DataFrame.observe``) on the one job
+    that writes the new state: ``rows``/``current`` on the written
+    frame, ``quarantined`` on the bronze scan above the
+    ``_corrupt_record`` filter.  Nothing is cached and the output is
+    not re-read (the reference recomputes full lineage for its audit
+    count, ``Silver Layer.py:125``).  On the delta backend
+    ``rows``/``current`` come from one aggregate over the merged table.
     """
-    # Cache the batch: Spark forbids querying only _corrupt_record off a
-    # raw scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and the batch feeds
-    # both the quarantine count and the merge.  This caches one incoming
-    # BATCH (bounded), never the accumulated state.
-    bronze = read_bronze(spark, raw_dir, spec).cache()
-    quarantined = bronze.filter(F.col(CORRUPT_COL).isNotNull())
+    quarantine = Observation()
+    bronze = read_bronze(spark, raw_dir, spec).observe(
+        quarantine, F.count_if(F.col(CORRUPT_COL).isNotNull()).alias("quarantined")
+    )
     clean_in = bronze.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
 
     batch = spec.transform(clean_in)
@@ -315,16 +346,8 @@ def run_silver_entity(
     batch = batch.dropDuplicates()  # exact dupe rows (Silver Layer.py:175)
     batch = cleanse.require_keys(batch, spec.keys)
 
-    store.apply_batch(spec, batch, processing_date)
-
-    written = store.read(spec.name)
-    metrics = {
-        "rows": written.count(),
-        "current": written.filter(F.col(scd2.CURRENT)).count(),
-        "quarantined": quarantined.count(),
-    }
-    bronze.unpersist()
-    return metrics
+    counts = store.apply_batch(spec, batch, processing_date)
+    return {**counts, **quarantine.get}
 
 
 def run_silver(
@@ -335,10 +358,18 @@ def run_silver(
     state_format: str = "parquet",
     money_mode: bool = False,
 ) -> dict[str, dict[str, int]]:
+    """Load every entity into Silver; the six entity pipelines are
+    independent and run concurrently (:func:`run_concurrently`).
+    Returns ``{entity: {"rows", "current", "quarantined"}}`` in
+    ``ENTITIES`` order."""
     store = SilverStore(spark, warehouse, state_format=state_format)
-    return {
-        name: run_silver_entity(
-            spark, raw_dir, store, spec, processing_date, money_mode=money_mode
-        )
-        for name, spec in ENTITIES.items()
-    }
+    return run_concurrently(
+        spark,
+        {
+            name: functools.partial(
+                run_silver_entity,
+                spark, raw_dir, store, spec, processing_date, money_mode=money_mode,
+            )
+            for name, spec in ENTITIES.items()
+        },
+    )

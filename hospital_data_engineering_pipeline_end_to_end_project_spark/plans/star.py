@@ -19,14 +19,20 @@ projection, not the reference's N collect round-trips
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Container
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import (
+    run_concurrently,
+)
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.scd2 import CURRENT
 from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.medallion import SilverStore
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.writers import (
+    write_observed,
     write_partitioned,
     write_table,
 )
@@ -204,72 +210,79 @@ def refresh_fact_partitions(
     replaces only the partition directories present in the written
     frame, leaving every other partition's files untouched.
 
-    Returns the number of rows written.  NULL-dated rows live in the
-    HIVE default partition and are only rewritten by a full
-    ``run_gold``.
+    Returns the number of rows written to the touched months, observed
+    on the write job itself.  NULL-dated rows live in the HIVE default
+    partition and are only rewritten by a full ``run_gold``.
     """
     builder, _ = FACT_BUILDERS[fact_name]
     df = builder(SilverStore(spark, warehouse))
     pred = F.lit(False)
     for y, m in months:
         pred = pred | ((F.col("year") == y) & (F.col("month") == m))
-    sub = df.filter(pred).repartition("year", "month")
-    (
-        sub.write.mode("overwrite")
+    return write_observed(
+        df.filter(pred),
+        lambda sub: sub.repartition("year", "month")
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("year", "month")
-        .parquet(os.path.join(warehouse, "gold", fact_name))
+        .parquet(os.path.join(warehouse, "gold", fact_name)),
+    )["rows"]
+
+
+def _write_tables(
+    spark: SparkSession,
+    gold: str,
+    tables: dict[str, DataFrame],
+    partitioned: Container[str] = (),
+) -> dict[str, int]:
+    """Write independent Gold tables concurrently (``partitioned``
+    ones by year/month); returns each table's row count, observed on
+    its write job, in ``tables`` order."""
+
+    def write(name: str, df: DataFrame) -> int:
+        path = os.path.join(gold, name)
+        if name in partitioned:
+            return write_observed(
+                df, lambda d: write_partitioned(d, path, ["year", "month"])
+            )["rows"]
+        return write_observed(df, lambda d: write_table(d, path))["rows"]
+
+    return run_concurrently(
+        spark, {name: functools.partial(write, name, df) for name, df in tables.items()}
     )
-    return spark.read.parquet(os.path.join(warehouse, "gold", fact_name)).filter(
-        pred
-    ).count()
 
 
 def refresh_marts(spark: SparkSession, warehouse: str) -> dict[str, int]:
     """Rebuild the aggregate marts from the (possibly incrementally
-    refreshed) facts.  Marts are months x small-dimension aggregates —
-    tiny relative to facts — so a full rebuild is the right trade at
-    any scale."""
+    refreshed) facts, both at once; returns their row counts.  Marts
+    are months x small-dimension aggregates — tiny relative to facts —
+    so a full rebuild is the right trade at any scale."""
     gold = os.path.join(warehouse, "gold")
     fb = spark.read.parquet(os.path.join(gold, "fact_billing"))
     fa = spark.read.parquet(os.path.join(gold, "fact_admissions"))
-    counts = {}
-    for name, df in {
-        "agg_revenue_month": build_agg_revenue_month(fb),
-        "agg_admissions_reason_month": build_agg_admissions_reason_month(fa),
-    }.items():
-        write_table(df, os.path.join(gold, name))
-        counts[name] = spark.read.parquet(os.path.join(gold, name)).count()
-    return counts
+    return _write_tables(
+        spark,
+        gold,
+        {
+            "agg_revenue_month": build_agg_revenue_month(fb),
+            "agg_admissions_reason_month": build_agg_admissions_reason_month(fa),
+        },
+    )
 
 
 def run_gold(spark: SparkSession, warehouse: str) -> dict[str, int]:
-    """Build and persist the full Gold layer; returns row counts."""
+    """Build and persist the full Gold layer; returns row counts.  The
+    dims and facts are independent and written concurrently, then the
+    marts over the new facts (:func:`refresh_marts`)."""
     store = SilverStore(spark, warehouse)
     gold = os.path.join(warehouse, "gold")
 
-    dims = {
+    tables = {
         "dim_patient": build_dim_patient(store),
         "dim_doctor": build_dim_doctor(store),
         "dim_date": build_dim_date(spark, store),
+        **{name: b(store) for name, (b, _) in FACT_BUILDERS.items()},
     }
-    facts = {name: b(store) for name, (b, _) in FACT_BUILDERS.items()}
-
-    counts: dict[str, int] = {}
-    for name, df in dims.items():
-        write_table(df, os.path.join(gold, name))
-        counts[name] = spark.read.parquet(os.path.join(gold, name)).count()
-    for name, df in facts.items():
-        write_partitioned(df, os.path.join(gold, name), ["year", "month"])
-        counts[name] = spark.read.parquet(os.path.join(gold, name)).count()
-
-    fb = spark.read.parquet(os.path.join(gold, "fact_billing"))
-    fa = spark.read.parquet(os.path.join(gold, "fact_admissions"))
-    marts = {
-        "agg_revenue_month": build_agg_revenue_month(fb),
-        "agg_admissions_reason_month": build_agg_admissions_reason_month(fa),
-    }
-    for name, df in marts.items():
-        write_table(df, os.path.join(gold, name))
-        counts[name] = spark.read.parquet(os.path.join(gold, name)).count()
+    counts = _write_tables(spark, gold, tables, partitioned=FACT_BUILDERS)
+    counts.update(refresh_marts(spark, warehouse))
     return counts

@@ -18,9 +18,29 @@ write gives one (or a few) files per partition instead of
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources import delta_io
+
+
+def write_observed(
+    df: DataFrame, write: Callable[[DataFrame], None], **metrics: Column
+) -> dict:
+    """Run ``write`` on ``df`` and return ``metrics`` (aggregate
+    Columns, ``rows`` = row count by default) over the rows it wrote.
+
+    The aggregates ride the write job itself (``DataFrame.observe``),
+    so an audit count costs no second job and no re-read of the
+    output — the reference's ``count()`` after every write recomputes
+    the full lineage (``Silver Layer.py:125``).  Returns a dict in the
+    order of ``metrics``."""
+    obs = Observation()
+    exprs = [c.alias(k) for k, c in (metrics or {"rows": F.count(F.lit(1))}).items()]
+    write(df.observe(obs, *exprs))
+    return obs.get
 
 
 def write_table(

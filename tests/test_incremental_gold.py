@@ -111,6 +111,29 @@ def test_refresh_propagates_silver_change_and_marts(spark, pipeline):
     assert mart_rev == pytest.approx(2 * old_sum, abs=0.02)
 
 
+def test_refresh_counts_match_the_written_partitions(spark, pipeline):
+    # each returned count is observed on the write job; it must equal
+    # an independent re-read of the touched months / the marts
+    wh = pipeline
+    store = medallion.SilverStore(spark, wh)
+    months = star.months_touched(store.read("billing"), "billing_date")[:2]
+    assert len(months) == 2
+    pred = F.lit(False)
+    for y, m in months:
+        pred = pred | ((F.col("year") == y) & (F.col("month") == m))
+    for fact in star.FACT_BUILDERS:
+        n = star.refresh_fact_partitions(spark, wh, fact, months)
+        back = spark.read.parquet(os.path.join(wh, "gold", fact)).filter(pred)
+        assert n == back.count(), fact
+    # no month: the filter folds to an empty relation and the observed
+    # count must still arrive (the write job is the only one)
+    assert star.refresh_fact_partitions(spark, wh, "fact_billing", []) == 0
+    marts = star.refresh_marts(spark, wh)
+    assert list(marts) == ["agg_revenue_month", "agg_admissions_reason_month"]
+    for name, n in marts.items():
+        assert n == spark.read.parquet(os.path.join(wh, "gold", name)).count()
+
+
 def test_months_touched_bounds(spark):
     df = spark.createDataFrame(
         [("2026-01-05",), ("2026-01-20",), ("2026-03-01",), (None,)],

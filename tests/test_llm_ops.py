@@ -824,6 +824,19 @@ def test_wav_synthesis_and_frame_energy(spark):
     assert got[(5, 4)][0] == 5
 
 
+def test_wav_synthesis_rejects_negative_ids(spark):
+    # the non-negative id contract fails with a named ValueError, not a
+    # KeyError from the header table; NULL ids stay NULL payloads
+    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import multimodal
+
+    d = spark.createDataFrame([(4,), (None,), (-3,)], "doc_id long")
+    msg = r"ValueError: synthesize_wav_media needs non-negative ids; got -3"
+    with pytest.raises(Exception, match=msg):
+        multimodal.synthesize_wav_media(d, "doc_id").collect()
+    ok = spark.createDataFrame([(4,), (None,)], "doc_id long")
+    assert multimodal.synthesize_wav_media(ok, "doc_id").count() == 2
+
+
 def test_video_frame_sampling_walks_and_decimates(spark):
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import multimodal
 

@@ -4,11 +4,14 @@ and a DuckDB cross-check of the revenue mart (SURVEY 5.3/5.4)."""
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
+import warnings
 
 import duckdb
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import scd2
@@ -173,3 +176,131 @@ def test_money_mode_casts_currency_to_decimal(spark, tmp_path):
     assert dict(store.read("procedures").dtypes)["cost"] == "decimal(12,2)"
     # non-money entities untouched
     assert dict(store.read("patients").dtypes)["age"] == "int"
+
+
+# -- counts observed on the write, concurrent entity pipelines ----------
+
+#: malformed lines appended to the raw feeds: CSV rows with extra
+#: fields, NDJSON lines that are not JSON
+MALFORMED = {
+    "patients": ["P_BAD1,a,b,M,40,x@y.z,555,Oslo,extra", "P_BAD2,a,b,c,d,e,f,g,h,i"],
+    "doctors": ["D_BAD,a,b,c,3,extra,extra"],
+    "vitals": ['{"vital_id": "V_BAD", broken', "not json at all"],
+    "billing": ['{"billing_id": '],
+}
+
+
+@contextlib.contextmanager
+def job_group(spark, name):
+    """Run the block in job group ``name``; yields a function that
+    returns the ids of the group's jobs once the listener bus drained."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(name))
+
+    try:
+        yield job_ids
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def ungrouped_jobs(spark):
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+@pytest.fixture(scope="module")
+def dirty(spark, tmp_path_factory):
+    raw = str(tmp_path_factory.mktemp("dirty_raw"))
+    wh = str(tmp_path_factory.mktemp("dirty_wh"))
+    datagen.generate(
+        raw, seed=23, n_patients=80, n_doctors=12, n_admissions=120,
+        n_vitals=120, n_procedures=120, n_billing=120,
+    )
+    for name, lines in MALFORMED.items():
+        with open(os.path.join(raw, medallion.ENTITIES[name].file_name), "a") as fh:
+            fh.write("\n".join(lines) + "\n")
+    before = ungrouped_jobs(spark)
+    with warnings.catch_warnings(record=True) as caught, job_group(
+        spark, "dirty-load"
+    ) as job_ids:
+        warnings.simplefilter("always")
+        silver = medallion.run_silver(spark, raw, wh, D1)
+        gold = star.run_gold(spark, wh)
+        jobs = job_ids()
+    return {
+        "raw": raw, "wh": wh, "silver": silver, "gold": gold, "jobs": jobs,
+        "ungrouped": ungrouped_jobs(spark) - before,
+        "warnings": [str(w.message) for w in caught],
+    }
+
+
+def test_silver_counts_match_the_written_state(spark, dirty):
+    store = medallion.SilverStore(spark, dirty["wh"])
+    assert list(dirty["silver"]) == list(medallion.ENTITIES)
+    for name, spec in medallion.ENTITIES.items():
+        state = store.read(name)
+        # independent quarantine count: the cached full bronze scan
+        bronze = medallion.read_bronze(spark, dirty["raw"], spec).cache()
+        corrupt = bronze.filter(F.col("_corrupt_record").isNotNull()).count()
+        bronze.unpersist()
+        assert corrupt == len(MALFORMED.get(name, [])), name
+        assert dirty["silver"][name] == {
+            "rows": state.count(),
+            "current": state.filter(F.col(scd2.CURRENT)).count(),
+            "quarantined": corrupt,
+        }, name
+
+
+def test_gold_counts_match_the_written_tables(spark, dirty):
+    gold = os.path.join(dirty["wh"], "gold")
+    assert list(dirty["gold"]) == [
+        "dim_patient", "dim_doctor", "dim_date", "fact_admissions",
+        "fact_billing", "fact_vitals", "fact_procedures",
+        "agg_revenue_month", "agg_admissions_reason_month",
+    ]
+    for name, n in dirty["gold"].items():
+        assert n == spark.read.parquet(os.path.join(gold, name)).count(), name
+
+
+def test_pipeline_jobs_carry_the_callers_job_group(spark, dirty):
+    # the entity/table threads inherit the caller's job group, so a job
+    # tracer never sees an unlabelled job, and the session is passed to
+    # inheritable_thread_target (no "session is not provided" warning)
+    assert dirty["jobs"], "the load fired no job in the caller's group"
+    assert dirty["ungrouped"] == set()
+    assert not [w for w in dirty["warnings"] if "not provided" in w]
+
+    before = ungrouped_jobs(spark)
+    with job_group(spark, "marts") as job_ids:
+        star.refresh_marts(spark, dirty["wh"])
+        assert job_ids()
+    assert ungrouped_jobs(spark) - before == set()
+
+
+def test_silver_rerun_job_budget(spark, dirty):
+    # counts are observed on each entity's write, never re-read: a
+    # re-run fires at most 7 jobs per entity
+    before = ungrouped_jobs(spark)
+    with job_group(spark, "silver-rerun") as job_ids:
+        out = medallion.run_silver(spark, dirty["raw"], dirty["wh"], "2026-02-15")
+        jobs = job_ids()
+    assert 0 < len(jobs) <= 42, len(jobs)
+    assert ungrouped_jobs(spark) - before == set()
+    assert out == dirty["silver"], "replaying the same feed is a no-op"
+
+
+def test_missing_raw_file_fails_run_silver(spark, dirty, tmp_path):
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for spec in medallion.ENTITIES.values():
+        if spec.name != "vitals":
+            src = os.path.join(dirty["raw"], spec.file_name)
+            (raw / spec.file_name).write_bytes(open(src, "rb").read())
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        medallion.run_silver(spark, str(raw), str(tmp_path / "wh"), D1)
