@@ -13,18 +13,20 @@ This engine implements *full* SCD2 on vanilla Spark DataFrames:
 - null-safe change detection (``NOT (a <=> b)``);
 - composite business keys (billing's ``billing_id + service``,
   ``Silver Layer.py:230-234``);
-- deterministic pre-merge batch dedupe (latest-wins window) so
+- deterministic latest-wins batch dedupe inside the merge, so
   duplicate keys in a batch cannot fan out;
 - injected ``processing_date`` (the reference stamps wall-clock
   ``current_date()``, ``Silver Layer.py:74`` — untestable);
 - idempotent re-runs: replaying an identical batch is a no-op.
 
-Physical shape (designed for 100 TB state):
-one shuffle on the business key (the full-outer join), then each
-joined row emits 0-2 output rows via an ``explode(array(struct...))``
-— the classic staged-union MERGE idiom collapsed into a single join
-execution instead of 3 re-reads of the join output.  History rows
-(``is_current = false``) never enter the join: they are
+Physical shape (designed for 100 TB state): one shuffle on the
+business key.  The stamped batch and the current state rows are
+unioned and run through one key-partitioned window (one Exchange, one
+sort); the batch dedupe, the match and the change test all read that
+sorted partition, and every row leaves through one select with a
+per-row CASE — kept, expired, inserted or dropped.  No join, no
+``explode``, no second pass over the batch.  History rows
+(``is_current = false``) never enter the window: they are
 filter-partition-pruned and unioned back untouched, so merge cost
 scales with |current| + |batch|, not |history|.
 """
@@ -42,6 +44,11 @@ END = "end_date"
 CURRENT = "is_current"
 META_COLS = (EFFECTIVE, END, CURRENT)
 
+# merge-internal columns: union side (0 batch, 1 state), rank in the
+# key's window, prefix of the key's first-row values, "a state row
+# equals the winner"
+_SIDE, _RANK, _FIRST, _UNCHANGED = "__side", "__rank", "__first_", "__unchanged"
+
 
 @dataclass
 class Scd2Spec:
@@ -55,44 +62,51 @@ class Scd2Spec:
     order_by: list[str] = field(default_factory=list)
 
 
+def _stamp_cols(processing_date: str) -> dict[str, Column]:
+    return {
+        EFFECTIVE: F.lit(processing_date).cast("date"),
+        END: F.lit(None).cast("date"),
+        CURRENT: F.lit(True),
+    }
+
+
 def stamp(batch: DataFrame, processing_date: str) -> DataFrame:
     """Add SCD2 metadata columns (parity: ``Silver Layer.py:74-76``,
     with an injected date instead of ``current_date()``)."""
-    return (
-        batch.withColumn(EFFECTIVE, F.lit(processing_date).cast("date"))
-        .withColumn(END, F.lit(None).cast("date"))
-        .withColumn(CURRENT, F.lit(True))
-    )
+    return batch.withColumns(_stamp_cols(processing_date))
+
+
+def _q(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _latest_wins(columns: list[str], spec: Scd2Spec) -> list[str]:
+    """Latest-wins sort columns, each sorted desc nulls last:
+    ``order_by`` first, then every remaining non-key column as a
+    total tiebreak."""
+    non_key = [c for c in columns if c not in spec.keys]
+    return spec.order_by + [c for c in non_key if c not in spec.order_by]
 
 
 def dedupe_batch(batch: DataFrame, spec: Scd2Spec) -> DataFrame:
-    """Latest-wins dedupe by business key before merging.
+    """Latest-wins dedupe by business key (:func:`_latest_wins`).
 
     The reference merges raw batches and can hit Delta's
-    multiple-match error (SURVEY 7.3).  Ordering is deterministic:
-    ``order_by`` desc first, then every remaining column desc as a
-    total tiebreak.
+    multiple-match error (SURVEY 7.3).  :func:`merge` makes the same
+    choice inside its own window.
     """
-    non_key = [c for c in batch.columns if c not in spec.keys]
-    order_cols = [F.col(c).desc_nulls_last() for c in spec.order_by] + [
-        F.col(c).desc_nulls_last() for c in non_key if c not in spec.order_by
-    ]
+    order_cols = _latest_wins(batch.columns, spec)
     if not order_cols:
         return batch.dropDuplicates(spec.keys)
-    w = Window.partitionBy(*spec.keys).orderBy(*order_cols)
+    w = Window.partitionBy(*spec.keys).orderBy(
+        *[F.col(c).desc_nulls_last() for c in order_cols]
+    )
     return (
         batch.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def _changed_predicate(tracked: list[str]) -> Column:
-    """Null-safe any-attribute-changed across old/new aliases."""
-    pred = F.lit(False)
-    for c in tracked:
-        pred = pred | ~F.col(f"old.{c}").eqNullSafe(F.col(f"new.{c}"))
-    return pred
 
 
 def initial_load(batch: DataFrame, spec: Scd2Spec, processing_date: str) -> DataFrame:
@@ -113,9 +127,25 @@ def merge(
     Returns the complete new state (history + current).  ``state``
     must carry the metadata columns; ``batch`` must not.
 
+    The stamped batch (side 0) and the in-scope current rows (side 1)
+    are unioned and windowed by business key, batch rows first in
+    latest-wins order, so the key's first row is the batch winner
+    (the :func:`dedupe_batch` choice).  Every union row then emits at
+    most one row:
+
+    - the winner is inserted unless an in-scope current row of its
+      key already carries its tracked values (new or changed key);
+    - the other batch rows of the key are dropped (in-batch dupes);
+    - a state row is expired when its key has a winner with other
+      tracked values, and kept as it is otherwise.
+
+    Each state row is emitted exactly once, also from a state that
+    holds several current rows for one key: each of them that differs
+    from the key's winner is expired.
+
     ``partition_filter`` — optional predicate (Column or SQL string)
     bounding which CURRENT rows the batch can possibly match; rows
-    outside it bypass the join untouched, exactly like history rows.
+    outside it bypass the window untouched, exactly like history rows.
     When ``state`` is read from a partitioned source and the predicate
     references partition columns, it reaches the scan as a
     PartitionFilter (asserted by ``tests/test_plan_contracts.py``) —
@@ -129,13 +159,16 @@ def merge(
     evaluating NULL count as out-of-scope (the row bypasses, nothing
     is lost).
     """
-    entity_cols = [c for c in batch.columns]
+    entity_cols = list(batch.columns)
     tracked = spec.tracked or [c for c in entity_cols if c not in spec.keys]
-    out_cols = entity_cols + list(META_COLS)
+    entity_sql = [_q(c) for c in entity_cols]
+    out_cols = entity_sql + [_q(c) for c in META_COLS]
 
-    batch = dedupe_batch(batch, spec)
-    in_scope = F.col(CURRENT)
-    bypass = ~F.col(CURRENT)
+    # expressions are SQL text, one JVM call each: the same trees built
+    # with the Column API take a call per node, 1-3 ms apiece on the
+    # driver, which made up most of a small merge's build time
+    in_scope = F.expr(_q(CURRENT))
+    bypass = F.expr(f"NOT {_q(CURRENT)}")
     if partition_filter is not None:
         pf = (
             F.expr(partition_filter)
@@ -145,55 +178,51 @@ def merge(
         # NULL-evaluating predicates must land in exactly one branch:
         # coalesce to false -> the row bypasses instead of vanishing
         pf = F.coalesce(pf, F.lit(False))
-        in_scope = F.col(CURRENT) & pf
-        bypass = ~F.col(CURRENT) | ~pf
-    # presence flags, not key-null checks: business keys containing
-    # NULL would otherwise be misclassified as unmatched on both sides
-    current = (
-        state.filter(in_scope).withColumn("__present", F.lit(1)).alias("old")
+        in_scope = in_scope & pf
+        bypass = bypass | ~pf
+    history = state.filter(bypass).selectExpr(*out_cols)
+    rows = batch.withColumns(
+        {**_stamp_cols(processing_date), _SIDE: F.lit(0)}
+    ).unionByName(state.filter(in_scope).selectExpr(*out_cols, f"1 AS {_SIDE}"))
+
+    # Window partitioning groups NULL keys together, so a NULL
+    # business key is one logical entity (null-safe key matching)
+    order = ", ".join(
+        [_SIDE] + [f"{_q(c)} DESC NULLS LAST" for c in _latest_wins(entity_cols, spec)]
     )
-    history = state.filter(bypass)
-    new = (
-        stamp(batch, processing_date).withColumn("__present", F.lit(1)).alias("new")
+    over = f"OVER (PARTITION BY {', '.join(map(_q, spec.keys))} ORDER BY {order}"
+    # the key's first row, one column each: a struct built before the
+    # window would be shuffled as a second copy of the tracked values
+    first = {c: _q(_FIRST + c) for c in [_SIDE, *tracked]}
+    # null-safe: NULL -> NULL is no change, NULL <-> value is one
+    same_as_winner = " AND ".join(
+        f"{_q(c)} <=> {first[c]}" for c in tracked
+    ) or "true"
+    expire = F.expr(f"{_SIDE} = 1 AND {first[_SIDE]} = 0 AND NOT ({same_as_winner})")
+
+    rows = rows.withColumns(
+        {
+            _RANK: F.expr(f"row_number() {over})"),
+            **{_FIRST + c: F.expr(f"first({_q(c)}) {over})") for c in first},
+        }
+    ).withColumn(
+        _UNCHANGED,
+        F.expr(
+            f"max({_SIDE} = 1 AND {same_as_winner}) {over} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+        ),
     )
-
-    join_cond = F.lit(True)
-    for k in spec.keys:
-        join_cond = join_cond & F.col(f"old.{k}").eqNullSafe(F.col(f"new.{k}"))
-    joined = current.join(new, join_cond, "full_outer")
-
-    matched = F.col("old.__present").isNotNull() & F.col(
-        "new.__present"
-    ).isNotNull()
-    batch_only = F.col("old.__present").isNull()
-    has_change = _changed_predicate(tracked)
-
-    def row_from(side: str, **overrides: Column) -> Column:
-        fields = []
-        for c in out_cols:
-            col = overrides.get(c, F.col(f"{side}.{c}"))
-            fields.append(col.alias(c))
-        return F.struct(*fields)
-
-    old_row = row_from("old")
-    expired_old = row_from(
-        "old",
-        **{
-            END: F.lit(processing_date).cast("date"),
-            CURRENT: F.lit(False),
-        },
+    emitted = rows.filter(
+        f"{_SIDE} = 1 OR ({_RANK} = 1 AND NOT {_UNCHANGED})"
+    ).select(
+        *map(F.expr, entity_sql),
+        F.expr(_q(EFFECTIVE)),
+        F.when(expire, F.lit(processing_date).cast("date"))
+        .otherwise(F.expr(_q(END)))
+        .alias(END),
+        F.when(expire, F.lit(False)).otherwise(F.expr(_q(CURRENT))).alias(CURRENT),
     )
-    new_row = row_from("new")
-
-    emitted = (
-        F.when(batch_only, F.array(new_row))
-        .when(~matched, F.array(old_row))  # state-only key
-        .when(matched & has_change, F.array(expired_old, new_row))
-        .otherwise(F.array(old_row))  # matched, unchanged — idempotent
-    )
-
-    merged = joined.select(F.explode(emitted).alias("r")).select("r.*")
-    return merged.unionByName(history.select(*out_cols))
+    return emitted.unionByName(history)
 
 
 def pit_join(
@@ -277,20 +306,19 @@ def cdc_feed(state: DataFrame, keys: list[str], date: str) -> DataFrame:
 def validate(state: DataFrame, spec: Scd2Spec) -> dict[str, int]:
     """SCD2 invariant check (SURVEY 5.5): at most one current row per
     key; ``end_date >= effective_date``; expired rows have an end
-    date.  Returns violation counts (all zero when healthy)."""
-    multi_current = (
-        state.filter(F.col(CURRENT))
-        .groupBy(*spec.keys)
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
+    date.  Returns violation counts (all zero when healthy).
+
+    One job: a per-key aggregate counts each key's current rows and
+    bad rows, and a global aggregate over it sums them."""
+    per_key = state.groupBy(*spec.keys).agg(
+        F.count_if(F.col(CURRENT)).alias("current"),
+        F.count_if(F.col(END) < F.col(EFFECTIVE)).alias("bad_interval"),
+        F.count_if(~F.col(CURRENT) & F.col(END).isNull()).alias("open_expired"),
     )
-    bad_interval = state.filter(
-        F.col(END).isNotNull() & (F.col(END) < F.col(EFFECTIVE))
-    ).count()
-    open_expired = state.filter(~F.col(CURRENT) & F.col(END).isNull()).count()
-    return {
-        "multi_current_keys": multi_current,
-        "end_before_effective": bad_interval,
-        "expired_without_end": open_expired,
-    }
+    totals = per_key.agg(
+        F.count_if(F.col("current") > 1).alias("multi_current_keys"),
+        F.sum("bad_interval").alias("end_before_effective"),
+        F.sum("open_expired").alias("expired_without_end"),
+    ).first()
+    # sums over an empty state are NULL
+    return {k: int(v or 0) for k, v in totals.asDict().items()}

@@ -41,6 +41,7 @@ from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers
     CORRUPT_COL,
     read_csv,
     read_ndjson,
+    read_parquet,
 )
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.writers import (
     write_observed,
@@ -222,7 +223,7 @@ class SilverStore:
     def read(self, entity: str) -> DataFrame:
         if self.state_format == "delta":
             return delta_io.read_delta(self.spark, self.path(entity))
-        return self.spark.read.parquet(self.path(entity))
+        return read_parquet(self.spark, self.path(entity))
 
     #: epoch marker file inside the state directory — ``_``-prefixed
     #: so Spark's parquet reader ignores it like ``_SUCCESS``
@@ -317,14 +318,17 @@ def run_silver_entity(
     processing_date: str,
     money_mode: bool = False,
 ) -> dict[str, int]:
-    """Bronze -> cleanse -> dedupe -> SCD2 merge for one entity.
+    """Bronze -> cleanse -> SCD2 merge for one entity.
 
     ``money_mode=True`` casts the spec's declared money columns to
     DECIMAL(12,2) after the cleanse chain (SURVEY 7.0: exact,
     associative currency arithmetic instead of the reference's
     doubles; doubles remain the default for reference parity).
 
-    Mirrors the reference's per-entity flow (SURVEY 3.2).  Every
+    Mirrors the reference's per-entity flow (SURVEY 3.2).  There is no
+    separate dedupe step: the reference drops exact duplicate rows
+    (``Silver Layer.py:175``), and the SCD2 load and merge already keep
+    one latest-wins row per business key, which covers them.  Every
     returned count is observed (``DataFrame.observe``) on the one job
     that writes the new state: ``rows``/``current`` on the written
     frame, ``quarantined`` on the bronze scan above the
@@ -343,7 +347,6 @@ def run_silver_entity(
     if money_mode:
         for c in spec.money_cols:
             batch = batch.withColumn(c, F.col(c).cast("decimal(12,2)"))
-    batch = batch.dropDuplicates()  # exact dupe rows (Silver Layer.py:175)
     batch = cleanse.require_keys(batch, spec.keys)
 
     counts = store.apply_batch(spec, batch, processing_date)

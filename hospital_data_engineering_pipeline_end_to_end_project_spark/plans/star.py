@@ -31,6 +31,7 @@ from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.paral
 )
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.scd2 import CURRENT
 from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.medallion import SilverStore
+from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import read_parquet
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.writers import (
     write_observed,
     write_partitioned,
@@ -258,8 +259,8 @@ def refresh_marts(spark: SparkSession, warehouse: str) -> dict[str, int]:
     are months x small-dimension aggregates — tiny relative to facts —
     so a full rebuild is the right trade at any scale."""
     gold = os.path.join(warehouse, "gold")
-    fb = spark.read.parquet(os.path.join(gold, "fact_billing"))
-    fa = spark.read.parquet(os.path.join(gold, "fact_admissions"))
+    fb = read_parquet(spark, os.path.join(gold, "fact_billing"))
+    fa = read_parquet(spark, os.path.join(gold, "fact_admissions"))
     return _write_tables(
         spark,
         gold,

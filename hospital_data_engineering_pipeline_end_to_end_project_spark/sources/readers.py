@@ -9,11 +9,14 @@ coercing (SURVEY.md section 1.4).
 
 Parquet test tables (``/root/testdata/sf*/``) are read with
 ``spark.read.parquet`` — schema travels with the file, filter pushdown
-and column pruning reach the scan for free.
+and column pruning reach the scan for free.  Tables this engine wrote
+itself are read with :func:`read_parquet`, which takes the schema from
+a file footer on the driver instead of a schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,6 +58,63 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+#: footer key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    """First parquet data file under a local table directory, in
+    sorted order, descending into ``col=value`` partition dirs and
+    skipping ``_``/``.``-prefixed entries as Spark's listing does."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
+def _footer_schema(path: str) -> T.StructType | None:
+    """The Spark schema stored in the first data file's footer, read
+    driver-side with pyarrow; ``None`` when there is no local data
+    file, no pyarrow or no Spark schema in the footer."""
+    if not os.path.isdir(path):
+        return None
+    try:
+        import pyarrow.parquet as pq
+    except ImportError:
+        return None
+    first = _first_data_file(path)
+    if first is None:
+        return None
+    try:
+        meta = pq.read_metadata(first).metadata or {}
+    except (OSError, ValueError):
+        return None
+    if SPARK_SCHEMA_KEY not in meta:
+        return None
+    return T.StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without Spark's schema-inference
+    job.
+
+    Without a schema, Spark reads the schema with a one-task job over
+    the first data file before the DataFrame exists.  Spark's own
+    writer stores the same schema in every file's footer, so it is
+    read here on the driver and handed over with ``.schema(...)``.
+    Partition columns are not in the footer; Spark still discovers
+    them from the directory names, with the same types as before.
+    Falls back to plain ``spark.read.parquet`` when the path is not a
+    local directory, pyarrow is missing, or the footer has no Spark
+    schema (a file another writer produced)."""
+    schema = _footer_schema(path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def ts_us_col(df: DataFrame, ts_col: str = "ts") -> "F.Column":

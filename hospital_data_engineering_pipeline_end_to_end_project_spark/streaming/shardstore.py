@@ -39,11 +39,16 @@ three lifecycle obligations this module centralizes:
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import (
+    run_concurrently,
+)
 
 #: recognized shard-dir prefixes: per-batch shards under either naming
 #: convention, and the compacted-merge dir
@@ -166,15 +171,18 @@ def build_shards_concurrently(writer, batches) -> None:
     a cluster).  Live streaming ingest keeps the sequential
     ``foreachBatch`` path: micro-batches ARRIVE one at a time there,
     so there is nothing to overlap.  Exceptions from any job
-    propagate (the build must not half-succeed silently)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    propagate (the build must not half-succeed silently).  The jobs go
+    through :func:`run_concurrently` with the session of the first
+    batch, so every shard-build job carries the caller's job group."""
     if not batches:
         return
-    with ThreadPoolExecutor(max_workers=len(batches)) as ex:
-        futs = [ex.submit(writer, df, bid) for bid, df in batches]
-        for f in futs:
-            f.result()
+    run_concurrently(
+        batches[0][1].sparkSession,
+        {
+            str(i): functools.partial(writer, df, bid)
+            for i, (bid, df) in enumerate(batches)
+        },
+    )
 
 
 def compact_shards(

@@ -213,6 +213,27 @@ def test_scd2_partition_filter_prunes_state_scan(spark, tmp_path):
     assert pf_clauses, f"region never reached a PartitionFilter:\n{plan}"
 
 
+def test_scd2_merge_is_one_exchange(spark, tmp_path):
+    # batch dedupe, key match and change test share one key-partitioned
+    # window over the union of batch and current state: one shuffle
+    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import scd2
+
+    spec = scd2.Scd2Spec(keys=["id"], order_by=["val"])
+    init = spark.createDataFrame(
+        [(1, "EUROPE", "a"), (2, "ASIA", "b")], "id long, region string, val string"
+    )
+    path = str(tmp_path / "state")
+    scd2.initial_load(init, spec, "2024-01-01").write.parquet(path)
+    batch = spark.createDataFrame(
+        [(1, "EUROPE", "a2"), (1, "EUROPE", "a3"), (3, "ASIA", "c")],
+        "id long, region string, val string",
+    )
+    merged = scd2.merge(spark.read.parquet(path), batch, spec, "2024-02-01")
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan and "Generate" not in plan, plan
+
+
 def test_boilerplate_stats_no_hot_key_window(spark):
     """q95's document frequency must come from groupBy + join-back —
     a window PARTITION BY shingle would put the hottest key in the

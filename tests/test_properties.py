@@ -4,6 +4,10 @@ arbitrary batch sequences."""
 
 from __future__ import annotations
 
+import datetime as dt
+import functools
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -94,6 +98,163 @@ def test_scd2_invariants_under_random_batches(spark, batches):
         r["k"] for r in state.filter(F.col("is_current")).collect()
     }
     assert current_keys == seen_keys
+
+
+# -- SCD2 merge vs a pure-Python model ---------------------------------
+
+_MERGE_ROW = "k1 int, k2 string, v int, w string"
+_STATE_ROW = _MERGE_ROW + ", effective_date date, end_date date, is_current boolean"
+_STATE_COLS = ("k1", "k2", "v", "w", "effective_date", "end_date", "is_current")
+_D0 = dt.date(2026, 1, 1)
+
+
+def _nulls_last_desc(a, b):
+    if a == b:
+        return 0
+    if a is None:
+        return 1
+    if b is None:
+        return -1
+    return -1 if a > b else 1
+
+
+def _model_merge(state, batch, keys, tracked, order_by, date, in_filter):
+    """Pure-Python SCD2 merge over dict rows: latest-wins winner per
+    key; a state row is expired when the winner's tracked values
+    differ from its own; the winner is inserted unless some in-scope
+    current row already carries them."""
+    non_key = [c for c in _STATE_COLS[:4] if c not in keys]
+    order = order_by + [c for c in non_key if c not in order_by]
+
+    def cmp(a, b):
+        for c in order:
+            r = _nulls_last_desc(a[c], b[c])
+            if r:
+                return r
+        return 0
+
+    def key(r):
+        return tuple(r[k] for k in keys)
+
+    def same(a, b):
+        return all(a[c] == b[c] for c in tracked)
+
+    def scoped(r):
+        return r["is_current"] and in_filter(r)
+
+    winners = {}
+    for r in sorted(batch, key=functools.cmp_to_key(cmp)):
+        winners.setdefault(key(r), r)
+    out = [r for r in state if not scoped(r)]
+    for r in state:
+        if scoped(r):
+            w = winners.get(key(r))
+            out.append(
+                r if w is None or same(r, w)
+                else {**r, "end_date": date, "is_current": False}
+            )
+    for k, w in winners.items():
+        if not any(scoped(r) and key(r) == k and same(r, w) for r in state):
+            out.append(
+                {**w, "effective_date": date, "end_date": None, "is_current": True}
+            )
+    return out
+
+
+def _rows_multiset(rows):
+    return sorted(repr(tuple(r[c] for c in _STATE_COLS)) for r in rows)
+
+
+_merge_row = st.fixed_dictionaries(
+    {
+        "k1": st.sampled_from([None, 0, 1, 2]),
+        "k2": st.sampled_from([None, "a", "b"]),
+        "v": st.sampled_from([None, 0, 1, 2]),
+        "w": st.sampled_from([None, "a", "b"]),
+    }
+)
+_state_row = st.builds(
+    lambda r, eff, span, current: {
+        **r,
+        "effective_date": _D0 + dt.timedelta(days=eff),
+        "end_date": None if current else _D0 + dt.timedelta(days=eff + span),
+        "is_current": current,
+    },
+    _merge_row,
+    st.integers(0, 20),
+    st.integers(0, 5),
+    st.booleans(),
+)
+_merge_case = st.fixed_dictionaries(
+    {
+        "keys": st.sampled_from([["k1"], ["k1", "k2"]]),
+        "tracked": st.sampled_from([None, ["v"]]),
+        "order_by": st.sampled_from([[], ["v"]]),
+        "filtered": st.booleans(),
+        # several current rows per key happen often in this key space:
+        # states that break the one-current-row invariant are covered
+        "state": st.lists(_state_row, max_size=10),
+        "batch": st.lists(_merge_row, max_size=8),
+    }
+)
+
+
+def _check_merge_against_model(spark, case):
+    keys, order_by = case["keys"], case["order_by"]
+    tracked = case["tracked"] or [c for c in _STATE_COLS[:4] if c not in keys]
+    spec = scd2.Scd2Spec(keys=keys, tracked=case["tracked"], order_by=order_by)
+    pf, in_filter = None, lambda r: True
+    if case["filtered"]:
+        # NULL w evaluates the predicate NULL: such rows bypass
+        pf, in_filter = F.col("w") == "a", lambda r: r["w"] == "a"
+    # one slice each: a tiny frame over the default parallelism
+    # costs a Python worker per empty task
+    sc = spark.sparkContext
+    state_df = spark.createDataFrame(
+        sc.parallelize([tuple(r[c] for c in _STATE_COLS) for r in case["state"]], 1),
+        _STATE_ROW,
+    )
+    batch_df = spark.createDataFrame(
+        sc.parallelize([tuple(r[c] for c in _STATE_COLS[:4]) for r in case["batch"]], 1),
+        _MERGE_ROW,
+    )
+    date1, date2 = dt.date(2026, 3, 1), dt.date(2026, 4, 1)
+
+    merged = scd2.merge(state_df, batch_df, spec, str(date1), partition_filter=pf)
+    # replay the same batch; both merges come back in one job
+    replayed = scd2.merge(merged, batch_df, spec, str(date2), partition_filter=pf)
+    both = merged.withColumn("__pass", F.lit(1)).unionByName(
+        replayed.withColumn("__pass", F.lit(2))
+    )
+    got, got2 = [], []
+    for r in both.collect():
+        (got if r["__pass"] == 1 else got2).append(r.asDict())
+    want = _model_merge(
+        case["state"], case["batch"], keys, tracked, order_by, date1, in_filter
+    )
+    assert _rows_multiset(got) == _rows_multiset(want)
+    want2 = _model_merge(got, case["batch"], keys, tracked, order_by, date2, in_filter)
+    assert _rows_multiset(got2) == _rows_multiset(want2)
+    if pf is None:
+        # with every state row in scope a replay is a no-op
+        assert _rows_multiset(got2) == _rows_multiset(got)
+
+
+@SLOW
+@given(_merge_case)
+def test_scd2_merge_matches_python_model(spark, case):
+    _check_merge_against_model(spark, case)
+
+
+@pytest.mark.slow
+@settings(
+    max_examples=80,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_merge_case)
+def test_scd2_merge_matches_python_model_sweep(spark, case):
+    _check_merge_against_model(spark, case)
 
 
 # -- connected components vs union-find oracle -------------------------

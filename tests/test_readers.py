@@ -10,12 +10,15 @@ from __future__ import annotations
 
 import textwrap
 
+import pytest
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import (
     CORRUPT_COL,
     read_ndjson,
+    read_parquet,
 )
 
 SCHEMA = T.StructType(
@@ -110,3 +113,66 @@ def test_register_views_sql_surface(spark):
     # events view exposes the converted timestamp columns
     cols = set(spark.table("events").columns)
     assert {"ts", "ts_sec", "ts_utc"} <= cols
+
+
+# -- parquet without the schema-inference job ---------------------------
+
+def _jobs_fired(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it fired."""
+    sc = spark.sparkContext
+    group = f"read-parquet-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def _parquet_table(spark, path, layout):
+    df = spark.range(40).selectExpr(
+        "id",
+        "CAST(id * 1.25 AS DECIMAL(12,2)) AS amount",
+        "IF(id % 7 = 0, NULL, CAST(id AS STRING)) AS label",
+        "DATE_ADD(DATE'2025-01-01', CAST(id * 9 AS INT)) AS day",
+    )
+    if layout == "flat":
+        df.drop("amount").write.parquet(path)
+    elif layout == "decimal":
+        df.select("id", "amount").write.parquet(path)
+    else:
+        df.selectExpr("*", "YEAR(day) AS year", "MONTH(day) AS month").write.partitionBy(
+            "year", "month"
+        ).parquet(path)
+
+
+@pytest.mark.parametrize("layout", ["flat", "year_month", "decimal"])
+def test_read_parquet_skips_schema_inference(spark, tmp_path, layout):
+    path = str(tmp_path / layout)
+    _parquet_table(spark, path, layout)
+    df, jobs = _jobs_fired(spark, lambda: read_parquet(spark, path))
+    assert jobs == 0, "the schema comes from the footer, not from a job"
+    plain, plain_jobs = _jobs_fired(spark, lambda: spark.read.parquet(path))
+    assert plain_jobs == 1, "spark.read.parquet infers the schema with one job"
+    assert df.schema == plain.schema
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, plain.collect()))
+
+
+def test_read_parquet_falls_back_without_spark_footer(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "foreign"
+    path.mkdir()
+    pq.write_table(
+        pa.table({"id": [1, 2, None], "name": ["a", None, "c"]}),
+        str(path / "part-0.parquet"),
+    )
+    df, jobs = _jobs_fired(spark, lambda: read_parquet(spark, str(path)))
+    assert jobs == 1, "no Spark schema in the footer: Spark infers it"
+    plain = spark.read.parquet(str(path))
+    assert df.schema == plain.schema
+    assert sorted(map(repr, df.collect())) == sorted(map(repr, plain.collect()))

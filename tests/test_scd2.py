@@ -239,3 +239,38 @@ def test_partition_filter_null_predicate_rows_bypass(spark):
     )
     assert len(rows["p1"]) == 2
     assert scd2.validate(out, spec)["multi_current_keys"] == 0
+
+
+def test_validate_counts_each_violation(spark):
+    # one aggregate job, same dict: NULL keys group together, and a
+    # key with three current rows counts once
+    state = spark.createDataFrame(
+        [
+            (1, "a", "2026-01-01", None, True),
+            (1, "b", "2026-01-02", None, True),
+            (1, "c", "2026-01-03", None, True),
+            (None, "x", "2026-01-01", None, True),
+            (None, "y", "2026-01-01", None, True),
+            (2, "d", "2026-02-01", "2026-01-01", False),  # ends before it starts
+            (3, "e", "2026-01-01", None, False),  # expired, no end
+            (3, "f", "2026-01-05", "2026-01-04", True),
+            (4, "g", "2026-01-01", "2026-01-09", False),
+        ],
+        "k int, attr string, effective_date string, end_date string, is_current boolean",
+    ).selectExpr(
+        "k", "attr",
+        "CAST(effective_date AS DATE) AS effective_date",
+        "CAST(end_date AS DATE) AS end_date",
+        "is_current",
+    )
+    assert scd2.validate(state, scd2.Scd2Spec(keys=["k"])) == {
+        "multi_current_keys": 2,
+        "end_before_effective": 2,
+        "expired_without_end": 1,
+    }
+    empty = state.limit(0)
+    assert scd2.validate(empty, scd2.Scd2Spec(keys=["k"])) == {
+        "multi_current_keys": 0,
+        "end_before_effective": 0,
+        "expired_without_end": 0,
+    }

@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import shardstore
@@ -74,3 +76,40 @@ def test_compact_folds_active_only_and_sizes_output(spark, tmp_path):
     assert stats["dirs_after"] == 1
     df = shardstore.read_shards(spark, root)
     assert sorted(r["v"] for r in df.collect()) == [0, 1, 2, 3]
+
+
+def test_concurrent_shard_build_carries_job_group(spark, tmp_path):
+    # every shard-build job is labelled with the caller's job group,
+    # and a failing writer's exception reaches the caller
+    root = str(tmp_path / "store")
+    sc = spark.sparkContext
+
+    def writer(df, bid):
+        df.write.mode("overwrite").parquet(os.path.join(root, f"batch={bid}"))
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("shard-build", "shard-build")
+    try:
+        shardstore.build_shards_concurrently(
+            writer, [(b, spark.range(b * 10, b * 10 + 5)) for b in range(3)]
+        )
+
+        def failing(df, bid):
+            if bid == 1:
+                raise ValueError("shard 1 failed")
+            writer(df, bid)
+
+        with pytest.raises(ValueError, match="shard 1 failed"):
+            shardstore.build_shards_concurrently(
+                failing, [(b, spark.range(5)) for b in range(3)]
+            )
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        grouped = set(sc.statusTracker().getJobIdsForGroup("shard-build"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(grouped) >= 3
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    assert [n for _, n, _ in shardstore.committed_shard_dirs(root)] == [0, 1, 2]
