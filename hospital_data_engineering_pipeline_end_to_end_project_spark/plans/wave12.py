@@ -63,9 +63,6 @@ recomputing queries' rows.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,7 +75,7 @@ from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.wave11 im
     _Q138_W,
     TOKS_SQL,
 )
-from hospital_data_engineering_pipeline_end_to_end_project_spark.scratch import scratch_path
+from hospital_data_engineering_pipeline_end_to_end_project_spark.scratch import fresh_store
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import (
     load_table,
     parquet_row_count,
@@ -106,14 +103,6 @@ def _split(spark: SparkSession, sf_dir: str):
     return corpus, batch
 
 
-def _fresh_store(tag: str, sf_dir: str) -> str:
-    """Per-(query, sf) scratch store, wiped before each build so a
-    re-invocation never reads a stale compaction of a prior run."""
-    root = scratch_path(tag, os.path.basename(os.path.normpath(sf_dir)), "idx")
-    shutil.rmtree(root, ignore_errors=True)
-    return root
-
-
 # ---------------------------------------------------------------------------
 # q144 — incremental LSH near-dup join served from the band index
 # ---------------------------------------------------------------------------
@@ -123,17 +112,11 @@ _Q144_T = (7, 10)
 
 def q144_lsh_index_served_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, batch = _split(spark, sf_dir)
-    root = _fresh_store("q144", sf_dir)
+    root = fresh_store("q144", sf_dir)
     writer = lsh_index.make_lsh_batch_writer(root)
     # historical backfill: the shard jobs are independent, so they run
     # as CONCURRENT Spark jobs (per-shard commit contract unchanged)
-    shardstore.build_shards_concurrently(
-        writer,
-        [
-            (b, corpus.filter(F.col("doc_id") % _N_INDEX_BATCHES == b))
-            for b in range(_N_INDEX_BATCHES)
-        ],
-    )
+    shardstore.backfill_by_mod(writer, corpus, "doc_id", _N_INDEX_BATCHES)
     # full lifecycle on the gated path: the probe reads the COMPACTED
     # store, not the raw batch shards
     lsh_index.compact_lsh_shards(spark, root)
@@ -203,20 +186,14 @@ _Q145_MIN_SPAN = _Q138_W + _Q138_K - 1  # the winnowing guarantee bound
 
 def q145_span_index_served_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, batch = _split(spark, sf_dir)
-    root = _fresh_store("q145", sf_dir)
+    root = fresh_store("q145", sf_dir)
     writer = span_index.make_span_batch_writer(root, k=_Q138_K, w=_Q138_W)
     # r13: the 5 backfill shard jobs ran SEQUENTIALLY and dominated
     # the headline (build 10.8 s of 17.4 s attributed at sf0.1, each
     # 1/5-corpus winnow underfilling the 32 cores); they are
     # independent jobs, so submit them concurrently — same per-shard
     # commits, same store, row-identical probe
-    shardstore.build_shards_concurrently(
-        writer,
-        [
-            (b, corpus.filter(F.col("doc_id") % _N_INDEX_BATCHES == b))
-            for b in range(_N_INDEX_BATCHES)
-        ],
-    )
+    shardstore.backfill_by_mod(writer, corpus, "doc_id", _N_INDEX_BATCHES)
     span_index.compact_span_shards(spark, root)
     return span_index.incremental_spans_against_index(
         spark, root, corpus, batch, "doc_id", "text",
@@ -535,24 +512,9 @@ def q149_dhash_index_served_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import dhash_index
 
     corpus, batch = _split(spark, sf_dir)
-    root = _fresh_store("q149", sf_dir)
-    writer = dhash_index.make_dhash_batch_writer(root)
-    shardstore.build_shards_concurrently(
-        writer,
-        [
-            (
-                b,
-                multimodal.synthesize_minhash_pgm(
-                    fan_out(
-                        corpus.filter(F.col("doc_id") % _N_INDEX_BATCHES == b)
-                    ),
-                    "doc_id",
-                    "text",
-                ),
-            )
-            for b in range(_N_INDEX_BATCHES)
-        ],
-    )
+    root = fresh_store("q149", sf_dir)
+    writer = dhash_index.make_dhash_doc_batch_writer(root)
+    shardstore.backfill_by_mod(writer, corpus, "doc_id", _N_INDEX_BATCHES)
     dhash_index.compact_dhash_shards(spark, root)
     batch_media = multimodal.synthesize_minhash_pgm(
         fan_out(batch), "doc_id", "text"

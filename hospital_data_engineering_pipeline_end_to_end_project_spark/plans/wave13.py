@@ -51,9 +51,6 @@ bit-replayable path.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,7 +61,7 @@ from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.llm_ops i
     _q48_ranked,
     Q48_ITERS,
 )
-from hospital_data_engineering_pipeline_end_to_end_project_spark.scratch import scratch_path
+from hospital_data_engineering_pipeline_end_to_end_project_spark.scratch import fresh_store
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import load_table
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import ann_index, shardstore
 
@@ -84,29 +81,17 @@ _Q152_NPROBE = 2
 _Q152_K = 5
 
 
-def _fresh_store(tag: str, sf_dir: str) -> str:
-    root = scratch_path(tag, os.path.basename(os.path.normpath(sf_dir)), "idx")
-    shutil.rmtree(root, ignore_errors=True)
-    return root
-
-
 def q152_ivf_index_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     corpus = e.filter(F.col("vec_id") % _BATCH_MOD != 0)
     batch = e.filter(F.col("vec_id") % _BATCH_MOD == 0)
-    root = _fresh_store("q152", sf_dir)
+    root = fresh_store("q152", sf_dir)
     cents = similarity.build_ivf_centroids(
         corpus, "embedding", "vec_id", _Q152_CLUSTERS
     )
     ann_index.init_ivf_store(root, cents)
     writer = ann_index.make_ivf_batch_writer(root)
-    shardstore.build_shards_concurrently(
-        writer,
-        [
-            (b, corpus.filter(F.col("vec_id") % _N_INDEX_BATCHES == b))
-            for b in range(_N_INDEX_BATCHES)
-        ],
-    )
+    shardstore.backfill_by_mod(writer, corpus, "vec_id", _N_INDEX_BATCHES)
     ann_index.compact_ivf_shards(spark, root)
     out = ann_index.ivf_topk_against_index(
         spark, root, batch, k=_Q152_K, nprobe=_Q152_NPROBE
@@ -507,15 +492,9 @@ def q159_bpe_from_vocab_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % _BATCH_MOD != 0)
     batch = d.filter(F.col("doc_id") % _BATCH_MOD == 0)
-    root = _fresh_store("q159", sf_dir)
+    root = fresh_store("q159", sf_dir)
     writer = vocab_index.make_vocab_batch_writer(root)
-    shardstore.build_shards_concurrently(
-        writer,
-        [
-            (b, corpus.filter(F.col("doc_id") % 3 == b))
-            for b in range(3)
-        ],
-    )
+    shardstore.backfill_by_mod(writer, corpus, "doc_id", 3)
     writer(batch, 3)
     vocab_index.compact_vocab_shards(spark, root)
     return vocab_index.bpe_merges_from_index(
@@ -549,7 +528,7 @@ def q163_dq_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import monitor
 
     o = load_table(spark, sf_dir, "orders")
-    root = _fresh_store("q163", sf_dir)
+    root = fresh_store("q163", sf_dir)
 
     def report(batch_df: DataFrame) -> DataFrame:
         return profiling.profile_report(
@@ -563,13 +542,7 @@ def q163_dq_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     writer = monitor.make_dq_batch_writer(root, report)
-    shardstore.build_shards_concurrently(
-        writer,
-        [
-            (b, o.filter(F.col("o_orderkey") % _Q163_BATCHES == b))
-            for b in range(_Q163_BATCHES)
-        ],
-    )
+    shardstore.backfill_by_mod(writer, o, "o_orderkey", _Q163_BATCHES)
     return monitor.read_dq_history(spark, root)
 
 

@@ -356,7 +356,7 @@ ORACLES["q171_dormant_balances"] = Q171_SQL
 # ---------------------------------------------------------------------------
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import profiling  # noqa: E402
-from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.wave13 import _fresh_store  # noqa: E402
+from hospital_data_engineering_pipeline_end_to_end_project_spark.scratch import fresh_store  # noqa: E402
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import monitor, shardstore  # noqa: E402
 
 _Q172_BATCHES = 6
@@ -393,7 +393,7 @@ def q172_dq_anomaly_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitor store (streaming/monitor.py), then the integer median/MAD
     gate — exactly one metric-batch row should flag."""
     o = load_table(spark, sf_dir, "orders")
-    root = _fresh_store("q172", sf_dir)
+    root = fresh_store("q172", sf_dir)
     writer = monitor.make_dq_batch_writer(root, _q172_report)
     shardstore.build_shards_concurrently(
         writer,
@@ -489,15 +489,9 @@ def q173_audio_segments_from_index(
     feature store: per-batch decode+fingerprint shards, compaction,
     then the diagonal-run match stage over stored postings only."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = _fresh_store("q173", sf_dir)
+    root = fresh_store("q173", sf_dir)
     writer = audio_index.make_audio_doc_batch_writer(root, k=_Q147_K)
-    shardstore.build_shards_concurrently(
-        writer,
-        [
-            (b, d.filter(F.col("doc_id") % _Q173_BATCHES == b))
-            for b in range(_Q173_BATCHES)
-        ],
-    )
+    shardstore.backfill_by_mod(writer, d, "doc_id", _Q173_BATCHES)
     audio_index.compact_audio_shards(spark, root)
     return audio_index.segments_from_index(
         spark, root, k=_Q147_K, min_frames=_Q147_MIN, max_df=_MEDIA_MAX_DF
@@ -540,12 +534,9 @@ def q174_audio_probe_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = d.filter(F.col("doc_id") % _Q174_MOD != 0)
     batch = d.filter(F.col("doc_id") % _Q174_MOD == 0)
-    root = _fresh_store("q174", sf_dir)
+    root = fresh_store("q174", sf_dir)
     writer = audio_index.make_audio_doc_batch_writer(root, k=_Q147_K)
-    shardstore.build_shards_concurrently(
-        writer,
-        [(b, corpus.filter(F.col("doc_id") % 2 == b)) for b in range(2)],
-    )
+    shardstore.backfill_by_mod(writer, corpus, "doc_id", 2)
     media = multimodal.synthesize_speech_wav(fan_out(batch), "doc_id", "text")
     return audio_index.incremental_segments_against_index(
         spark,

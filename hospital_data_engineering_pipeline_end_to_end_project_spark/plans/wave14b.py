@@ -621,7 +621,7 @@ ORACLES["q183_cdc_chunk_dedup"] = Q183_SQL
 # chunk-hash store (streaming/chunk_index.py)
 # ---------------------------------------------------------------------------
 
-from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.wave13 import _fresh_store  # noqa: E402
+from hospital_data_engineering_pipeline_end_to_end_project_spark.scratch import fresh_store  # noqa: E402
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import chunk_index, shardstore  # noqa: E402
 
 _Q184_BATCHES = 3
@@ -635,17 +635,11 @@ def q184_cdc_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Row-identical to the recomputing form by construction, so the
     oracle is q183's verbatim."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = _fresh_store("q184", sf_dir)
+    root = fresh_store("q184", sf_dir)
     writer = chunk_index.make_chunk_batch_writer(
         root, w=Q183_W, boundary_mod=Q183_MOD
     )
-    shardstore.build_shards_concurrently(
-        writer,
-        [
-            (b, d.filter(F.col("doc_id") % _Q184_BATCHES == b))
-            for b in range(_Q184_BATCHES)
-        ],
-    )
+    shardstore.backfill_by_mod(writer, d, "doc_id", _Q184_BATCHES)
     chunk_index.compact_chunk_shards(spark, root)
     return chunk_index.dup_chunks_from_index(spark, root)
 
@@ -664,14 +658,11 @@ def q185_cdc_probe_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = d.filter(F.col("doc_id") % _Q185_MOD != 0)
     batch = d.filter(F.col("doc_id") % _Q185_MOD == 0)
-    root = _fresh_store("q185", sf_dir)
+    root = fresh_store("q185", sf_dir)
     writer = chunk_index.make_chunk_batch_writer(
         root, w=Q183_W, boundary_mod=Q183_MOD
     )
-    shardstore.build_shards_concurrently(
-        writer,
-        [(b, corpus.filter(F.col("doc_id") % 2 == b)) for b in range(2)],
-    )
+    shardstore.backfill_by_mod(writer, corpus, "doc_id", 2)
     return chunk_index.incremental_dup_chunks_against_index(
         spark, root, batch, w=Q183_W, boundary_mod=Q183_MOD
     )

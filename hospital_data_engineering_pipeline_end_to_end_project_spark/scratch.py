@@ -31,6 +31,14 @@ def scratch_path(*parts: str) -> str:
     return p
 
 
+def fresh_store(tag: str, sf_dir: str) -> str:
+    """Per-(query, sf) scratch store, wiped before each build so a
+    re-invocation never reads a stale compaction of a prior run."""
+    root = scratch_path(tag, os.path.basename(os.path.normpath(sf_dir)), "idx")
+    shutil.rmtree(root, ignore_errors=True)
+    return root
+
+
 def _pid_alive(pid: int) -> bool:
     try:
         os.kill(pid, 0)

@@ -22,7 +22,8 @@ everything ingested so far:
 Lifecycle beyond the frozen-quantizer steady state:
 
 - **Committed-only, subsumption-ruled reads** and **shard
-  compaction** come from ``streaming/shardstore.py`` — reads skip
+  compaction** come from the ``shardstore.ShardIndex`` spec
+  (:data:`IVF`), applied under the active epoch root — reads skip
   partially-written dirs, and :func:`compact_ivf_shards` folds the
   per-batch postings into one ``compact_upto=N`` dir (plain union —
   postings are rows, not summaries) so the probe's list+open cost
@@ -112,6 +113,28 @@ def _postings_root(out_dir: str) -> str:
     return os.path.join(out_dir, f"epoch={meta[1]}")
 
 
+def _ivf_postings(
+    batch_df: DataFrame,
+    batch_id: int,
+    centroids: list[list[float]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Assign THIS batch's vectors to the frozen ``centroids`` — one
+    argmin pass (K x dim flops per row against broadcast literals, no
+    shuffle): ``(id, vec, cluster, batch_id)`` posting rows."""
+    from pyspark.sql import functions as F
+
+    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.similarity import assign_ivf_cluster
+
+    return assign_ivf_cluster(
+        batch_df.select(id_col, vec_col), centroids, vec_col=vec_col
+    ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+
+
+IVF = shardstore.ShardIndex("IVF posting", _ivf_postings)
+
+
 def make_ivf_batch_writer(
     out_dir: str,
     centroids: list[list[float]] | None = None,
@@ -127,29 +150,27 @@ def make_ivf_batch_writer(
     ``(centroids, epoch)`` from the store's one metadata file — a
     per-batch O(K x dim) driver read — and writes under ``epoch=E/``,
     so a :func:`retrain_ivf_index` swap takes effect on the next batch
-    with no writer restart."""
-    from pyspark.sql import functions as F
-
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.similarity import assign_ivf_cluster
+    with no writer restart.  Explicit centroids on an epoch-managed
+    store raise: the flat ``batch=N`` shards they would write sit
+    outside ``epoch=E/``, where no reader or compaction looks."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if centroids is None:
-            meta = read_centroids(out_dir)
-            if meta is None:
+        meta = read_centroids(out_dir)
+        if centroids is not None:
+            if meta is not None:
                 raise ValueError(
-                    f"IVF store {out_dir!r} has no {CENTROIDS_FILE}; "
-                    "call init_ivf_store first or pass centroids explicitly"
+                    f"IVF store {out_dir!r} is epoch-managed ({CENTROIDS_FILE} "
+                    "exists); pass centroids=None to write its active epoch"
                 )
-            cents, epoch = meta
-            root = os.path.join(out_dir, f"epoch={epoch}")
-        else:
             cents, root = centroids, out_dir
-        assigned = assign_ivf_cluster(
-            batch_df.select(id_col, vec_col), cents, vec_col=vec_col
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        shardstore.write_shard(
-            assigned, os.path.join(root, f"batch={batch_id}")
-        )
+        elif meta is None:
+            raise ValueError(
+                f"IVF store {out_dir!r} has no {CENTROIDS_FILE}; "
+                "call init_ivf_store first or pass centroids explicitly"
+            )
+        else:
+            cents, root = meta[0], os.path.join(out_dir, f"epoch={meta[1]}")
+        IVF.writer(root, cents, id_col, vec_col)(batch_df, batch_id)
 
     return handle
 
@@ -162,38 +183,25 @@ def ivf_index_sink(
     vec_col: str = "embedding",
     checkpoint_dir: str | None = None,
 ):
-    """Attach the per-batch IVF assignment writer to a vector stream —
-    continuous index maintenance: each micro-batch costs one argmin
-    pass over the batch (K x dim flops per row against broadcast
-    literals, no shuffle) plus a batch-sized shard write."""
-    writer = stream.writeStream.foreachBatch(
-        make_ivf_batch_writer(out_dir, centroids, id_col=id_col, vec_col=vec_col)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    """Attach :func:`make_ivf_batch_writer` to a vector stream."""
+    return shardstore.foreach_batch_sink(
+        stream, make_ivf_batch_writer(out_dir, centroids, id_col, vec_col),
+        checkpoint_dir,
+    )
 
 
 def read_ivf_index(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The IVF index of EVERYTHING ingested so far: union of the
-    ACTIVE committed posting shards (``shardstore`` — ``_SUCCESS``
-    filtered, compaction-subsumption applied), ``(id, vec, cluster,
-    batch_id)``.  Row-identical to a batch-mode assignment of the
-    concatenated stream (stateless per-row argmin), so a probe query
+    """The IVF index of EVERYTHING ingested so far, ``(id, vec,
+    cluster, batch_id)`` — row-identical to a batch-mode assignment
+    of the concatenated stream (stateless per-row argmin), so a probe
     filters ``cluster IN (nprobe nearest cells)`` and scores exactly
     as ``ivf_topk`` does."""
-    df = shardstore.read_shards(spark, _postings_root(out_dir))
-    if df is None:
-        raise FileNotFoundError(f"no committed IVF posting shards under {out_dir!r}")
-    return df
+    return IVF.read(spark, _postings_root(out_dir))
 
 
 def compact_ivf_shards(spark: SparkSession, out_dir: str) -> dict[str, int]:
-    """Fold the per-batch posting shards into one ``compact_upto=N``
-    dir — postings are plain rows (no summary to merge), so the fold
-    is the identity union, value-neutral trivially; commit-then-delete
-    via ``shardstore.compact_shards``."""
-    return shardstore.compact_shards(spark, _postings_root(out_dir))
+    """Fold the active epoch's posting shards (plain union)."""
+    return IVF.compact(spark, _postings_root(out_dir))
 
 
 def ivf_topk_against_index(
@@ -209,8 +217,8 @@ def ivf_topk_against_index(
 ) -> DataFrame:
     """Approximate top-k neighbors for an arriving ``batch`` of
     vectors, served FROM the stored IVF postings — the probe half of
-    the build-once-probe-many lifecycle (the sixth index-served leg,
-    joining the LSH band / span posting / dHash probes).
+    the build-once-probe-many lifecycle (like the LSH band / span
+    posting / dHash probes).
 
     The batch pays one K x dim distance pass against the store's
     frozen centroids (broadcast literals, no shuffle) to derive its

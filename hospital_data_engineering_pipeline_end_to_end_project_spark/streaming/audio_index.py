@@ -1,14 +1,12 @@
 """Streaming audio feature store — per-batch energy-gram posting
 shards (the persistent decoded-media feature store).
 
-The EIGHTH leg of the index-maintenance family (SimHash novelty gate:
-``corpus_ingest.py``; IVF postings: ``ann_index.py``; MinHash-LSH
-bands: ``lsh_index.py``; winnowing span postings: ``span_index.py``;
-image dHash: ``dhash_index.py``; served ANN / vocab legs), closing the
-r13 verdict's one remaining 100x constant in the audio matcher: q147
-re-DECODED every WAV per run (synthesis + RIFF walk + PCM energies
-were ~41x of its 23x scaled growth), and on a 100 TB media corpus the
-decode is the cost a nightly match must never repeat.  The energy-gram
+A :class:`~hospital_data_engineering_pipeline_end_to_end_project_spark.streaming.shardstore.ShardIndex`
+store (``shardstore`` lists the others), closing the r13 verdict's
+one remaining 100x constant in the audio matcher: q147 re-DECODED
+every WAV per run (synthesis + RIFF walk + PCM energies were ~41x of
+its 23x scaled growth), and on a 100 TB media corpus the decode is
+the cost a nightly match must never repeat.  The energy-gram
 fingerprint is STATELESS per media file (md5 over the ``|``-joined
 window of exact int64 frame energies under a frozen ``(k,
 frame_samples)`` config —
@@ -40,112 +38,66 @@ exact, not "equal modulo corrupt rows").
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import multimodal
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import shardstore
 
 
-def make_audio_batch_writer(
-    out_dir: str,
+def _audio_postings(
+    batch_df: DataFrame,
+    batch_id: int,
     k: int = 4,
     frame_samples: int = multimodal.SPEECH_SAMPLES_PER_TOKEN,
-):
-    """``foreachBatch`` body over MEDIA batches (``media_id``,
-    ``payload``): decode THIS batch's WAVs and write their positional
-    energy-gram posting shard (``batch_id`` stamped as a column, the
-    established sink contract)."""
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # fan_out first: the decode is the compute-bound Arrow pass
-        # and a micro-batch has as many partitions as trigger files
-        # (the single-file-scan trap, streaming form)
-        postings = (
-            multimodal.audio_gram_postings(
-                fan_out(batch_df.select("media_id", "payload")),
-                k=k,
-                frame_samples=frame_samples,
-            )
-            .select(
-                "media_id",
-                F.col("__pos").alias("pos"),
-                F.col("__h").alias("h"),
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+) -> DataFrame:
+    """Decode a MEDIA batch's (``media_id``, ``payload``) WAVs — one
+    Arrow decode pass: positional energy-gram ``(media_id, pos, h,
+    batch_id)`` posting rows."""
+    # fan_out first: the decode is the compute-bound Arrow pass
+    # and a micro-batch has as many partitions as trigger files
+    # (the single-file-scan trap, streaming form)
+    return (
+        multimodal.audio_gram_postings(
+            fan_out(batch_df.select("media_id", "payload")),
+            k=k,
+            frame_samples=frame_samples,
         )
-        shardstore.write_shard(
-            postings, os.path.join(out_dir, f"batch={batch_id}")
+        .select(
+            "media_id",
+            F.col("__pos").alias("pos"),
+            F.col("__h").alias("h"),
         )
+        .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+    )
 
-    return handle
 
-
-def make_audio_doc_batch_writer(
-    out_dir: str,
+def _audio_doc_postings(
+    batch_df: DataFrame,
+    batch_id: int,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 4,
     frame_samples: int = multimodal.SPEECH_SAMPLES_PER_TOKEN,
-):
-    """``foreachBatch`` body over DOCUMENT batches: render the batch's
-    deterministic speech-shaped WAVs (the q147 synthesis — a
-    deployment with real audio uses :func:`make_audio_batch_writer`
-    over its media stream instead) and decode them into the shard."""
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
-
-    base = make_audio_batch_writer(out_dir, k=k, frame_samples=frame_samples)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        media = multimodal.synthesize_speech_wav(
-            fan_out(batch_df.select(id_col, text_col)), id_col, text_col
-        )
-        base(media, batch_id)
-
-    return handle
+) -> DataFrame:
+    """The DOCUMENT-batch form: render the batch's deterministic
+    speech-shaped WAVs (the q147 synthesis — a deployment with real
+    audio uses :data:`AUDIO` over its media stream instead) and decode
+    them."""
+    media = multimodal.synthesize_speech_wav(
+        fan_out(batch_df.select(id_col, text_col)), id_col, text_col
+    )
+    return _audio_postings(media, batch_id, k=k, frame_samples=frame_samples)
 
 
-def audio_index_sink(
-    stream: DataFrame,
-    out_dir: str,
-    k: int = 4,
-    frame_samples: int = multimodal.SPEECH_SAMPLES_PER_TOKEN,
-    checkpoint_dir: str | None = None,
-):
-    """Attach the per-batch decode+fingerprint writer to a media
-    stream — continuous feature-store maintenance: each micro-batch
-    costs one Arrow decode pass over the batch's payloads plus a
-    batch-sized posting-shard write."""
-    writer = stream.writeStream.foreachBatch(
-        make_audio_batch_writer(out_dir, k=k, frame_samples=frame_samples)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
-
-
-def read_audio_index(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The energy-gram feature store of EVERYTHING ingested so far:
-    union of the ACTIVE committed shards (``shardstore`` — ``_SUCCESS``
-    filtered, compaction-subsumption applied), ``(media_id, pos, h,
-    batch_id)``."""
-    df = shardstore.read_shards(spark, out_dir)
-    if df is None:
-        raise FileNotFoundError(
-            f"no committed audio feature shards under {out_dir!r}"
-        )
-    return df
-
-
-def compact_audio_shards(spark: SparkSession, out_dir: str) -> dict[str, int]:
-    """Fold the per-batch posting shards into one ``compact_upto=N``
-    dir — gram postings are plain facts (no summary to merge), so the
-    fold is the identity union; commit-then-delete via
-    ``shardstore.compact_shards``."""
-    return shardstore.compact_shards(spark, out_dir)
+AUDIO = shardstore.ShardIndex("audio feature", _audio_postings)
+AUDIO_DOC = shardstore.ShardIndex("audio feature", _audio_doc_postings)
+make_audio_batch_writer = AUDIO.writer
+audio_index_sink = AUDIO.sink
+make_audio_doc_batch_writer = AUDIO_DOC.writer
+read_audio_index = AUDIO.read
+compact_audio_shards = AUDIO.compact
 
 
 def segments_from_index(

@@ -1,11 +1,8 @@
 """Streaming content-defined-chunk index — per-batch chunk-hash
 shards (the persistent CDC dedup store).
 
-The NINTH leg of the index-maintenance family (SimHash novelty gate:
-``corpus_ingest.py``; IVF postings: ``ann_index.py``; MinHash-LSH
-bands: ``lsh_index.py``; winnowing span postings: ``span_index.py``;
-image dHash: ``dhash_index.py``; audio energy-grams:
-``audio_index.py``; served ANN / vocab legs): boilerplate and
+A :class:`~hospital_data_engineering_pipeline_end_to_end_project_spark.streaming.shardstore.ShardIndex`
+store (``shardstore`` lists the others): boilerplate and
 shared-passage detection over a growing corpus should not re-chunk
 the accumulated corpus per run.  CDC chunking is STATELESS per
 document (boundaries are a pure function of the token stream under a
@@ -33,100 +30,50 @@ payloads and re-chunk nothing but the arriving batch.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import dedupe
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import shardstore
 
-_COLS = ("doc_id", "chunk_idx", "chunk_hash", "n_tokens")
-
-
-def make_chunk_batch_writer(
-    out_dir: str,
+def _chunk_postings(
+    batch_df: DataFrame,
+    batch_id: int,
     id_col: str = "doc_id",
     text_col: str = "text",
     *,
     w: int = 4,
     boundary_mod: int = 32,
-):
-    """``foreachBatch`` body over DOCUMENT batches: CDC-chunk THIS
-    batch and write its chunk-hash shard (``batch_id`` stamped as a
-    column, the established sink contract)."""
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # fan_out first: a micro-batch has as many partitions as
-        # trigger files and the chunker is the compute-bound codegen
-        # pass (the single-file-scan trap, streaming form)
-        chunks = (
-            dedupe.cdc_chunks(
-                fan_out(batch_df.select(id_col, text_col)),
-                id_col,
-                text_col,
-                w=w,
-                boundary_mod=boundary_mod,
-            )
-            .select(
-                F.col(id_col).alias("doc_id"),
-                "chunk_idx",
-                "chunk_hash",
-                "n_tokens",
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+) -> DataFrame:
+    """CDC-chunk THIS batch of documents (one codegen chunking pass):
+    ``(doc_id, chunk_idx, chunk_hash, n_tokens, batch_id)`` rows."""
+    # fan_out first: a micro-batch has as many partitions as
+    # trigger files and the chunker is the compute-bound codegen
+    # pass (the single-file-scan trap, streaming form)
+    return (
+        dedupe.cdc_chunks(
+            fan_out(batch_df.select(id_col, text_col)),
+            id_col,
+            text_col,
+            w=w,
+            boundary_mod=boundary_mod,
         )
-        shardstore.write_shard(
-            chunks, os.path.join(out_dir, f"batch={batch_id}")
+        .select(
+            F.col(id_col).alias("doc_id"),
+            "chunk_idx",
+            "chunk_hash",
+            "n_tokens",
         )
-
-    return handle
-
-
-def chunk_index_sink(
-    stream: DataFrame,
-    out_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    w: int = 4,
-    boundary_mod: int = 32,
-    checkpoint_dir: str | None = None,
-):
-    """Attach the per-batch CDC writer to a document stream —
-    continuous chunk-index maintenance: each micro-batch costs one
-    codegen chunking pass over the batch plus a batch-sized shard
-    write."""
-    writer = stream.writeStream.foreachBatch(
-        make_chunk_batch_writer(
-            out_dir, id_col, text_col, w=w, boundary_mod=boundary_mod
-        )
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+        .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+    )
 
 
-def read_chunk_index(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The chunk-hash store of EVERYTHING ingested so far: union of
-    the ACTIVE committed shards (``shardstore`` — ``_SUCCESS``
-    filtered, compaction-subsumption applied), ``(doc_id, chunk_idx,
-    chunk_hash, n_tokens, batch_id)``."""
-    df = shardstore.read_shards(spark, out_dir)
-    if df is None:
-        raise FileNotFoundError(
-            f"no committed CDC chunk shards under {out_dir!r}"
-        )
-    return df
-
-
-def compact_chunk_shards(spark: SparkSession, out_dir: str) -> dict[str, int]:
-    """Fold the per-batch chunk shards into one ``compact_upto=N``
-    dir — chunk rows are plain facts (no summary to merge), so the
-    fold is the identity union; commit-then-delete via
-    ``shardstore.compact_shards``."""
-    return shardstore.compact_shards(spark, out_dir)
+CHUNK = shardstore.ShardIndex("CDC chunk", _chunk_postings)
+make_chunk_batch_writer = CHUNK.writer
+chunk_index_sink = CHUNK.sink
+read_chunk_index = CHUNK.read
+compact_chunk_shards = CHUNK.compact
 
 
 def dup_chunks_from_index(

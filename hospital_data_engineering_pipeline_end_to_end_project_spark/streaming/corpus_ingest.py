@@ -60,14 +60,6 @@ from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming impor
 INDEX_DIR = "fingerprints"
 ACCEPTED_DIR = "accepted"
 
-#: compacted-shard directory prefix: ``compact_upto=N`` holds the
-#: merged fingerprints of every batch shard <= N that existed when the
-#: compaction ran (batches commit sequentially, so that is all of them)
-COMPACT_PREFIX = "compact_upto="
-
-#: entity name kept for BC with the r09 SilverStore-backed layout
-INDEX_ENTITY = INDEX_DIR
-
 
 def accepted_batch_path(root: str, batch_id: int) -> str:
     return os.path.join(root, ACCEPTED_DIR, f"batch_id={batch_id}")
@@ -75,15 +67,6 @@ def accepted_batch_path(root: str, batch_id: int) -> str:
 
 def index_shard_path(root: str, batch_id: int) -> str:
     return os.path.join(root, INDEX_DIR, f"batch_id={batch_id}")
-
-
-def _committed_shard_dirs(root: str) -> list[tuple[str, int, str]]:
-    """``(kind, n, path)`` for every COMMITTED index dir — kind is
-    ``"batch"`` (``batch_id=n``) or ``"compact"`` (``compact_upto=n``);
-    commit = Spark's ``_SUCCESS``, so partial writes are invisible,
-    and unparseable suffixes (a stray temp dir) are skipped, not
-    raised (``shardstore.committed_shard_dirs``)."""
-    return shardstore.committed_shard_dirs(os.path.join(root, INDEX_DIR))
 
 
 def read_index(
@@ -245,7 +228,9 @@ def make_novelty_batch_ingestor(
         if compact_every is not None:
             n_batch_shards = sum(
                 1
-                for kind, _, _ in _committed_shard_dirs(root)
+                for kind, _, _ in shardstore.committed_shard_dirs(
+                    os.path.join(root, INDEX_DIR)
+                )
                 if kind == "batch"
             )
             if n_batch_shards >= compact_every:
@@ -263,9 +248,6 @@ def novelty_ingest_sink(
     """Continuously ingest a document stream through the novelty gate
     (``foreachBatch`` — one code path for batch and streaming, the
     same Kappa idiom as the SCD2 sink)."""
-    writer = stream.writeStream.foreachBatch(
-        make_novelty_batch_ingestor(store, **kwargs)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return shardstore.foreach_batch_sink(
+        stream, make_novelty_batch_ingestor(store, **kwargs), checkpoint_dir
+    )

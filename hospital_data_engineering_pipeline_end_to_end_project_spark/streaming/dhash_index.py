@@ -1,15 +1,13 @@
 """Streaming perceptual-hash (dHash) index maintenance — per-batch
 fingerprint shards.
 
-The FIFTH leg of the index-maintenance family (SimHash novelty gate:
-``corpus_ingest.py``; IVF postings: ``ann_index.py``; MinHash-LSH
-bands: ``lsh_index.py``; winnowing span postings: ``span_index.py``),
-extending it to the multimodal columns: the corpus's image
-fingerprints are what a daily image-dedup probe needs, and re-decoding
-accumulated image payloads per probe is the rescan a 100 TB media
-pipeline cannot afford.  dHash is STATELESS per image (a pure
-function of the decoded raster under the frozen 9x8 grid), so the
-sink inherits the established contract wholesale:
+A :class:`~hospital_data_engineering_pipeline_end_to_end_project_spark.streaming.shardstore.ShardIndex`
+store (``shardstore`` lists the others) over the multimodal columns:
+the corpus's image fingerprints are what a daily image-dedup probe
+needs, and re-decoding accumulated image payloads per probe is the
+rescan a 100 TB media pipeline cannot afford.  dHash is STATELESS
+per image (a pure function of the decoded raster under the frozen
+9x8 grid), so the sink inherits the established contract wholesale:
 
 - write cost ∝ batch (a ``batch=N`` shard of ``(media_id, b0..b3)``
   rows — ONE row per image, four 16-bit band integers; never a
@@ -39,121 +37,61 @@ filters ``decode_ok`` identically, so the equality is exact, not
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import multimodal
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import shardstore
 
 _HASH_COLS = ("b0", "b1", "b2", "b3")
 
 
-def make_dhash_batch_writer(out_dir: str):
-    """``foreachBatch`` body over MEDIA batches (``media_id``,
-    ``payload``): dHash THIS batch's decodable payloads, write the
-    fingerprint shard (``batch_id`` stamped as a column, the
-    established sink contract)."""
-
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # fan_out first: a micro-batch has as many partitions as files
-        # in the trigger, and the decode+hash is the compute-bound
-        # Arrow pass — without the balancing shuffle the whole batch
-        # runs on that many cores (the single-file-scan trap, here in
-        # streaming form; payloads are ~100 bytes, the shuffle is cheap)
-        hashes = (
-            multimodal.dhash_bands_from_pgm(
-                fan_out(batch_df.select("media_id", "payload"))
-            )
-            .filter(F.col("decode_ok"))
-            .select("media_id", *_HASH_COLS)
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+def _dhash_postings(batch_df: DataFrame, batch_id: int) -> DataFrame:
+    """dHash a MEDIA batch's (``media_id``, ``payload``) decodable
+    payloads — one Arrow-batched decode+hash pass: ``(media_id,
+    b0..b3, batch_id)`` rows."""
+    # fan_out first: a micro-batch has as many partitions as files
+    # in the trigger, and the decode+hash is the compute-bound
+    # Arrow pass — without the balancing shuffle the whole batch
+    # runs on that many cores (the single-file-scan trap, here in
+    # streaming form; payloads are ~100 bytes, the shuffle is cheap)
+    return (
+        multimodal.dhash_bands_from_pgm(
+            fan_out(batch_df.select("media_id", "payload"))
         )
-        shardstore.write_shard(
-            hashes, os.path.join(out_dir, f"batch={batch_id}")
-        )
-
-    return handle
-
-
-def make_dhash_doc_batch_writer(
-    out_dir: str, id_col: str = "doc_id", text_col: str = "text"
-):
-    """``foreachBatch`` body over DOCUMENT batches: render the batch's
-    synthetic thumbnails (the q146/q149 synthesis — a deployment with
-    real images uses :func:`make_dhash_batch_writer` over its media
-    stream instead) and hash them into the shard.  ``fan_out`` runs
-    BELOW the synthesis so both the 72-hash-per-doc rendering and the
-    decode spread across every core."""
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
-
-    base = make_dhash_batch_writer(out_dir)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        media = multimodal.synthesize_minhash_pgm(
-            fan_out(batch_df.select(id_col, text_col)), id_col, text_col
-        )
-        base(media, batch_id)
-
-    return handle
+        .filter(F.col("decode_ok"))
+        .select("media_id", *_HASH_COLS)
+        .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+    )
 
 
-def dhash_doc_index_sink(
-    stream: DataFrame,
-    out_dir: str,
+def _dhash_doc_postings(
+    batch_df: DataFrame,
+    batch_id: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint_dir: str | None = None,
-):
-    """Attach the synthesize+hash writer to a DOCUMENT stream (the
-    fixture-shaped convenience of :func:`dhash_index_sink`)."""
-    writer = stream.writeStream.foreachBatch(
-        make_dhash_doc_batch_writer(out_dir, id_col, text_col)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+) -> DataFrame:
+    """The DOCUMENT-batch form: render the batch's synthetic
+    thumbnails (the q146/q149 synthesis — a deployment with real
+    images uses :data:`DHASH` over its media stream instead) and hash
+    them.  ``fan_out`` runs BELOW the synthesis so both the
+    72-hash-per-doc rendering and the decode spread across every
+    core."""
+    media = multimodal.synthesize_minhash_pgm(
+        fan_out(batch_df.select(id_col, text_col)), id_col, text_col
+    )
+    return _dhash_postings(media, batch_id)
 
 
-def dhash_index_sink(
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str | None = None,
-):
-    """Attach the per-batch fingerprint writer to a media stream —
-    continuous perceptual-index maintenance: each micro-batch costs
-    one Arrow-batched decode+hash pass over the batch's payloads plus
-    a batch-sized shard write."""
-    writer = stream.writeStream.foreachBatch(
-        make_dhash_batch_writer(out_dir)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
-
-
-def read_dhash_index(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The fingerprint index of EVERYTHING ingested so far: union of
-    the ACTIVE committed shards (``shardstore`` — ``_SUCCESS``
-    filtered, compaction-subsumption applied), ``(media_id, b0..b3,
-    batch_id)``."""
-    df = shardstore.read_shards(spark, out_dir)
-    if df is None:
-        raise FileNotFoundError(
-            f"no committed dHash fingerprint shards under {out_dir!r}"
-        )
-    return df
-
-
-def compact_dhash_shards(spark: SparkSession, out_dir: str) -> dict[str, int]:
-    """Fold the per-batch fingerprint shards into one
-    ``compact_upto=N`` dir — fingerprint rows are plain postings (no
-    summary to merge), so the fold is the identity union;
-    commit-then-delete via ``shardstore.compact_shards``."""
-    return shardstore.compact_shards(spark, out_dir)
+DHASH = shardstore.ShardIndex("dHash fingerprint", _dhash_postings)
+DHASH_DOC = shardstore.ShardIndex("dHash fingerprint", _dhash_doc_postings)
+make_dhash_batch_writer = DHASH.writer
+dhash_index_sink = DHASH.sink
+make_dhash_doc_batch_writer = DHASH_DOC.writer
+dhash_doc_index_sink = DHASH_DOC.sink
+read_dhash_index = DHASH.read
+compact_dhash_shards = DHASH.compact
 
 
 def incremental_image_join_against_index(

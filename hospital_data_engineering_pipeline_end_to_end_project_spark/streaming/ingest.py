@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import scd2
 from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.medallion import SilverStore
+from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import shardstore
 
 EVENT_STREAM_SCHEMA = T.StructType(
     [
@@ -192,14 +193,13 @@ def scd2_sink(
     :func:`make_scd2_batch_merger` for the replay/exactly-once
     contract.
     """
-    writer = stream.writeStream.foreachBatch(
+    return shardstore.foreach_batch_sink(
+        stream,
         make_scd2_batch_merger(
             store, entity, spec, processing_date_fn, skip_applied
-        )
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+        ),
+        checkpoint_dir,
+    )
 
 
 def interval_join_streams(

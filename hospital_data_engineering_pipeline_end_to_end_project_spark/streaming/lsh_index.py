@@ -1,9 +1,9 @@
 """Streaming MinHash-LSH band index maintenance — per-batch band
 shards.
 
-The third leg of the index-maintenance triad (SimHash novelty gate:
-``corpus_ingest.py``; IVF postings: ``ann_index.py``): the corpus's
-LSH band index is what :func:`~hospital_data_engineering_pipeline_end_to_end_project_spark.operators.dedupe.lsh_incremental_join`
+A :class:`~hospital_data_engineering_pipeline_end_to_end_project_spark.streaming.shardstore.ShardIndex`
+store (``shardstore`` lists the others): the corpus's LSH band index
+is what :func:`~hospital_data_engineering_pipeline_end_to_end_project_spark.operators.dedupe.lsh_incremental_join`
 probes daily, and recomputing it from the corpus text per probe is
 exactly the rescan a 100 TB pipeline cannot afford.  Banding is
 STATELESS per document (md5-derived MinHash under a frozen
@@ -30,8 +30,6 @@ rescan).  Pinned row-identical to the recomputing operator.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,75 +38,33 @@ from hospital_data_engineering_pipeline_end_to_end_project_spark.operators impor
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import shardstore
 
 
-def make_lsh_batch_writer(
-    out_dir: str,
+def _lsh_postings(
+    batch_df: DataFrame,
+    batch_id: int,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 5,
-):
-    """``foreachBatch`` body: band THIS batch's documents, write the
-    band shard (``batch_id`` stamped as a column, the established
-    sink contract)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        banded = dedupe.minhash_bands(
-            batch_df.select(id_col, text_col),
-            id_col,
-            text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_n=shingle_n,
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        shardstore.write_shard(
-            banded, os.path.join(out_dir, f"batch={batch_id}")
-        )
-
-    return handle
+) -> DataFrame:
+    """Band THIS batch's documents: one shingle+MinHash pass (explode
+    + map-side-combined min aggregates, the q25 shape), ``(id,
+    band_id, band_hash, batch_id)`` rows."""
+    return dedupe.minhash_bands(
+        batch_df.select(id_col, text_col),
+        id_col,
+        text_col,
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_n=shingle_n,
+    ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
 
 
-def lsh_index_sink(
-    stream: DataFrame,
-    out_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 5,
-    checkpoint_dir: str | None = None,
-):
-    """Attach the per-batch band writer to a document stream —
-    continuous LSH index maintenance: each micro-batch costs one
-    shingle+MinHash pass over the batch (explode + map-side-combined
-    min aggregates, the q25 shape) plus a batch-sized shard write."""
-    writer = stream.writeStream.foreachBatch(
-        make_lsh_batch_writer(
-            out_dir, id_col, text_col, num_hashes, bands, shingle_n
-        )
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
-
-
-def read_lsh_index(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The band index of EVERYTHING ingested so far: union of the
-    ACTIVE committed shards (``shardstore`` — ``_SUCCESS`` filtered,
-    compaction-subsumption applied), ``(id, band_id, band_hash,
-    batch_id)``."""
-    df = shardstore.read_shards(spark, out_dir)
-    if df is None:
-        raise FileNotFoundError(f"no committed LSH band shards under {out_dir!r}")
-    return df
-
-
-def compact_lsh_shards(spark: SparkSession, out_dir: str) -> dict[str, int]:
-    """Fold the per-batch band shards into one ``compact_upto=N`` dir
-    — band rows are plain postings (no summary to merge), so the fold
-    is the identity union; commit-then-delete via
-    ``shardstore.compact_shards``."""
-    return shardstore.compact_shards(spark, out_dir)
+LSH = shardstore.ShardIndex("LSH band", _lsh_postings)
+make_lsh_batch_writer = LSH.writer
+lsh_index_sink = LSH.sink
+read_lsh_index = LSH.read
+compact_lsh_shards = LSH.compact
 
 
 def incremental_join_against_index(

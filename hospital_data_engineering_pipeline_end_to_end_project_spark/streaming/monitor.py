@@ -64,12 +64,11 @@ def sketch_monitor_sink(
     """Attach the per-batch sketch writer to a stream (``foreachBatch``
     — one code path for batch and streaming, the same Kappa idiom as
     the SCD2 / novelty sinks)."""
-    writer = stream.writeStream.foreachBatch(
-        make_sketch_batch_writer(out_dir, group_cols, id_col, val_col, k=k)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return shardstore.foreach_batch_sink(
+        stream,
+        make_sketch_batch_writer(out_dir, group_cols, id_col, val_col, k=k),
+        checkpoint_dir,
+    )
 
 
 def read_merged_quantiles(
@@ -86,11 +85,7 @@ def read_merged_quantiles(
     crash mid-shard-write can't corrupt the read) and let
     :func:`sample_quantiles`'s merge re-rank reproduce the direct
     sketch bit-for-bit."""
-    shards = shardstore.read_shards(spark, out_dir)
-    if shards is None:
-        raise FileNotFoundError(
-            f"no committed sketch shards under {out_dir!r}"
-        )
+    shards = shardstore.require_shards(spark, out_dir, "sketch")
     return sample_quantiles(
         shards.select(*group_cols, "h", val_col), group_cols, val_col,
         ps=ps, k=k,
@@ -139,12 +134,11 @@ def countmin_monitor_sink(
     aggregate and a <= depth x width-row shard write, and the
     accumulated shards answer "what are the hot items so far" at any
     time without touching raw data."""
-    writer = stream.writeStream.foreachBatch(
-        make_countmin_batch_writer(out_dir, item_col, depth=depth, width=width)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return shardstore.foreach_batch_sink(
+        stream,
+        make_countmin_batch_writer(out_dir, item_col, depth=depth, width=width),
+        checkpoint_dir,
+    )
 
 
 def read_merged_countmin(
@@ -160,11 +154,7 @@ def read_merged_countmin(
     to probe candidates."""
     from pyspark.sql import functions as F
 
-    shards = shardstore.read_shards(spark, out_dir)
-    if shards is None:
-        raise FileNotFoundError(
-            f"no committed count-min shards under {out_dir!r}"
-        )
+    shards = shardstore.require_shards(spark, out_dir, "count-min")
     return shards.groupBy("r", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -224,15 +214,14 @@ def cusum_monitor_sink(
     windows plus a |groups|-row shard write, and the accumulated
     shards answer "has any group's cumulative excess built past the
     alarm threshold" at any time without touching raw data."""
-    writer = stream.writeStream.foreachBatch(
+    return shardstore.foreach_batch_sink(
+        stream,
         make_cusum_batch_writer(
             out_dir, group_col, order_col, value_col,
             k_scaled=k_scaled, scale=scale,
-        )
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+        ),
+        checkpoint_dir,
+    )
 
 
 def read_merged_cusum(
@@ -247,11 +236,7 @@ def read_merged_cusum(
     Returns ``(group_col, n_events, peak_cusum)``."""
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.temporal import cusum_fold_summaries
 
-    shards = shardstore.read_shards(spark, out_dir)
-    if shards is None:
-        raise FileNotFoundError(
-            f"no committed CUSUM shards under {out_dir!r}"
-        )
+    shards = shardstore.require_shards(spark, out_dir, "CUSUM")
     return cusum_fold_summaries(shards, group_col, "batch_id")
 
 
@@ -361,12 +346,9 @@ def dq_monitor_sink(
     checkpoint_dir: str | None = None,
 ):
     """Attach the per-batch constraint-report writer to a stream."""
-    writer = stream.writeStream.foreachBatch(
-        make_dq_batch_writer(out_dir, report_fn)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return shardstore.foreach_batch_sink(
+        stream, make_dq_batch_writer(out_dir, report_fn), checkpoint_dir
+    )
 
 
 def read_dq_history(spark: SparkSession, out_dir: str) -> DataFrame | None:

@@ -1,11 +1,26 @@
 """Committed-shard store: the shared lifecycle machinery behind every
-per-batch streaming sink (novelty index, monitor sinks, IVF postings).
+per-batch streaming sink, and the one :class:`ShardIndex` spec the
+index stores are built on.
 
-All four streaming sinks in this engine share one layout: each
+Every per-batch sink in this engine shares one layout: each
 micro-batch writes its own deterministic ``batch=N`` (or
 ``batch_id=N``) parquet directory, so replay overwrites rather than
-duplicates, and readers union the accumulated shards.  That layout has
-three lifecycle obligations this module centralizes:
+duplicates, and readers union the accumulated shards.  The stream
+side is one :func:`foreach_batch_sink` for all of them (the monitor
+sinks, the SCD2 and novelty-ingest sinks and the index stores).
+
+A :class:`ShardIndex` is a store defined by its postings builder and
+an optional compaction fold; its ``writer`` / ``sink`` / ``read`` /
+``compact`` methods are the whole lifecycle.  The stores built on it:
+MinHash-LSH bands (``lsh_index``), winnowing fingerprints
+(``span_index``), image dHash (``dhash_index``), CDC chunk hashes
+(``chunk_index``), audio energy-grams (``audio_index``), word counts
+(``vocab_index``, folded by summation) and IVF postings
+(``ann_index``, under its epoch root).  The novelty gate
+(``corpus_ingest``) and the monitor sinks (``monitor``) use the
+listing, read and compaction functions directly.
+
+The layout has three lifecycle obligations this module centralizes:
 
 - **Committed-only reads.**  A crash mid-shard-write leaves a partial
   directory with task files but no ``_SUCCESS``; unioning it corrupts
@@ -39,12 +54,16 @@ three lifecycle obligations this module centralizes:
 
 from __future__ import annotations
 
+import dataclasses
 import functools
+import inspect
 import math
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import (
     run_concurrently,
@@ -117,6 +136,16 @@ def read_shards(spark: SparkSession, root: str) -> DataFrame | None:
     return spark.read.parquet(*paths)
 
 
+def require_shards(spark: SparkSession, root: str, label: str) -> DataFrame:
+    """:func:`read_shards` for a store that must exist: an empty or
+    not-yet-committed store raises ``FileNotFoundError`` naming
+    ``root`` and the store's ``label``."""
+    df = read_shards(spark, root)
+    if df is None:
+        raise FileNotFoundError(f"no committed {label} shards under {root!r}")
+    return df
+
+
 def cleanup_subsumed(root: str) -> None:
     """Finish an interrupted compaction: once ``compact_upto=M`` is
     committed, every batch shard ``<= M`` and every older compacted
@@ -185,6 +214,14 @@ def build_shards_concurrently(writer, batches) -> None:
     )
 
 
+def backfill_by_mod(writer, df: DataFrame, key: str, n: int) -> None:
+    """Historical backfill: ``df`` split into ``n`` batch shards by
+    ``key % n == batch_id``, built by :func:`build_shards_concurrently`."""
+    build_shards_concurrently(
+        writer, [(b, df.filter(F.col(key) % n == b)) for b in range(n)]
+    )
+
+
 def compact_shards(
     spark: SparkSession,
     root: str,
@@ -236,3 +273,72 @@ def compact_shards(
         "dirs_before": n_before,
         "dirs_after": len(committed_shard_dirs(root)),
     }
+
+
+def foreach_batch_sink(
+    stream: DataFrame, handler, checkpoint_dir: str | None = None
+):
+    """Attach a ``foreachBatch`` handler ``(batch_df, batch_id)`` to a
+    stream in update mode, checkpointed under ``checkpoint_dir`` when
+    given — one code path for batch and streaming (the Kappa idiom):
+    a backfill calls the same handler directly."""
+    writer = stream.writeStream.foreachBatch(handler).outputMode("update")
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer
+
+
+@dataclasses.dataclass(frozen=True)
+class ShardIndex:
+    """A per-batch shard store: ``postings(batch_df, batch_id, *cfg,
+    **cfg_kw)`` builds one batch's rows (stamping ``batch_id`` as a
+    column where the store needs it), ``fold`` (optional) collapses
+    compacted shards to their mergeable form, and ``label`` names the
+    store in the missing-store error.
+
+    The builder must be deterministic given its config, so a replayed
+    batch rewrites an identical ``batch=N`` shard."""
+
+    label: str
+    postings: Callable[..., DataFrame]
+    fold: Callable[[DataFrame], DataFrame] | None = None
+
+    def writer(self, out_dir: str, *cfg, **cfg_kw):
+        """``foreachBatch`` body: build THIS batch's postings and write
+        them to ``out_dir/batch=N`` (:func:`write_shard`).  The config
+        is bound now, so a bad argument fails here, not on the first
+        batch."""
+        inspect.signature(self.postings).bind(None, 0, *cfg, **cfg_kw)
+
+        def handle(batch_df: DataFrame, batch_id: int) -> None:
+            write_shard(
+                self.postings(batch_df, batch_id, *cfg, **cfg_kw),
+                os.path.join(out_dir, f"batch={batch_id}"),
+            )
+
+        return handle
+
+    def sink(
+        self,
+        stream: DataFrame,
+        out_dir: str,
+        *cfg,
+        checkpoint_dir: str | None = None,
+        **cfg_kw,
+    ):
+        """Attach :meth:`writer` to ``stream`` — continuous index
+        maintenance, each micro-batch costing one postings pass over
+        the batch plus a batch-sized shard write."""
+        return foreach_batch_sink(
+            stream, self.writer(out_dir, *cfg, **cfg_kw), checkpoint_dir
+        )
+
+    def read(self, spark: SparkSession, out_dir: str) -> DataFrame:
+        """The store of EVERYTHING ingested so far: the union of the
+        active committed shards (:func:`read_shards`)."""
+        return require_shards(spark, out_dir, self.label)
+
+    def compact(self, spark: SparkSession, out_dir: str) -> dict[str, int]:
+        """Fold the store into one ``compact_upto=N`` dir with this
+        store's ``fold`` (identity union without one)."""
+        return compact_shards(spark, out_dir, fold=self.fold)

@@ -1,10 +1,10 @@
 """Streaming winnowing fingerprint index maintenance — per-batch
 fingerprint-posting shards.
 
-The fourth leg of the index-maintenance family (SimHash novelty gate:
-``corpus_ingest.py``; IVF postings: ``ann_index.py``; MinHash bands:
-``lsh_index.py``): the corpus's selected winnowing fingerprints are
-what :func:`~hospital_data_engineering_pipeline_end_to_end_project_spark.operators.dedupe.repeated_span_pairs`
+A :class:`~hospital_data_engineering_pipeline_end_to_end_project_spark.streaming.shardstore.ShardIndex`
+store (``shardstore`` lists the others): the corpus's selected
+winnowing fingerprints are what
+:func:`~hospital_data_engineering_pipeline_end_to_end_project_spark.operators.dedupe.repeated_span_pairs`
 derives as its stage-1 candidates, and re-winnowing the corpus per
 probe is the rescan a 100 TB pipeline cannot afford.  Winnowing
 selection is STATELESS per document (md5-derived k-gram hashes +
@@ -34,8 +34,6 @@ over the concatenated corpus restricted to batch-vs-corpus pairs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,69 +59,27 @@ def _fp_postings(
     ).select(F.col(id_col), F.explode("__fps").alias("fp"))
 
 
-def make_span_batch_writer(
-    out_dir: str,
+def _span_postings(
+    batch_df: DataFrame,
+    batch_id: int,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 8,
     w: int = 9,
-):
-    """``foreachBatch`` body: winnow THIS batch's documents, write
-    the fingerprint-posting shard (``batch_id`` stamped as a column,
-    the established sink contract)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        postings = _fp_postings(batch_df, id_col, text_col, k, w).withColumn(
-            "batch_id", F.lit(int(batch_id)).cast("long")
-        )
-        shardstore.write_shard(
-            postings, os.path.join(out_dir, f"batch={batch_id}")
-        )
-
-    return handle
+) -> DataFrame:
+    """Winnow THIS batch's documents (hashing + rightmost-min
+    selection on the scan, the q137 shape): ``(id, fp, batch_id)``
+    posting rows."""
+    return _fp_postings(batch_df, id_col, text_col, k, w).withColumn(
+        "batch_id", F.lit(int(batch_id)).cast("long")
+    )
 
 
-def span_index_sink(
-    stream: DataFrame,
-    out_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    w: int = 9,
-    checkpoint_dir: str | None = None,
-):
-    """Attach the per-batch fingerprint writer to a document stream —
-    continuous winnowing index maintenance: each micro-batch costs
-    one per-doc array pass over the batch (hashing + rightmost-min
-    selection on the scan, the q137 shape) plus a batch-sized shard
-    write."""
-    writer = stream.writeStream.foreachBatch(
-        make_span_batch_writer(out_dir, id_col, text_col, k, w)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
-
-
-def read_span_index(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The fingerprint postings of EVERYTHING ingested so far: union
-    of the ACTIVE committed shards (``shardstore`` — ``_SUCCESS``
-    filtered, compaction-subsumption applied), ``(id, fp,
-    batch_id)``."""
-    df = shardstore.read_shards(spark, out_dir)
-    if df is None:
-        raise FileNotFoundError(
-            f"no committed fingerprint shards under {out_dir!r}"
-        )
-    return df
-
-
-def compact_span_shards(spark: SparkSession, out_dir: str) -> dict[str, int]:
-    """Fold the per-batch posting shards into one ``compact_upto=N``
-    dir — posting rows carry no summary to merge, so the fold is the
-    identity union; commit-then-delete via
-    ``shardstore.compact_shards``."""
-    return shardstore.compact_shards(spark, out_dir)
+SPAN = shardstore.ShardIndex("fingerprint", _span_postings)
+make_span_batch_writer = SPAN.writer
+span_index_sink = SPAN.sink
+read_span_index = SPAN.read
+compact_span_shards = SPAN.compact
 
 
 def incremental_spans_against_index(

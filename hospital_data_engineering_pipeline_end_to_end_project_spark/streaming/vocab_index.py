@@ -1,13 +1,10 @@
 """Streaming word-frequency (vocabulary) index maintenance — the
 tokenizer-training leg of the index family.
 
-The SEVENTH leg (SimHash novelty gate: ``corpus_ingest.py``; IVF
-postings: ``ann_index.py``; MinHash-LSH bands: ``lsh_index.py``;
-winnowing span postings: ``span_index.py``; dHash fingerprints:
-``dhash_index.py``; plus the served IVF top-k of ``q152``): BPE
-tokenizer training iterates over the ``(word, freq)`` VOCABULARY, and
-at 100 TB the one thing you must never redo is the corpus -> vocab
-collapse.  This sink maintains that collapse incrementally — each
+A :class:`~hospital_data_engineering_pipeline_end_to_end_project_spark.streaming.shardstore.ShardIndex`
+store (``shardstore`` lists the others): BPE tokenizer training
+iterates over the ``(word, freq)`` VOCABULARY, and at 100 TB the one
+thing you must never redo is the corpus -> vocab collapse.  This sink maintains that collapse incrementally — each
 arriving batch contributes its own partial word counts as a
 ``batch=N`` shard, and training runs entirely FROM the store with
 zero corpus re-reads.
@@ -32,8 +29,6 @@ winner order make the equality exact, not approximate).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,55 +36,32 @@ from hospital_data_engineering_pipeline_end_to_end_project_spark.operators impor
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import shardstore
 
 
-def make_vocab_batch_writer(out_dir: str, text_col: str = "text"):
-    """``foreachBatch`` body over DOCUMENT batches: collapse THIS
-    batch to its partial ``(word, freq)`` counts and write the shard.
-    Shards carry no batch column — the dir name is the batch identity
-    and counts are mergeable without it."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        wf = tokenizer.word_freqs(batch_df, text_col)
-        shardstore.write_shard(
-            wf, os.path.join(out_dir, f"batch={batch_id}")
-        )
-
-    return handle
+def _vocab_postings(
+    batch_df: DataFrame, batch_id: int, text_col: str = "text"
+) -> DataFrame:
+    """Collapse THIS batch of documents to its partial ``(word,
+    freq)`` counts.  No batch column — the dir name is the batch
+    identity and counts are mergeable without it."""
+    return tokenizer.word_freqs(batch_df, text_col)
 
 
-def vocab_index_sink(
-    stream: DataFrame,
-    out_dir: str,
-    text_col: str = "text",
-    checkpoint_dir: str | None = None,
-):
-    """Attach the partial-count writer to a document stream."""
-    writer = stream.writeStream.foreachBatch(
-        make_vocab_batch_writer(out_dir, text_col)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+def _sum_freqs(df: DataFrame) -> DataFrame:
+    """Per-word summation: the compaction fold and the read path's
+    own aggregate, hence value-neutral by associativity of ``+``."""
+    return df.groupBy("word").agg(F.sum("freq").alias("freq"))
 
 
-def compact_vocab_shards(spark: SparkSession, out_dir: str) -> dict[str, int]:
-    """Compact the vocab store: counts are LINEAR, the fold is plain
-    per-word summation (the read path's own aggregate, hence
-    value-neutral by associativity)."""
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy("word").agg(F.sum("freq").alias("freq"))
-
-    return shardstore.compact_shards(spark, out_dir, fold=fold)
+VOCAB = shardstore.ShardIndex("vocab count", _vocab_postings, fold=_sum_freqs)
+make_vocab_batch_writer = VOCAB.writer
+vocab_index_sink = VOCAB.sink
+compact_vocab_shards = VOCAB.compact
 
 
-def read_vocab(spark: SparkSession, out_dir: str) -> DataFrame | None:
+def read_vocab(spark: SparkSession, out_dir: str) -> DataFrame:
     """The served vocabulary: union of active shards, summed per word.
     After compaction this is one summary-sized dir plus any newer
     batch shards."""
-    df = shardstore.read_shards(spark, out_dir)
-    if df is None:
-        return None
-    return df.groupBy("word").agg(F.sum("freq").alias("freq"))
+    return _sum_freqs(VOCAB.read(spark, out_dir))
 
 
 def bpe_merges_from_index(
@@ -101,8 +73,7 @@ def bpe_merges_from_index(
     """First-``steps`` BPE merges computed entirely FROM the stored
     vocabulary — the train step a tokenizer service runs nightly
     without touching corpus text."""
-    vocab = read_vocab(spark, out_dir)
-    if vocab is None:
-        raise ValueError(f"vocab index at {out_dir} has no committed shards")
-    steps_df, _final = tokenizer.bpe_train_from_vocab(vocab, steps=steps, top=top)
+    steps_df, _final = tokenizer.bpe_train_from_vocab(
+        read_vocab(spark, out_dir), steps=steps, top=top
+    )
     return steps_df

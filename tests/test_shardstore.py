@@ -10,7 +10,26 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import shardstore
+from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import (
+    ann_index,
+    audio_index,
+    chunk_index,
+    dhash_index,
+    lsh_index,
+    shardstore,
+    span_index,
+    vocab_index,
+)
+
+_INDEX_MODULES = (
+    ann_index, audio_index, chunk_index, dhash_index, lsh_index, span_index, vocab_index
+)
+_SPECS = {
+    f"{mod.__name__.rsplit('.', 1)[1]}.{name}": spec
+    for mod in _INDEX_MODULES
+    for name, spec in vars(mod).items()
+    if isinstance(spec, shardstore.ShardIndex)
+}
 
 
 def _write_shard(spark, root, name, values):
@@ -113,3 +132,36 @@ def test_concurrent_shard_build_carries_job_group(spark, tmp_path):
     assert len(grouped) >= 3
     assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
     assert [n for _, n, _ in shardstore.committed_shard_dirs(root)] == [0, 1, 2]
+
+
+def test_every_index_module_defines_a_spec():
+    assert {name.split(".")[0] for name in _SPECS} == {
+        mod.__name__.rsplit(".", 1)[1] for mod in _INDEX_MODULES
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_SPECS))
+def test_empty_store_contract(spark, tmp_path, name):
+    """An empty store: ``read`` raises a FileNotFoundError naming the
+    directory, ``compact`` is a no-op reporting zero dirs."""
+    spec = _SPECS[name]
+    empty = str(tmp_path / "nothing-here")
+    with pytest.raises(FileNotFoundError, match="nothing-here"):
+        spec.read(spark, empty)
+    assert spec.compact(spark, empty) == {"dirs_before": 0, "dirs_after": 0}
+
+
+def test_foreach_batch_is_attached_only_in_shardstore():
+    """Every streaming sink goes through ``foreach_batch_sink``; no
+    other package module attaches ``foreachBatch`` itself."""
+    pkg = os.path.dirname(os.path.dirname(shardstore.__file__))
+    hits = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                if ".writeStream.foreachBatch(" in fh.read():
+                    hits.append(os.path.relpath(path, pkg))
+    assert hits == [os.path.join("streaming", "shardstore.py")]

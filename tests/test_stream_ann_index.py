@@ -362,3 +362,19 @@ def test_index_served_topk_flat_store_needs_centroids(spark, tmp_path):
     # self-pairs are excluded even when the batch overlaps the corpus
     assert got.filter(F.col("query_id") == F.col("neighbor_id")).count() == 0
     assert got.count() > 0
+
+
+def test_explicit_centroids_on_epoch_managed_store_raise(spark, tmp_path):
+    """Explicit centroids on an epoch-managed store would write flat
+    ``batch=N`` shards outside ``epoch=E/``, where no reader or
+    compaction looks: the writer refuses, naming the store."""
+    import pytest
+
+    out = str(tmp_path / "ivf-managed")
+    vecs = _vectors(spark)
+    cents = build_ivf_centroids(vecs, "embedding", "vec_id", k=_K)
+    ann_index.init_ivf_store(out, cents)
+    handle = ann_index.make_ivf_batch_writer(out, cents)
+    with pytest.raises(ValueError, match="ivf-managed"):
+        handle(vecs, 0)
+    assert not os.path.exists(os.path.join(out, "batch=0"))
