@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
+
 #: Plain propagation rounds before pointer-jumping engages.  Near-dup
 #: graphs (diameter 2-4) converge before this and never pay the
 #: shortcut's extra join+materialization; anything deeper switches to
@@ -76,9 +78,9 @@ def connected_components(
     # (u, u) edges in the frame, one join + one groupBy-min per round
     # computes min(own label, neighbor labels) directly — the pre-r7
     # shape needed a second (left) join per round to fold the node's
-    # own label back in.  localCheckpoint truncates the edge lineage
-    # ONCE; everything below derives from the checkpointed frame.
-    closed = (
+    # own label back in.  The edge frame is materialized ONCE;
+    # everything below derives from the materialized frame.
+    closed = materialize(
         edges.select(
             F.explode(
                 F.array(
@@ -91,7 +93,6 @@ def connected_components(
         )
         .select("e.u", "e.v")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     labels = closed.filter(F.col("u") == F.col("v")).select(
         F.col("u").alias("node"), F.col("u").alias("component")
@@ -111,6 +112,7 @@ def connected_components(
             .groupBy("u")
             .agg(F.min("component").alias("component"))
             .withColumnRenamed("u", "node")
+            # per-round lineage cap, not an index: no policy may drop it
             .localCheckpoint(eager=False)
         )
         if i >= _SHORTCUT_AFTER:
@@ -123,13 +125,14 @@ def connected_components(
             # failure, same as the dedup indexes).  Monotone: every
             # label satisfies label(x) <= x after round one, so sums
             # still strictly decrease until the fixpoint.
-            labels = labels.localCheckpoint(eager=True)
+            labels = materialize(labels)
             l2 = labels.select(
                 F.col("node").alias("__n"), F.col("component").alias("__c")
             )
             labels = (
                 labels.join(l2, F.col("component") == F.col("__n"))
                 .select("node", F.col("__c").alias("component"))
+                # per-round lineage cap, not an index: no policy may drop it
                 .localCheckpoint(eager=False)
             )
         # decimal(38,0) sum: exact at any node count / id magnitude, so
@@ -157,7 +160,6 @@ def triangle_counts(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    materialize_mode: str = "eager",
     max_degree: int | None = None,
 ) -> DataFrame:
     """Per-node triangle participation over an undirected edge list —
@@ -173,7 +175,7 @@ def triangle_counts(
     the ordered graph (each node's out-neighbors pair up), the same
     bucket-squared shape as the banded dedup joins — never all
     triples.  The edge frame feeds three join branches, so it is
-    materialized once (policy per ``materialize_mode``); input edges
+    materialized once (``operators/materialize.py``); input edges
     are normalized to (min, max) and deduped first, so callers may
     pass raw pair lists in either orientation.
 
@@ -195,8 +197,6 @@ def triangle_counts(
     Returns ``(node, n_triangles)`` for nodes in at least one
     triangle.
     """
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
-
     a, b = F.col(src), F.col(dst)
     e = (
         edges.select(
@@ -226,7 +226,7 @@ def triangle_counts(
             k=max_degree,
             descending=False,
         ).select("u", "v")
-    e = materialize(e, materialize_mode)
+    e = materialize(e)
     tri = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e1.v") == F.col("e2.u"))
@@ -254,7 +254,6 @@ def pagerank_fixed(
     dst: str = "id_b",
     iterations: int = 3,
     scale: int = 10**12,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Fixed-point PageRank over an undirected edge list — the
     centrality score a dedup pipeline uses to pick the CANONICAL
@@ -293,8 +292,6 @@ def pagerank_fixed(
     Returns ``(node, pr)`` with ``pr`` the scaled int64 rank after
     ``iterations`` steps.
     """
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
-
     a, b = F.col(src), F.col(dst)
     und = (
         edges.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
@@ -303,7 +300,7 @@ def pagerank_fixed(
     )
     sym = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    ed = materialize(sym.join(deg, "u"), materialize_mode)
+    ed = materialize(sym.join(deg, "u"))
 
     n_nodes = ed.select("u").distinct().count()
     base = (3 * scale) // (20 * n_nodes)
@@ -331,7 +328,6 @@ def label_propagation_min(
     src: str = "id_a",
     dst: str = "id_b",
     rounds: int = 3,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Synchronous min-label propagation over an undirected edge list
     — the bounded-round community/labeling primitive: after ``t``
@@ -359,8 +355,6 @@ def label_propagation_min(
 
     Returns ``(node, label)`` for every node with at least one edge.
     """
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
-
     a, b = F.col(src), F.col(dst)
     und = (
         edges.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
@@ -368,8 +362,7 @@ def label_propagation_min(
         .distinct()
     )
     sym = materialize(
-        und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        materialize_mode,
+        und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
     labels = sym.select("u").distinct().select(
         F.col("u").alias("node"), F.col("u").alias("label")
@@ -468,7 +461,6 @@ def hits_bipartite_fixed(
     auth_col: str,
     iterations: int = 3,
     scale: int = 10**9,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Fixed-point HITS (hubs & authorities) over a bipartite edge
     list — the "which suppliers anchor the popular parts" /
@@ -500,8 +492,6 @@ def hits_bipartite_fixed(
     Returns ``(side, id, score)`` with side in {hub, auth} and score
     the scaled int64 after ``iterations`` full iterations.
     """
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
-
     if iterations < 1:
         # the final select dereferences the last authority frame, so
         # at least one full iteration is part of the contract
@@ -509,8 +499,7 @@ def hits_bipartite_fixed(
     ed = materialize(
         edges.select(
             F.col(hub_col).alias("s"), F.col(auth_col).alias("p")
-        ).distinct(),
-        materialize_mode,
+        ).distinct()
     )
 
     def _l1_normalize(df: DataFrame, key: str, val: str) -> DataFrame:
@@ -521,7 +510,7 @@ def hits_bipartite_fixed(
         # documents for self-joins), compounding per half-step.
         # Materialize the node-sized aggregate once; the normalized
         # output is then a cheap projection over it.
-        dfm = materialize(df, materialize_mode)
+        dfm = materialize(df)
         tot = dfm.agg(F.sum(val).alias("_tot"))
         return dfm.crossJoin(F.broadcast(tot)).select(
             key, F.expr(f"({val} * {scale}L) div _tot").alias(val)

@@ -45,7 +45,6 @@ def copurchase_lift(
     cap: int = 8,
     min_support: int = 2,
     round_scale: int = 6,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Lift over distinct (basket, item) pairs, per-basket capped.
 
@@ -67,8 +66,7 @@ def copurchase_lift(
     capped = materialize(
         items.withColumn("__rn", F.row_number().over(w_cap))
         .filter(F.col("__rn") <= cap)
-        .drop("__rn"),
-        materialize_mode,
+        .drop("__rn")
     )
     item_counts = capped.groupBy("item").agg(F.count("*").alias("c_item"))
     # 1-row grand total rides as a broadcast cross join (the q77/q94

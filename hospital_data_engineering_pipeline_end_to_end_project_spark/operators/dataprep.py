@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
+
 #: 4 hex chars = 65536 buckets; thresholds are cumulative-weight
 #: boundaries rendered as zero-padded hex strings
 SPLIT_PREFIX_LEN = 4
@@ -705,7 +707,6 @@ def boilerplate_stats(
     text_col: str,
     shingle_n: int = 3,
     hot_df: int = 50,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Corpus-level boilerplate exposure per document: the fraction of
     a doc's distinct word n-grams that are corpus-frequent (document
@@ -731,14 +732,12 @@ def boilerplate_stats(
     unchanged.
 
     The exploded stream feeds three consumers (df counts, the
-    semi-probe, per-doc totals), so it is materialized once per
-    ``materialize_mode`` (``operators/materialize.py`` — pass
-    ``"lazy"`` to trade re-shingling for zero intermediate storage at
-    extreme scale).  Docs shorter than ``shingle_n`` tokens emit no
-    shingles and are absent from the output (no ratio to report).
+    semi-probe, per-doc totals), so it is materialized once
+    (``operators/materialize.py``).  Docs shorter than ``shingle_n``
+    tokens emit no shingles and are absent from the output (no ratio
+    to report).
     """
     from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
 
     ex = fan_out(docs.select(F.col(id_col), F.col(text_col)), by=id_col).select(
@@ -747,7 +746,7 @@ def boilerplate_stats(
             "s"
         ),
     )
-    ex = materialize(ex, materialize_mode)
+    ex = materialize(ex)
     hot = (
         ex.groupBy("s")
         .agg(F.count(F.lit(1)).alias("__df"))
@@ -801,7 +800,6 @@ def duplicated_passage_stats(
     text_col: str,
     gram_k: int = 5,
     min_count: int = 2,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Per-document duplicated-PASSAGE coverage: the fraction of a
     doc's token positions covered by at least one k-token gram that
@@ -829,15 +827,13 @@ def duplicated_passage_stats(
     and are absent from the output.
     """
     from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
 
     toks = docs.select(
         F.col(id_col), TX.tokens(text_col).alias("__t")
     ).filter(F.size("__t") >= gram_k)
     grams = materialize(
-        _positional_grams(fan_out(toks, by=id_col), id_col, gram_k),
-        materialize_mode,
+        _positional_grams(fan_out(toks, by=id_col), id_col, gram_k)
     )
     dup = (
         grams.groupBy("g")
@@ -891,7 +887,6 @@ def contamination_scrub(
     text_col: str,
     is_bench,
     gram_k: int = 5,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """SURGICAL benchmark decontamination: instead of flagging or
     dropping whole training documents (:func:`contamination` / q55),
@@ -913,7 +908,6 @@ def contamination_scrub(
     operator here); benchmark rows are excluded from the output.
     """
     from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
 
     bench_grams = (
@@ -993,10 +987,8 @@ def source_divergence(
     tok = fan_out(docs.select(F.col(group_col), F.col(text_col))).select(
         F.col(group_col), F.explode(TX.tokens(text_col)).alias("t")
     )
-    c_st = (
-        tok.groupBy(group_col, "t")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+    c_st = materialize(
+        tok.groupBy(group_col, "t").agg(F.count(F.lit(1)).alias("c"))
     )
     c_t = c_st.groupBy("t").agg(F.sum("c").alias("ct"))
     totals = c_t.agg(F.sum("ct").alias("bigT"))

@@ -157,7 +157,6 @@ def minhash_bands(
 def near_dup_candidates(
     bands_df: DataFrame,
     id_col: str = "doc_id",
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Distinct candidate pairs (a < b) sharing any LSH band.
 
@@ -165,13 +164,13 @@ def near_dup_candidates(
     bucket, pair fan-out is per-bucket — the property that keeps this
     sub-quadratic at corpus scale.
 
-    The band frame is materialized once (the LSH index build; policy
-    per ``materialize_mode``, see ``operators/materialize.py``):
+    The band frame is materialized once (the LSH index build, see
+    ``operators/materialize.py``):
     Catalyst does not reuse the banding subtree across the two join
     branches when AQE broadcasts one side, so without it the whole
     shingle+MinHash pipeline runs twice.
     """
-    bands_df = materialize(bands_df, materialize_mode)
+    bands_df = materialize(bands_df)
     a = bands_df.alias("a")
     b = bands_df.alias("b")
     return (
@@ -249,7 +248,6 @@ def _sparse_pair_counts(
     key_col: str,
     shingle_n: int,
     df_max: int | None,
-    materialize_mode: str,
 ) -> DataFrame:
     """Shared sparse-set intersection pipeline of
     :func:`jaccard_within_key` and :func:`containment_pairs`:
@@ -283,12 +281,9 @@ def _sparse_pair_counts(
     keep = F.col("__n") > 1
     if df_max is not None:
         keep = keep & (F.col("__n") <= df_max)
-    # materialize the pruned shingle stream once: the ReusedExchange
-    # collapse of the two identical join sides no longer fires under
-    # AQE when one side gets broadcast (0 observed in the executed
-    # plan), which silently re-ran the whole shingling+window pipeline
-    # per branch (materialization policy per materialize_mode)
-    exploded = materialize(exploded.filter(keep).drop("__n"), materialize_mode)
+    # materialize the pruned shingle stream once: both join sides read
+    # it (the AQE hazard in operators/materialize.py)
+    exploded = materialize(exploded.filter(keep).drop("__n"))
     a, b = exploded.alias("a"), exploded.alias("b")
     inter = (
         a.join(
@@ -317,7 +312,6 @@ def jaccard_within_key(
     key_col: str,
     shingle_n: int = 3,
     df_max: int | None = None,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """All within-key pair Jaccard similarities via sparse-set
     intersection: explode distinct shingles, equi-join on
@@ -335,9 +329,7 @@ def jaccard_within_key(
     under-counted for pairs sharing capped shingles, and pairs whose
     ONLY shared shingles are capped disappear.  ``None`` = exact.
     """
-    inter = _sparse_pair_counts(
-        df, id_col, text_col, key_col, shingle_n, df_max, materialize_mode
-    )
+    inter = _sparse_pair_counts(df, id_col, text_col, key_col, shingle_n, df_max)
     return inter.select(
         "id_a",
         "id_b",
@@ -357,7 +349,6 @@ def containment_pairs(
     threshold: float = 0.6,
     shingle_n: int = 3,
     df_max: int | None = None,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Asymmetric near-duplication: shingle-set containment
     ``C = |S_a ∩ S_b| / min(|S_a|, |S_b|)`` — the quote-inclusion /
@@ -375,9 +366,7 @@ def containment_pairs(
     is the doc with the SMALLER shingle set (ties keep the lower id
     first — deterministic).
     """
-    inter = _sparse_pair_counts(
-        df, id_col, text_col, key_col, shingle_n, df_max, materialize_mode
-    )
+    inter = _sparse_pair_counts(df, id_col, text_col, key_col, shingle_n, df_max)
     small_first = F.col("n_a") <= F.col("n_b")
     return (
         inter.select(
@@ -568,7 +557,6 @@ def simhash_near_dups(
     bits: int = 64,
     bands: int = 4,
     max_hamming: int = 3,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Near-duplicate pairs by banded SimHash (Manku/Jain/Sarma,
     WWW'07 — the production web-dedup construction): fingerprint each
@@ -600,12 +588,8 @@ def simhash_near_dups(
     """
     _check_band_knobs(bits, bands, max_hamming)
     # materialize the fingerprint index ONCE (16 bytes/doc): both
-    # sides of the band self-join derive from it, and Catalyst does
-    # not reuse the aggregation subtree across the join branches when
-    # AQE broadcasts one side (0 ReusedExchange observed) — without
-    # this the corpus is tokenized and fingerprinted twice (policy
-    # per materialize_mode, operators/materialize.py)
-    sh = materialize(simhash_agg(df, id_col, text_col, bits), materialize_mode)
+    # sides of the band self-join derive from it
+    sh = materialize(simhash_agg(df, id_col, text_col, bits))
     banded = _band_slices(sh, id_col, bits, bands)
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (
@@ -639,7 +623,6 @@ def simhash_novel(
     bits: int = 64,
     bands: int = 4,
     max_hamming: int = 3,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Incremental-ingest novelty filter: flag each BATCH document as
     novel iff no EXISTING-corpus document is within ``max_hamming`` of
@@ -652,11 +635,10 @@ def simhash_novel(
     (``max_hamming < bands``).  The join is batch-vs-corpus — two
     distinct inputs, so the CORPUS pipeline runs once with no
     materialization; the BATCH fingerprints feed both the band join
-    and the final verdict join, so they materialize once (policy per
-    ``materialize_mode``).  Only band slices + one fingerprint per doc
-    flow through the join: at 100 TB the corpus side is a
-    16-byte-per-doc index you keep warm, never the text.  Batch docs
-    matching only
+    and the final verdict join, so they materialize once.  Only band
+    slices + one fingerprint per doc flow through the join: at 100 TB
+    the corpus side is a 16-byte-per-doc index you keep warm, never
+    the text.  Batch docs matching only
     THEMSELVES cannot occur (the sides are disjoint by contract; ids
     shared across sides are the caller's bug and will flag non-novel,
     which is the safe direction for dedup).
@@ -666,7 +648,6 @@ def simhash_novel(
     csh = simhash_agg(corpus, id_col, text_col, bits)
     return simhash_novel_against_index(
         csh, batch, id_col, text_col, bits, bands, max_hamming,
-        materialize_mode,
     )
 
 
@@ -678,7 +659,6 @@ def simhash_novel_against_index(
     bits: int = 64,
     bands: int = 4,
     max_hamming: int = 3,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """:func:`simhash_novel` against a PRE-COMPUTED fingerprint index
     ``(id_col, simhash)`` — the form a continuously-ingesting corpus
@@ -689,9 +669,7 @@ def simhash_novel_against_index(
     :func:`simhash_novel` (which delegates here after fingerprinting
     its corpus side)."""
     _check_band_knobs(bits, bands, max_hamming)
-    bsh = materialize(
-        simhash_agg(batch, id_col, text_col, bits), materialize_mode
-    )
+    bsh = materialize(simhash_agg(batch, id_col, text_col, bits))
     csh = index
     matched = (
         _band_slices(bsh, id_col, bits, bands)
@@ -1203,7 +1181,6 @@ def lsh_incremental_join(
     shingle_n: int = 5,
     t_num: int = 7,
     t_den: int = 10,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Incremental (batch-vs-corpus) MinHash-LSH near-dup join — the
     shape production dedup actually runs daily: not "dedupe the
@@ -1231,10 +1208,9 @@ def lsh_incremental_join(
     banding collision probability is the standard S-curve).
 
     The verify side shingles only CANDIDATE corpus docs — the
-    candidate frame (batch-bounded, materialized once per
-    ``materialize_mode``) semi-prunes the corpus BEFORE the shingle
-    arrays are built, the same idiom the index-served variant uses
-    (``streaming/lsh_index.py``): verification cost is candidates x
+    candidate frame (batch-bounded, materialized once) semi-prunes the
+    corpus BEFORE the shingle arrays are built, the same idiom the
+    index-served variant uses (``streaming/lsh_index.py``): verification cost is candidates x
     doc length, never corpus x doc length.  (The corpus is still
     scanned once for banding — that scan is the candidate generator —
     but its heavy shingle-array build no longer runs for
@@ -1256,8 +1232,7 @@ def lsh_incremental_join(
             F.col(f"b.{id_col}").alias("batch_doc"),
             F.col(f"c.{id_col}").alias("corpus_doc"),
         )
-        .distinct(),
-        materialize_mode,
+        .distinct()
     )
     corpus_cand = corpus.join(
         F.broadcast(cand.select(F.col("corpus_doc").alias(id_col)).distinct()),
@@ -1667,7 +1642,6 @@ def boundary_stitch_pairs(
     k: int = 4,
     min_overlap: int = 8,
     max_df: int | None = None,
-    materialize_mode: str = "eager",
     broadcast_anchors: bool | None = None,
     approx_docs: int | None = None,
 ) -> DataFrame:
@@ -1712,7 +1686,7 @@ def boundary_stitch_pairs(
     correctness (both joins produce identical pairs).
     ``broadcast_anchors`` remains as an explicit override
     (``True``/``False``); ``None`` means auto.  The tokenized base
-    frame is materialized ONCE (policy per ``materialize_mode``): it
+    frame is materialized ONCE: it
     feeds the postings, the anchors and both verification sides, and
     every consumer above it is shuffle-free map work (explode + md5 +
     broadcast probe), so the one checkpoint caps the whole plan at
@@ -1745,8 +1719,7 @@ def boundary_stitch_pairs(
         fan_out(docs.select(F.col(id_col), F.col(text_col)), by=id_col)
         .select(F.col(id_col).alias("__id"), TX.tokens(text_col).alias("__t"))
         .withColumn("__n", F.size("__t"))
-        .filter(F.col("__n") >= k),
-        materialize_mode,
+        .filter(F.col("__n") >= k)
     )
     gram = lambda t, i: F.md5(F.array_join(F.slice(t, i, k), " "))  # noqa: E731
     post = base.select(
@@ -1812,7 +1785,6 @@ def stitch_merge(
     k: int = 4,
     min_overlap: int = 8,
     max_df: int | None = None,
-    materialize_mode: str = "eager",
     approx_docs: int | None = None,
 ) -> DataFrame:
     """Repair the stitches :func:`boundary_stitch_pairs` names: merge
@@ -1845,10 +1817,9 @@ def stitch_merge(
         k=k,
         min_overlap=min_overlap,
         max_df=max_df,
-        materialize_mode=materialize_mode,
         approx_docs=approx_docs,
     )
-    st = materialize(st, materialize_mode)
+    st = materialize(st)
     lu = (
         st.groupBy("left_doc")
         .agg(F.count(F.lit(1)).alias("__nl"))

@@ -9,11 +9,12 @@ the full index-build pipeline.  Materializing the index once —
 "build the index once, probe many", the shape every LSH/IVF system
 uses — removed 6-7x of redundant work at 10x data.
 
-HOW to materialize is a trade the operator cannot make for every
-caller, so it is a parameter (``materialize_mode=`` on the public
-operators) resolved here:
+HOW to materialize is one session-wide policy, read from the frame's
+session on every call, so one setting covers every operator::
 
-``"eager"`` (default)
+    spark.conf.set("spark.graft.materialize", "persist")
+
+``"eager"`` (default, key unset)
     ``localCheckpoint(eager=True)`` — the fastest path and the one all
     benchmarks/oracles run.  Costs: a Spark job fires at
     plan-CONSTRUCTION time (callers that never execute the plan still
@@ -27,20 +28,24 @@ operators) resolved here:
     Lineage is retained, so an executor loss recomputes the lost
     blocks instead of failing — the fault-tolerant choice for long
     multi-hour jobs on preemptible hardware.  Still pays the
-    construction-time job; the caller owns ``unpersist()`` if the
-    session lives on.
+    construction-time job; the caller owns ``unpersist()`` (or
+    ``spark.catalog.clearCache()``) if the session lives on.
 
 ``"lazy"``
     No materialization.  Construction is free; the caller either
     accepts branch recomputation or persists/checkpoints the result
     frame itself (e.g. to chain several operators over one shared
     index).
+
+The policy is physical only: every value returns the same rows.
 """
 
 from __future__ import annotations
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+CONF_KEY = "spark.graft.materialize"
 
 EAGER = "eager"
 PERSIST = "persist"
@@ -49,8 +54,9 @@ LAZY = "lazy"
 MODES = (EAGER, PERSIST, LAZY)
 
 
-def materialize(df: DataFrame, mode: str = EAGER) -> DataFrame:
-    """Materialize an operator-internal index per the policy above."""
+def materialize(df: DataFrame) -> DataFrame:
+    """Materialize an operator-internal index per the session's policy."""
+    mode = df.sparkSession.conf.get(CONF_KEY, EAGER)
     if mode == EAGER:
         return df.localCheckpoint()
     if mode == PERSIST:
@@ -60,5 +66,6 @@ def materialize(df: DataFrame, mode: str = EAGER) -> DataFrame:
     if mode == LAZY:
         return df
     raise ValueError(
-        f"unknown materialize mode {mode!r}: expected one of {MODES}"
+        f"unknown materialize mode {mode!r} in {CONF_KEY}: "
+        f"expected one of {MODES}"
     )

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -556,6 +558,7 @@ def audio_frame_energy(
     wants is one float op away).  Rows whose payload fails to decode
     emit no frames — on mixed 100 TB media a corrupt file must not
     kill the stage (same contract as :func:`decoded_stats`)."""
+
     def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -1000,7 +1003,7 @@ def dhash_bands_from_pgm(media: DataFrame) -> DataFrame:
 
 
 def dhash_near_dups(
-    hashes: DataFrame, max_hamming: int = 3, materialize_mode: str = "eager"
+    hashes: DataFrame, max_hamming: int = 3
 ) -> DataFrame:
     """Banded Hamming self-join over dHash values — the perceptual
     counterpart of ``dedupe.simhash_near_dups``, pigeonhole-EXACT for
@@ -1023,13 +1026,10 @@ def dhash_near_dups(
             f"max_hamming={max_hamming} breaks the pigeonhole guarantee "
             f"with {DHASH_BANDS} bands (needs max_hamming < bands)"
         )
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
 
-    # materialize the DECODED hash frame (five ints per image) before
-    # the self-join: its upstream is the synthesis + Arrow decode
-    # pipeline, which a self-join would otherwise run once per branch
-    # (the round-7 ReusedExchange finding)
-    h = materialize(hashes.filter(F.col("decode_ok")), materialize_mode)
+    # materialize the DECODED hash frame (five ints per image): the
+    # self-join would otherwise run the synthesis + decode per branch
+    h = materialize(hashes.filter(F.col("decode_ok")))
     bands = h.select(
         "media_id",
         *[f"b{j}" for j in range(DHASH_BANDS)],
@@ -1242,7 +1242,6 @@ def audio_segment_pairs(
     min_frames: int = 8,
     frame_samples: int = SPEECH_SAMPLES_PER_TOKEN,
     max_df: int | None = None,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Shared audio SEGMENTS across documents — the Shazam-shaped
     dedup primitive: fingerprint every ``k`` consecutive frame
@@ -1283,7 +1282,6 @@ def audio_segment_pairs(
         min_frames=min_frames,
         max_df=max_df,
         out_len="seg_frames",
-        materialize_mode=materialize_mode,
     )
 
 
@@ -1294,7 +1292,7 @@ def _posting_run_pairs(
     min_frames: int,
     max_df: int | None,
     out_len: str,
-    materialize_mode: str = "eager",
+    materialize_pos: bool = True,
 ) -> DataFrame:
     """Shared tail of the media-segment matchers: positional gram
     postings ``(media_id, __pos 1-based, __h)`` -> optional ``max_df``
@@ -1313,11 +1311,13 @@ def _posting_run_pairs(
     pipeline runs once per branch.  ``max_df`` counts DISTINCT
     DOCUMENTS per gram (the span operator's semantics): a segment
     repeated WITHIN one document — looped silence — must not inflate
-    a gram toward the cap."""
+    a gram toward the cap.  ``materialize_pos=False`` skips the
+    materialization for postings whose branches re-read a parquet scan
+    instead of a decode pipeline."""
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import dedupe
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
 
-    pos = materialize(pos, materialize_mode)
+    if materialize_pos:
+        pos = materialize(pos)
     if max_df is not None:
         # anti-join against the ABOVE-cap grams, not semi against the
         # keep set: the drop side is the boilerplate TAIL (bounded by
@@ -1623,7 +1623,6 @@ def video_scene_pairs(
     k: int = 4,
     min_frames: int = 8,
     max_df: int | None = None,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Shared video SCENES across documents — the video leg of the
     segment-dedup family: fingerprint every ``k`` consecutive frame
@@ -1652,7 +1651,6 @@ def video_scene_pairs(
         min_frames=min_frames,
         max_df=max_df,
         out_len="scene_frames",
-        materialize_mode=materialize_mode,
     )
 
 

@@ -279,7 +279,6 @@ def lsh_bucket_topk(
     k: int = 5,
     n_planes: int = 4,
     n_tables: int = 4,
-    materialize_mode: str = "eager",
     scorer: str | None = None,
 ) -> DataFrame:
     """Approximate all-pairs top-k via multi-table hyperplane LSH.
@@ -291,10 +290,9 @@ def lsh_bucket_topk(
     candidate pair set, then ranks — comparisons and shuffle volume
     scale with bucket occupancy, not corpus^2.
 
-    ``materialize_mode`` picks the index-materialization policy
-    (``operators/materialize.py``: eager localCheckpoint / persist /
-    lazy); it only applies to the exact path — blocked scoring
-    consumes the index exactly once, so nothing is materialized.
+    The index is materialized (``operators/materialize.py``) only on
+    the exact path — blocked scoring consumes the index exactly once,
+    so nothing is materialized.
 
     ``scorer='blocked'`` scores each (table, bucket) cell as one
     dense matmul via ``applyInPandas`` (:func:`_blocked_bucket_topk`)
@@ -325,13 +323,13 @@ def lsh_bucket_topk(
     # same index-materialization rule as embedding_near_dup_pairs:
     # materialize base + the table index (ids-only when scoring
     # re-joins base) so neither pipeline re-runs per self-join branch
-    base = materialize(_unit_base(df, id_col, vec_col), materialize_mode)
+    base = materialize(_unit_base(df, id_col, vec_col))
     tabled = _multi_table_buckets(base, id_col, dim, n_planes, n_tables)
     if n_tables >= _DEDUP_BEFORE_SCORE_MIN_TABLES:
         tabled = tabled.select(
             F.col(id_col), F.col("table_id"), F.col("bucket")
         )
-    tabled = materialize(tabled, materialize_mode)
+    tabled = materialize(tabled)
     a, c = tabled.alias("a"), tabled.alias("c")
     join_cond = (
         (F.col("a.table_id") == F.col("c.table_id"))
@@ -408,7 +406,7 @@ def build_ivf_centroids(
     of partitioning and replayable by any engine (same idiom as the
     md5-bucket splits in ``operators/dataprep.py``).  Selection is one
     TakeOrdered pass (per-partition top-cap heaps, never a full sort);
-    the sample is localCheckpoint-ed so each Lloyd iteration re-scans
+    the sample is materialized so each Lloyd iteration re-scans
     cap rows, not the corpus.  Seeds are the first K sample rows in
     the same (md5, id) order.  The full corpus is only ever assigned
     ONCE, by the caller, after training (``ivf_topk``).
@@ -488,11 +486,10 @@ def build_ivf_centroids(
             .collect()
         ]
         return _numpy_lloyd(rows, min(k, len(rows)), iterations)
-    sample = (
+    sample = materialize(
         df.select(F.col(id_col), V.as_double(vec_col).alias("__tv"))
         .orderBy(*order)
         .limit(cap)
-        .localCheckpoint()
     )
     centroids = [
         [float(x) for x in r["__tv"]]
@@ -628,7 +625,6 @@ def ivf_topk(
     nprobe: int = 2,
     train_per_cluster: int = IVF_TRAIN_PER_CLUSTER,
     hierarchical: bool | None = None,
-    materialize_mode: str = "eager",
     scorer: str | None = None,
 ) -> DataFrame:
     """IVF approximate all-pairs top-k: corpus is partitioned by a
@@ -685,7 +681,7 @@ def ivf_topk(
     # ORDER BY dist, c.  ``materialize`` is the index materialization
     # every IVF system performs — build once, probe many; without it
     # the corpus and query branches of the self-join would each
-    # recompute the distance pass (policy per materialize_mode).
+    # recompute the distance pass.
     base = _with_unit(
         # the index build is a per-row distance pass — balance a
         # compact scan across cores first (no-op when the scan is
@@ -728,8 +724,7 @@ def ivf_topk(
             lambda s: s["c"].cast("int"),
         )
         index = materialize(
-            routed.select(F.col(id_col), probes.alias("__probes"), F.col("nv")),
-            materialize_mode,
+            routed.select(F.col(id_col), probes.alias("__probes"), F.col("nv"))
         )
     else:
         dists = _centroid_dists(F.col("v"), centroids)
@@ -743,8 +738,7 @@ def ivf_topk(
             lambda s: s["c"].cast("int"),
         )
         index = materialize(
-            base.select(F.col(id_col), probes.alias("__probes"), F.col("nv")),
-            materialize_mode,
+            base.select(F.col(id_col), probes.alias("__probes"), F.col("nv"))
         )
     if scorer == "blocked":
         scored = _blocked_cluster_topk(index, id_col, k)
@@ -1068,7 +1062,6 @@ def embedding_near_dup_pairs(
     dim: int = 64,
     n_planes: int = 8,
     n_tables: int = 16,
-    materialize_mode: str = "eager",
     scorer: str | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b) above a threshold.
@@ -1119,10 +1112,8 @@ def embedding_near_dup_pairs(
             f"unknown scorer {scorer!r}: expected 'exact' or 'blocked'"
         )
     # materialize the normalized base once — it feeds the bucketing
-    # AND the post-dedup scoring re-join, and Catalyst does not reuse
-    # the subtree across self-join branches under AQE broadcasts
-    # (policy per materialize_mode, operators/materialize.py)
-    base = materialize(_unit_base(df, id_col, vec_col), materialize_mode)
+    # AND the post-dedup scoring re-join
+    base = materialize(_unit_base(df, id_col, vec_col))
     tabled = _multi_table_buckets(base, id_col, dim, n_planes, n_tables)
     if n_tables >= _DEDUP_BEFORE_SCORE_MIN_TABLES:
         # high-duplication regime, exact results: the candidate pair
@@ -1140,7 +1131,7 @@ def embedding_near_dup_pairs(
         )
         scored = _score_unique_pairs(pairs, base, id_col, "id_a", "id_b")
         return scored.filter(F.col("cos_sim") >= threshold)
-    tabled = materialize(tabled, materialize_mode)
+    tabled = materialize(tabled)
     a, b = tabled.alias("a"), tabled.alias("b")
     join_cond = (
         (F.col("a.table_id") == F.col("b.table_id"))

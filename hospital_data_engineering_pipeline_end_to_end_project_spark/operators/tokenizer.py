@@ -89,7 +89,6 @@ def bpe_train_steps(
     text_col: str,
     steps: int = 3,
     top: int = 5,
-    materialize_mode: str = "eager",
 ) -> DataFrame:
     """Run the first ``steps`` BPE merges over the corpus; return the
     top-``top`` pair counts of EACH step (``step``, ``a``, ``b``,
@@ -103,7 +102,6 @@ def bpe_train_steps(
     """
     steps_df, _vocab = bpe_train_from_vocab(
         word_freqs(df, text_col), steps=steps, top=top,
-        materialize_mode=materialize_mode,
     )
     return steps_df
 
@@ -134,7 +132,6 @@ def bpe_train_from_vocab(
     vocab: DataFrame,
     steps: int = 3,
     top: int = 5,
-    materialize_mode: str = "eager",
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``steps`` BPE merges over a ``(word, freq)`` vocabulary
     frame (however it was produced — one corpus pass, or a served
@@ -150,7 +147,7 @@ def bpe_train_from_vocab(
     words = vocab.withColumn("_sym", _spaced_symbols(F.col("word"))).select(
         "word", "freq", "_sym"
     )
-    words = materialize(words, materialize_mode)
+    words = materialize(words)
 
     out: DataFrame | None = None
     for step in range(1, steps + 1):
@@ -189,7 +186,7 @@ def bpe_train_from_vocab(
             )
             .select("word", "freq", "_sym")
         )
-        words = materialize(merged, materialize_mode)
+        words = materialize(merged)
     return out, words.select("word", "freq", F.col("_sym").alias("sym"))
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import components, dataprep, dedupe
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
 from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.data_prep import TOKS_SQL, _shingles_sql
 from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.llm_ops import Q25_SQL, Q27_SQL
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import load_table
@@ -349,13 +350,15 @@ def q103_mergeable_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # direct one; a production pipeline computes only the mergeable
     # per-part sketches) — materialize it once so the corpus is
     # shingled once, not twice
-    tok = fan_out(d.select("source", "text")).select(
-        "source",
-        F.explode(F.array_distinct(TX.shingles("text", 3))).alias("t"),
-    ).localCheckpoint()
+    tok = materialize(
+        fan_out(d.select("source", "text")).select(
+            "source",
+            F.explode(F.array_distinct(TX.shingles("text", 3))).alias("t"),
+        )
+    )
     # the per-source sketch feeds the per-source estimates AND the
     # merge (two consumers) — materialized too (parts x k tiny rows)
-    sk = metrics.kmv_bottom_k(tok, ["source"], "t", k=Q103_K).localCheckpoint()
+    sk = materialize(metrics.kmv_bottom_k(tok, ["source"], "t", k=Q103_K))
     per_source = metrics.kmv_estimate(sk, ["source"], k=Q103_K).select(
         F.col("source").alias("scope"), "approx_distinct"
     )
@@ -560,7 +563,7 @@ def q106_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the sketch feeds per-source estimates AND both sides of the
     # pair union (three consumers) — materialize the parts x k rows
-    sk = metrics.kmv_bottom_k(tok, ["source"], "t", k=Q103_K).localCheckpoint()
+    sk = materialize(metrics.kmv_bottom_k(tok, ["source"], "t", k=Q103_K))
     return metrics.kmv_pair_overlap(sk, "source", k=Q103_K)
 
 
@@ -787,9 +790,11 @@ def q112_quantile_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-type sketch feeds its own estimates AND the merged
     # global construction (two consumers) — materialize the
     # |types| x k rows once
-    sk = metrics.hash_sample_bottom_k(
-        e, ["event_type"], "event_id", "value", k=Q112_K
-    ).localCheckpoint()
+    sk = materialize(
+        metrics.hash_sample_bottom_k(
+            e, ["event_type"], "event_id", "value", k=Q112_K
+        )
+    )
     per = metrics.sample_quantiles(
         sk, ["event_type"], "value", ps=Q112_PS, k=Q112_K
     ).select(

@@ -107,7 +107,6 @@ def segments_from_index(
     k: int = 4,
     min_frames: int = 8,
     max_df: int | None = None,
-    materialize_mode: str = "lazy",
 ) -> DataFrame:
     """Shared audio segments served FROM the stored postings — the
     match stage of
@@ -118,10 +117,10 @@ def segments_from_index(
     at the same knobs by construction: the stored rows are exactly
     its post-decode postings.
 
-    ``materialize_mode`` defaults to ``lazy`` here (unlike the
-    recomputing form's eager checkpoint): the self-join's branches
-    re-read a PARQUET SCAN, not a decode pipeline, so the checkpoint
-    would cost more than the second scan it saves."""
+    The postings are not materialized here (unlike the recomputing
+    form): the self-join's branches re-read a PARQUET SCAN, not a
+    decode pipeline, so a checkpoint would cost more than the second
+    scan it saves."""
     pos = read_audio_index(spark, out_dir).select(
         "media_id",
         F.col("pos").alias("__pos"),
@@ -133,7 +132,7 @@ def segments_from_index(
         min_frames=min_frames,
         max_df=max_df,
         out_len="seg_frames",
-        materialize_mode=materialize_mode,
+        materialize_pos=False,
     )
 
 

@@ -160,25 +160,15 @@ def make_novelty_batch_ingestor(
     stream's lifetime (``None`` disables).
     """
     root = store.root
-    ledger = os.path.join(root, "silver", f"{INDEX_DIR}__applied")
-
-    def _write_marker(marker: str) -> None:
-        os.makedirs(ledger, exist_ok=True)
-        with open(marker, "w"):
-            pass
+    ledger = shardstore.AppliedLedger(root, INDEX_DIR)
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger, f"batch-{batch_id}")
-        if skip_applied and os.path.exists(marker):
-            return
         shard = index_shard_path(root, batch_id)
-        if skip_applied and os.path.exists(
-            os.path.join(shard, "_SUCCESS")
+        # the commit landed when this batch's shard is committed: the
+        # shard IS the epoch
+        if skip_applied and ledger.applied(
+            batch_id, lambda: os.path.exists(os.path.join(shard, "_SUCCESS"))
         ):
-            # crash landed between the shard commit and the marker on
-            # a previous run of this very batch — the shard IS the
-            # epoch: restore the marker and skip the re-apply
-            _write_marker(marker)
             return
         if os.path.isdir(shard) and not os.path.exists(
             os.path.join(shard, "_SUCCESS")
@@ -224,7 +214,7 @@ def make_novelty_batch_ingestor(
             shard,
         )
         if skip_applied:
-            _write_marker(marker)
+            ledger.mark(batch_id)
         if compact_every is not None:
             n_batch_shards = sum(
                 1

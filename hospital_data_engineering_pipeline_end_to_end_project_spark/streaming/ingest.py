@@ -20,8 +20,6 @@ over unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -135,29 +133,20 @@ def make_scd2_batch_merger(
       restores the missing marker, and skips the merge.  foreachBatch
       re-delivers only the LAST uncommitted batch, so the single
       epoch slot covers the whole window; no double-apply remains
-      even for wall-clock date functions.  Markers use local
-      filesystem semantics; a real cluster deployment backs the same
-      ledger with its DFS (or uses the Delta transaction log, where
-      MERGE makes the commit itself transactional).
+      even for wall-clock date functions.  The ledger is
+      ``shardstore.AppliedLedger`` (a Delta deployment uses the
+      transaction log instead, where MERGE makes the commit itself
+      transactional).
     """
     date_fn = processing_date_fn or (lambda batch_id: "2026-01-01")
-    ledger = os.path.join(store.root, "silver", f"{entity}__applied")
-
-    def _write_marker(marker: str) -> None:
-        os.makedirs(ledger, exist_ok=True)
-        with open(marker, "w"):
-            pass
+    ledger = shardstore.AppliedLedger(store.root, entity)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger, f"batch-{batch_id}")
-        if skip_applied and os.path.exists(marker):
-            return
-        if skip_applied and store.last_applied(entity) == batch_id:
-            # crash landed between state commit and marker write on a
-            # previous run of this very batch: the state already IS
-            # the post-batch state (its epoch says so) — restore the
-            # marker and skip the re-apply
-            _write_marker(marker)
+        # the commit landed when the state's own epoch IS this batch:
+        # it already is the post-batch state
+        if skip_applied and ledger.applied(
+            batch_id, lambda: store.last_applied(entity) == batch_id
+        ):
             return
         if batch_df.isEmpty():
             return
@@ -170,7 +159,7 @@ def make_scd2_batch_merger(
             entity, new_state, applied_batch=batch_id if skip_applied else None
         )
         if skip_applied:
-            _write_marker(marker)
+            ledger.mark(batch_id)
 
     return _merge
 

@@ -351,8 +351,8 @@ def dq_monitor_sink(
     )
 
 
-def read_dq_history(spark: SparkSession, out_dir: str) -> DataFrame | None:
+def read_dq_history(spark: SparkSession, out_dir: str) -> DataFrame:
     """The per-batch constraint series: union of committed report
     shards (reports are per-batch FACTS, not mergeable summaries —
     compaction, if ever needed, is the plain-union default)."""
-    return shardstore.read_shards(spark, out_dir)
+    return shardstore.require_shards(spark, out_dir, "DQ report")

@@ -289,6 +289,42 @@ def foreach_batch_sink(
 
 
 @dataclasses.dataclass(frozen=True)
+class AppliedLedger:
+    """Applied-batch ledger of an at-least-once ``foreachBatch`` sink:
+    one marker file per applied batch id under
+    ``<root>/silver/<name>__applied/``, so a replayed batch is skipped
+    outright.  Markers use local filesystem semantics; a cluster
+    deployment backs the same ledger with its DFS."""
+
+    root: str
+    name: str
+
+    def _marker(self, batch_id: int) -> str:
+        return os.path.join(
+            self.root, "silver", f"{self.name}__applied", f"batch-{batch_id}"
+        )
+
+    def applied(self, batch_id: int, landed: Callable[[], bool]) -> bool:
+        """Whether ``batch_id`` was already applied: its marker exists,
+        or ``landed()`` reports that the sink's own commit of this
+        batch landed before a crash cut off the marker write — the
+        marker is then restored."""
+        if os.path.exists(self._marker(batch_id)):
+            return True
+        if landed():
+            self.mark(batch_id)
+            return True
+        return False
+
+    def mark(self, batch_id: int) -> None:
+        """Record ``batch_id`` as applied (after the sink's commit)."""
+        marker = self._marker(batch_id)
+        os.makedirs(os.path.dirname(marker), exist_ok=True)
+        with open(marker, "w"):
+            pass
+
+
+@dataclasses.dataclass(frozen=True)
 class ShardIndex:
     """A per-batch shard store: ``postings(batch_df, batch_id, *cfg,
     **cfg_kw)`` builds one batch's rows (stamping ``batch_id`` as a

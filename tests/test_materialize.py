@@ -1,46 +1,65 @@
 """Index-materialization policy (operators/materialize.py).
 
-The self-joined operators materialize their internal index by policy:
-eager localCheckpoint (default, benchmark path), persist+count
-(fault-tolerant: lineage retained), or lazy (caller's choice).  Every
-mode must produce IDENTICAL results — the policy is purely physical.
+The self-joined operators materialize their internal index by the
+session's ``spark.graft.materialize`` policy: eager localCheckpoint
+(default, benchmark path), persist+count (fault-tolerant: lineage
+retained), or lazy (caller's choice).  Every mode must produce
+IDENTICAL results — the policy is purely physical.
 """
+
+from contextlib import contextmanager
 
 import pytest
 from pyspark import StorageLevel
-from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import dedupe, similarity
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import (
+    CONF_KEY,
     EAGER,
     LAZY,
     MODES,
     PERSIST,
     materialize,
 )
+from hospital_data_engineering_pipeline_end_to_end_project_spark.plans import registry
+from tests.conftest import SF_SMOKE
+from tests.oracle_harness import compare
+
+
+@contextmanager
+def policy(spark, mode):
+    """Run the block under ``mode``, then restore the default and drop
+    whatever a ``persist`` policy cached."""
+    spark.conf.set(CONF_KEY, mode)
+    try:
+        yield
+    finally:
+        spark.conf.unset(CONF_KEY)
+        spark.catalog.clearCache()
 
 
 def test_unknown_mode_rejected(spark):
-    with pytest.raises(ValueError, match="unknown materialize mode"):
-        materialize(spark.range(1), "teleport")
+    with policy(spark, "teleport"):
+        with pytest.raises(ValueError, match="unknown materialize mode"):
+            materialize(spark.range(1))
 
 
 def test_lazy_returns_input_unchanged(spark):
     df = spark.range(5)
-    assert materialize(df, LAZY) is df
+    with policy(spark, LAZY):
+        assert materialize(df) is df
 
 
 def test_persist_retains_lineage_and_caches(spark):
-    df = materialize(spark.range(10), PERSIST)
-    try:
+    with policy(spark, PERSIST):
+        df = materialize(spark.range(10))
         assert df.storageLevel == StorageLevel.MEMORY_AND_DISK
         assert df.count() == 10
-    finally:
-        df.unpersist()
 
 
 def test_eager_truncates_lineage(spark):
-    df = materialize(spark.range(10), EAGER)
+    with policy(spark, EAGER):
+        df = materialize(spark.range(10))
     assert df.count() == 10
     assert "Scan ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()
 
@@ -55,14 +74,10 @@ def test_simhash_near_dups_identical_across_modes(spark, mode):
         ],
         "doc_id long, text string",
     )
-    got = sorted(
-        map(
-            tuple,
-            dedupe.simhash_near_dups(
-                docs, "doc_id", "text", materialize_mode=mode
-            ).collect(),
+    with policy(spark, mode):
+        got = sorted(
+            map(tuple, dedupe.simhash_near_dups(docs, "doc_id", "text").collect())
         )
-    )
     baseline = sorted(
         map(tuple, dedupe.simhash_near_dups(docs, "doc_id", "text").collect())
     )
@@ -74,15 +89,42 @@ def test_lsh_topk_identical_across_modes(spark, mode):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(
         200
     )
-    got = sorted(
-        map(
-            tuple,
-            similarity.lsh_bucket_topk(
-                e, k=3, materialize_mode=mode
-            ).collect(),
-        )
-    )
+    with policy(spark, mode):
+        got = sorted(map(tuple, similarity.lsh_bucket_topk(e, k=3).collect()))
     baseline = sorted(
         map(tuple, similarity.lsh_bucket_topk(e, k=3).collect())
     )
     assert got == baseline and got
+
+
+#: catalog queries that reach a materialized index (q26 banding, q61
+#: connected components, q86 simhash, q95 boilerplate shingles, q99
+#: triangles, q103/q112 sketches)
+POLICY_QUERIES = (
+    "q26_jaccard_pairs",
+    "q61_dup_clusters",
+    "q86_simhash_near_dups",
+    "q95_boilerplate_stats",
+    "q99_triangle_counts",
+    "q103_mergeable_sketches",
+    "q112_quantile_sketches",
+)
+
+
+@pytest.mark.parametrize("mode", [PERSIST, LAZY])
+def test_policy_keeps_oracle_parity(spark, mode):
+    queries, oracles = registry.queries(), registry.oracle_sql()
+    with policy(spark, mode):
+        for name in POLICY_QUERIES:
+            compare(spark, name, queries[name], oracles[name], SF_SMOKE)
+        plan = (
+            queries["q86_simhash_near_dups"](spark, SF_SMOKE)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+    # the policy reached the operator: a persisted index scans the
+    # cache, a lazy one is recomputed in-plan; neither is a checkpoint
+    assert "Scan ExistingRDD" not in plan
+    if mode == PERSIST:
+        assert "InMemoryTableScan" in plan

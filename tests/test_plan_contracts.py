@@ -355,17 +355,15 @@ def test_boundary_stitch_anchor_is_broadcast(plans):
 
 
 def test_gate_lists_partition_catalog():
-    """_GATE_FRONT and _GATE_BACK must exactly partition the catalog:
-    the front is the 50-slot gate window, and any name in neither
-    list would land between them (in-window by default for arrivals,
-    but a FORGOTTEN rotation entry must fail loudly, not silently
-    reorder)."""
-    names = set(registry.queries())
-    front = set(registry._GATE_FRONT)
-    back = set(registry._GATE_BACK)
-    assert len(registry._GATE_FRONT) == 50
-    assert not front & back, front & back
-    assert front | back == names, (names - front - back, (front | back) - names)
+    """_GATE_FRONT is the 50-slot gate window: 50 distinct catalog
+    names, and exactly the first 50 keys of ``queries()`` in order (a
+    renamed or dropped front entry would let another query drift into
+    the window)."""
+    names = list(registry.queries())
+    front = registry._GATE_FRONT
+    assert len(front) == 50 and len(set(front)) == 50
+    assert set(front) <= set(names), set(front) - set(names)
+    assert names[:50] == list(front)
 
 
 def test_priority_returns_semi_join_never_materializes_lines(plans):

@@ -165,3 +165,25 @@ def test_foreach_batch_is_attached_only_in_shardstore():
                 if ".writeStream.foreachBatch(" in fh.read():
                     hits.append(os.path.relpath(path, pkg))
     assert hits == [os.path.join("streaming", "shardstore.py")]
+
+
+def test_local_checkpoint_only_in_materialize():
+    """Every index checkpoint goes through ``materialize()``, so the
+    session's policy covers it; the only raw ``localCheckpoint`` calls
+    outside ``operators/materialize.py`` are the two per-round lineage
+    caps of ``components.connected_components``."""
+    pkg = os.path.dirname(os.path.dirname(shardstore.__file__))
+    hits = {}
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                n = fh.read().count(".localCheckpoint(")
+            if n:
+                hits[os.path.relpath(path, pkg)] = n
+    assert hits == {
+        os.path.join("operators", "materialize.py"): 1,
+        os.path.join("operators", "components.py"): 2,
+    }

@@ -482,6 +482,8 @@ def test_merged_readers_raise_clearly_on_empty_store(spark, tmp_path):
         monitor.read_merged_countmin(spark, empty)
     with pytest.raises(FileNotFoundError, match="nothing-here"):
         monitor.read_merged_cusum(spark, empty, "g")
+    with pytest.raises(FileNotFoundError, match="nothing-here"):
+        monitor.read_dq_history(spark, empty)
 
 
 # ---------------------------------------------------------------------------
