@@ -2093,21 +2093,6 @@ def _pq_codes_blas(
 # counterpart of PQ-ADC
 # ---------------------------------------------------------------------------
 
-#: Auto-routing threshold for the int8 SDC scorer: with
-#: ``scorer=None``, :func:`int8_sdc_topk` switches from the
-#: expression path (per-pair interpreted ``zip_with`` fold) to the
-#: Arrow-batched integer-gemm kernel once the broadcast query side
-#: reaches this many rows.  Unlike every float fast path in this
-#: module the two routes are BIT-IDENTICAL (the kernel only computes
-#: the integer dot matrix; all float scoring stays in one shared
-#: Spark expression), so the threshold is purely a latency crossover.
-#: MEASURED (50k-vector corpus, local[32], min-of-2): the gemm wins
-#: or ties at EVERY query count — nq=2: 1.11 s vs 1.33 s, nq=8:
-#: 0.92 vs 0.97, nq=64: 1.06 vs 1.66, nq=256: 1.70 vs 3.78 — so the
-#: auto route always takes it; ``scorer='expr'`` remains the
-#: replayable reference path (and the empty-query fallback).
-INT8_SCORER_AUTO_MIN_QUERIES = 1
-
 
 def int8_quantize(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Per-vector absmax int8 quantization (the q58 storage scheme,
@@ -2250,9 +2235,18 @@ def int8_sdc_topk(
         F.col("__n").alias("__n_q"),
         F.col("__qv").alias("__qv_q"),
     )
+    # Auto route: the Arrow-batched integer-gemm kernel.  Unlike every
+    # float fast path in this module the two routes are BIT-IDENTICAL
+    # (the kernel only computes the integer dot matrix; all float
+    # scoring stays in one shared Spark expression), so the choice is
+    # purely a latency crossover.  MEASURED (50k-vector corpus,
+    # local[32], min-of-2): the gemm wins or ties at EVERY query count
+    # — nq=2: 1.11 s vs 1.33 s, nq=8: 0.92 vs 0.97, nq=64: 1.06 vs
+    # 1.66, nq=256: 1.70 vs 3.78 — so no query-count probe is needed;
+    # ``scorer='expr'`` remains the replayable reference path and the
+    # empty-query fallback below.
     if scorer is None:
-        nq = queries.limit(INT8_SCORER_AUTO_MIN_QUERIES + 1).count()
-        scorer = "blas" if nq >= INT8_SCORER_AUTO_MIN_QUERIES else "expr"
+        scorer = "blas"
     if scorer not in ("expr", "blas"):
         raise ValueError(f"unknown int8 scorer {scorer!r}")
     if scorer == "blas":

@@ -76,19 +76,22 @@ def _first_data_file(path: str) -> str | None:
     return None
 
 
-def _footer_schema(path: str) -> T.StructType | None:
-    """The Spark schema stored in the first data file's footer, read
-    driver-side with pyarrow; ``None`` when there is no local data
-    file, no pyarrow or no Spark schema in the footer."""
-    if not os.path.isdir(path):
+def _footer_schema(paths: tuple[str, ...]) -> T.StructType | None:
+    """The Spark schema stored in the footer of the file Spark's own
+    inference reads (the first data file in path order across
+    ``paths``), read driver-side with pyarrow; ``None`` when a path is
+    not a local directory, there is no data file, no pyarrow or no
+    Spark schema in the footer."""
+    if not all(os.path.isdir(p) for p in paths):
         return None
     try:
         import pyarrow.parquet as pq
     except ImportError:
         return None
-    first = _first_data_file(path)
-    if first is None:
+    files = [f for f in map(_first_data_file, paths) if f is not None]
+    if not files:
         return None
+    first = min(files, key=os.path.abspath)
     try:
         meta = pq.read_metadata(first).metadata or {}
     except (OSError, ValueError):
@@ -98,8 +101,8 @@ def _footer_schema(path: str) -> T.StructType | None:
     return T.StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` without Spark's schema-inference
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without Spark's schema-inference
     job.
 
     Without a schema, Spark reads the schema with a one-task job over
@@ -108,13 +111,13 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     read here on the driver and handed over with ``.schema(...)``.
     Partition columns are not in the footer; Spark still discovers
     them from the directory names, with the same types as before.
-    Falls back to plain ``spark.read.parquet`` when the path is not a
+    Falls back to plain ``spark.read.parquet`` when a path is not a
     local directory, pyarrow is missing, or the footer has no Spark
     schema (a file another writer produced)."""
-    schema = _footer_schema(path)
+    schema = _footer_schema(paths)
     if schema is None:
-        return spark.read.parquet(path)
-    return spark.read.schema(schema).parquet(path)
+        return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def ts_us_col(df: DataFrame, ts_col: str = "ts") -> "F.Column":

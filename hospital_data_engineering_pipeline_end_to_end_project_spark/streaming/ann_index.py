@@ -56,6 +56,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import read_parquet
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import shardstore
 
 #: atomic store metadata: {"epoch": E, "centroids": [[...], ...]}
@@ -355,7 +356,7 @@ def retrain_ivf_index(
     if not shards:
         raise FileNotFoundError(f"no committed posting shards under {old_root!r}")
     n = max(nn for _, nn, _ in shards)
-    postings = spark.read.parquet(*[p for _, _, p in shards])
+    postings = read_parquet(spark, *[p for _, _, p in shards])
     new_cents = build_ivf_centroids(
         postings, vec_col, id_col, k=k, iterations=iterations
     )
@@ -398,7 +399,7 @@ def retrain_ivf_index(
             break
         for m in sorted(set(late) - (prev_late or set())):
             moved = assign_ivf_cluster(
-                spark.read.parquet(late[m]).drop("cluster"),
+                read_parquet(spark, late[m]).drop("cluster"),
                 new_cents,
                 vec_col=vec_col,
             ).withColumn("batch_id", F.col("batch_id").cast("long"))

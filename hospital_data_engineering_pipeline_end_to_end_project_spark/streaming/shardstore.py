@@ -68,6 +68,9 @@ from pyspark.sql import functions as F
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import (
     run_concurrently,
 )
+from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import (
+    read_parquet,
+)
 
 #: recognized shard-dir prefixes: per-batch shards under either naming
 #: convention, and the compacted-merge dir
@@ -129,11 +132,12 @@ def active_shard_dirs(root: str) -> list[tuple[str, int, str]]:
 def read_shards(spark: SparkSession, root: str) -> DataFrame | None:
     """Union of the active committed shards (explicit paths — never a
     glob that could pick up a partially-written dir); ``None`` when no
-    committed shard exists yet."""
+    committed shard exists yet.  Shards are Spark-written, so the
+    schema comes from a footer, not from an inference job."""
     paths = [p for _, _, p in active_shard_dirs(root)]
     if not paths:
         return None
-    return spark.read.parquet(*paths)
+    return read_parquet(spark, *paths)
 
 
 def require_shards(spark: SparkSession, root: str, label: str) -> DataFrame:
@@ -258,7 +262,7 @@ def compact_shards(
         }
     n = max(nn for _, nn, _ in active)
     paths = [p for _, _, p in active]
-    merged = spark.read.parquet(*paths)
+    merged = read_parquet(spark, *paths)
     if fold is not None:
         merged = fold(merged)
     n_files = max(1, math.ceil(_dir_bytes(paths) / target_file_bytes))

@@ -187,3 +187,33 @@ def test_local_checkpoint_only_in_materialize():
         os.path.join("operators", "materialize.py"): 1,
         os.path.join("operators", "components.py"): 2,
     }
+
+
+def test_reading_a_committed_store_fires_no_job(spark, tmp_path):
+    # shards are Spark-written, so the read (and compaction's merge
+    # read) take the schema from a footer instead of an inference job
+    from tests.test_readers import _jobs_fired
+
+    root = str(tmp_path / "store")
+
+    def shard(name, lo):
+        spark.range(lo, lo + 6).selectExpr(
+            "id",
+            "IF(id % 4 = 0, NULL, CAST(id AS STRING)) AS label",
+            "CAST(id * 1.5 AS DECIMAL(10,2)) AS amount",
+            "ARRAY(CAST(id AS DOUBLE), 0.5D) AS vec",
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(root, name))
+
+    for b in range(3):
+        shard(f"batch={b}", b * 10)
+    shardstore.compact_shards(spark, root)
+    shard("batch=3", 30)
+    paths = [p for _, _, p in shardstore.active_shard_dirs(root)]
+    assert len(paths) == 2
+    df, jobs = _jobs_fired(spark, lambda: shardstore.read_shards(spark, root))
+    assert jobs == 0, "the schema comes from a shard footer, not from a job"
+    plain, plain_jobs = _jobs_fired(spark, lambda: spark.read.parquet(*paths))
+    assert plain_jobs == 1, "spark.read.parquet infers the schema with one job"
+    assert df.schema == plain.schema
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, plain.collect()))
+    assert df.count() == 24
