@@ -102,23 +102,6 @@ def minhash_signature(col: Column | str, num_hashes: int = 8, n: int = 5) -> Col
     )
 
 
-def lsh_band_hashes(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """Banding: hash each band of ``rows_per_band`` signature entries.
-    Docs sharing any band hash are near-dup candidates."""
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit(str(b)),
-                    *[sig[b * rows_per_band + r] for r in range(rows_per_band)],
-                )
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def quality_features(col: Column | str) -> dict[str, Column]:
     """Deterministic quality-scoring features (length / punctuation /
     stopword ratios) used for corpus filtering.

@@ -430,10 +430,6 @@ def simhash16(col: Column | str) -> Column:
     )
 
 
-def hamming16(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 #: Two's-complement value of a set bit 63 in a signed 64-bit long —
 #: ``1 << 63`` itself overflows, so the top SimHash bit contributes
 #: the (negative) min-long instead; XOR/bit_count hamming math is
@@ -1234,6 +1230,30 @@ def lsh_incremental_join(
         )
         .distinct()
     )
+    return _lsh_verify(
+        cand, corpus, batch, id_col, text_col, shingle_n, t_num, t_den
+    )
+
+
+def _lsh_verify(
+    cand: DataFrame,
+    corpus: DataFrame,
+    batch: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    t_num: int,
+    t_den: int,
+) -> DataFrame:
+    """Exact verify stage of the incremental LSH joins
+    (:func:`lsh_incremental_join` and the index-served
+    ``streaming/lsh_index.incremental_join_against_index``): the
+    ``(batch_doc, corpus_doc)`` candidates semi-prune the corpus to
+    its candidate docs (ids broadcast) BEFORE the shingle arrays are
+    built, so verification costs candidates x doc length; the
+    integer cross-multiplied Jaccard test keeps pairs with true
+    Jaccard >= ``t_num / t_den``.  Returns ``(batch_doc, corpus_doc,
+    inter_size, union_size, jaccard)``."""
     corpus_cand = corpus.join(
         F.broadcast(cand.select(F.col("corpus_doc").alias(id_col)).distinct()),
         id_col,

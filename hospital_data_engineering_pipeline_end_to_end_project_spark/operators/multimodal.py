@@ -11,6 +11,20 @@ PIL/ffmpeg/torchaudio in the container): ``decode_media`` raises
 ``extract_features`` computes deterministic byte-level features
 (length, md5, frame-count estimate) so the Spark-side plumbing —
 schema, batching, partitioning, UDF signature — is real and tested.
+
+Three shared kernels carry every modality; each public function keeps
+only what differs by modality:
+
+- :func:`_synthesize_media` is the one id/text -> media Arrow frame
+  (source projection, per-task renderer, ``meta`` struct under
+  ``_MEDIA_SCHEMA``); :func:`_token_cache` is its per-task vocabulary
+  cache;
+- :func:`_mjpeg_frames` is the one MJPEG end-of-image frame walk and
+  :func:`_frame_fps` the one all-or-nothing fingerprint decode on top
+  of it;
+- :func:`_gram_postings` is the one fused decode + gram-hash posting
+  kernel behind :func:`audio_gram_postings` and
+  :func:`video_gram_postings`.
 """
 
 from __future__ import annotations
@@ -23,24 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("source", T.StringType(), True),
-                    T.StructField("byte_len", T.LongType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -307,20 +303,6 @@ def _be_hex(col, n_hex: int):
     return F.lpad(F.hex(col), n_hex, "0")
 
 
-#: byte length of one :func:`_jpeg_hex` frame — every segment is
-#: fixed-width (the dims are zero-padded 4-hex fields), so all
-#: synthesized frames are exactly this many bytes
-_JPEG_FRAME_BYTES = (
-    len(
-        "ffd8" "ffe0" "0010" "4a46494600" "0101" "00" "0001" "0001" "0000"
-        "ffc0" "0011" "08" "hhhh" "wwww"
-        "03" "012200" "021101" "031101"
-        "ffd9"
-    )
-    // 2
-)
-
-
 def _jpeg_hex(w, h):
     """Hex text of a minimal spec-correct baseline JPEG (SOI |
     APP0/JFIF | SOF0 with the given dims | EOI) — shared by the image
@@ -444,15 +426,115 @@ def extract_features(media: DataFrame, frame_bytes: int = 1000) -> DataFrame:
     return media.mapInPandas(_extract, schema=FEATURE_SCHEMA)
 
 
-def _le_hex(col, n_hex: int):
-    """Little-endian fixed-width hex of a non-negative integral Column:
-    big-endian hex, then byte-swapped (RIFF/WAVE sizes and PCM samples
-    are little-endian)."""
-    be = _be_hex(col, n_hex)
-    pairs = [
-        F.substring(be, i + 1, 2) for i in range(n_hex - 2, -1, -2)
-    ]
-    return F.concat(*pairs)
+#: output schema shared by the id/text -> media Arrow synthesis kernels
+_MEDIA_SCHEMA = (
+    "media_id long, payload binary, "
+    "meta struct<mime:string,source:string,byte_len:long>"
+)
+
+#: per-task entry cap for the synthesis vocabulary caches (an open-web
+#: partition's vocabulary can grow without bound; the heaviest cached
+#: value — the PGM 72x2 u64 digest block — is ~1.2 KB, so 2^16 entries
+#: bound each task at ~80 MB worst case).  Tokens past the cap are
+#: computed uncached — identical bytes, no eviction churn.
+SYNTH_VOCAB_CACHE_MAX = 1 << 16
+
+
+def _token_cache(render_token: Callable[[str], object]) -> Callable[[str], object]:
+    """Per-task memo of a pure ``token -> value`` renderer, capped at
+    :data:`SYNTH_VOCAB_CACHE_MAX` entries.
+
+    Every text synthesizer renders a document as a function of its
+    tokens, and each token's rendering (its md5 digests, sample block
+    or JPEG frame) is a pure function of the token string, so each
+    distinct vocabulary word is hashed and rendered ONCE per task
+    instead of once per occurrence: C md5 + bytes joins in place of
+    the former interpreted per-row HOF expression chains (guide §4.2;
+    measured ~8x on the sf0.1 PGM synthesis, byte-identical payloads
+    including the empty- and null-text edges)."""
+    vocab: dict[str, object] = {}
+
+    def get(tok: str):
+        got = vocab.get(tok)
+        if got is None:
+            got = render_token(tok)
+            if len(vocab) < SYNTH_VOCAB_CACHE_MAX:
+                vocab[tok] = got
+        return got
+
+    return get
+
+
+def _media_frame(ids, payloads: list, mime: str, source: str) -> pd.DataFrame:
+    """One ``_MEDIA_SCHEMA`` batch: ``byte_len`` is the payload's
+    length, NULL with a NULL payload (the expression forms'
+    semantics)."""
+    return pd.DataFrame(
+        {
+            "media_id": ids,
+            "payload": pd.Series(payloads, dtype="object"),
+            "meta": pd.Series(
+                [
+                    {"mime": mime, "source": source,
+                     "byte_len": None if p is None else len(p)}
+                    for p in payloads
+                ],
+                dtype="object",
+            ),
+        }
+    )
+
+
+def _synthesize_media(
+    df: DataFrame,
+    id_col: str,
+    text_col: str | None,
+    mime: str,
+    source: str,
+    render_factory: Callable[[], Callable[[object], bytes | None]],
+) -> DataFrame:
+    """The one Arrow synthesis frame: project ``(media_id, __t)`` —
+    just ``media_id`` when ``text_col`` is None, so the id itself is
+    the rendered input — and run one ``mapInPandas`` pass (a pure map,
+    no shuffle) that builds ``render_factory()`` once per task and
+    maps each input value (a NULL arrives as None, or NaN in a float
+    id batch) to payload bytes or None.  Per-task state such as a
+    :func:`_token_cache` lives inside the factory."""
+    cols = [F.col(id_col).cast("long").alias("media_id")]
+    if text_col is not None:
+        cols.append(F.col(text_col).alias("__t"))
+    src = df.select(*cols)
+    key = src.columns[-1]
+
+    def _render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        render = render_factory()
+        for pdf in batches:
+            payloads = [render(v) for v in pdf[key]]
+            yield _media_frame(pdf["media_id"], payloads, mime, source)
+
+    return src.mapInPandas(_render, schema=_MEDIA_SCHEMA)
+
+
+#: the fixed middle of every synthesized RIFF/WAVE header: the WAVE
+#: form type, a 16-byte fmt chunk (PCM=1, mono, 16000 Hz, byte rate
+#: 32000, block 2, 16-bit) and the data chunk's id
+_WAV_FMT = (
+    b"WAVE"
+    + bytes.fromhex("666d7420" "10000000")
+    + bytes.fromhex("0100" "0100" "803e0000" "007d0000" "0200" "1000")
+    + b"data"
+)
+
+
+def _wav_header(n_data_bytes: int) -> bytes:
+    """The 44-byte RIFF/WAVE header of a synthesized PCM payload whose
+    data chunk holds ``n_data_bytes`` (all sizes little-endian)."""
+    return (
+        b"RIFF"
+        + (n_data_bytes + 36).to_bytes(4, "little")
+        + _WAV_FMT
+        + n_data_bytes.to_bytes(4, "little")
+    )
 
 
 def synthesize_wav_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -466,8 +548,8 @@ def synthesize_wav_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     int16 ``((u + 32768) % 65536) - 32768`` — a closed-form waveform
     an oracle can regenerate, so a correct RIFF walk + PCM decode is
     checkable to the sample.  Each payload is a spec-correct
-    RIFF/WAVE: fmt chunk (PCM, mono, 16 kHz, 16-bit) + data chunk of
-    ``2 * n_samples`` bytes, all sizes little-endian.
+    RIFF/WAVE (:func:`_wav_header`) with a data chunk of
+    ``2 * n_samples`` bytes.
 
     One Arrow ``mapInPandas`` pass (a pure map, no shuffle; only the
     id column crosses the boundary): the whole batch's waveform
@@ -477,19 +559,7 @@ def synthesize_wav_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     yields a NULL payload and NULL byte_len, the expression form's
     semantics."""
     src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    hdrs = {
-        n: (
-            b"RIFF"
-            + (2 * n + 36).to_bytes(4, "little")
-            + b"WAVE"
-            + bytes.fromhex("666d7420" "10000000")
-            # PCM=1, mono, 16000 Hz, byte rate 32000, block 2, 16-bit
-            + bytes.fromhex("0100" "0100" "803e0000" "007d0000" "0200" "1000")
-            + b"data"
-            + (2 * n).to_bytes(4, "little")
-        )
-        for n in range(64, 128)
-    }
+    hdrs = {n: _wav_header(2 * n) for n in range(64, 128)}
 
     def _render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -511,28 +581,11 @@ def synthesize_wav_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ns = 64 + iv % 64
             base = (iv * 31) % 65536
             wave = ((base[:, None] + sevens[None, :]) % 65536).astype("<u2")
-            payloads, metas = [], []
-            for r in range(len(iv)):
-                if not mask[r]:
-                    payloads.append(None)
-                    metas.append(
-                        {"mime": "audio/wav", "source": "synthetic",
-                         "byte_len": None}
-                    )
-                    continue
-                n = int(ns[r])
-                payloads.append(hdrs[n] + wave[r, :n].tobytes())
-                metas.append(
-                    {"mime": "audio/wav", "source": "synthetic",
-                     "byte_len": 2 * n + 44}
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": pd.Series(metas, dtype="object"),
-                }
-            )
+            payloads = [
+                hdrs[int(ns[r])] + wave[r, : ns[r]].tobytes() if mask[r] else None
+                for r in range(len(iv))
+            ]
+            yield _media_frame(ids, payloads, "audio/wav", "synthetic")
 
     return src.mapInPandas(_render, schema=_MEDIA_SCHEMA)
 
@@ -635,28 +688,30 @@ def synthesize_video_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ``3 + id % 4`` complete JPEG frames concatenated back-to-back
     (motion-JPEG's container-free layout), each frame's dimensions a
     closed form of (id, frame index): ``w = (id*5 + f) % 300 + 1``,
-    ``h = (id*3 + 7*f) % 200 + 1``.  Built entirely with Column
-    expressions (the video sibling of :func:`synthesize_image_media` /
-    :func:`synthesize_wav_media`), so an oracle can predict every
-    sampled frame's header."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    # one Arrow pass with a per-task payload cache (guide §4.2/§4.5,
-    # r15; byte-identical to the former per-frame HOF hex chain):
-    # every synthesis input — frame count (id % 4), widths (id*5 % 300)
-    # and heights (id*3 % 200) — is a function of id % lcm(4,60,200) =
-    # id % 600, so at most 600 distinct payloads exist and each is
-    # rendered once per task.  NON-NEGATIVE ids assumed (the
-    # synthesized-corpus contract); NULL id -> NULL payload/byte_len.
+    ``h = (id*3 + 7*f) % 200 + 1`` — the video sibling of
+    :func:`synthesize_image_media` / :func:`synthesize_wav_media`, so
+    an oracle can predict every sampled frame's header.
+
+    One Arrow pass with a per-task payload cache (guide §4.2/§4.5,
+    r15; byte-identical to the former per-frame HOF hex chain): every
+    synthesis input — frame count (id % 4), widths (id*5 % 300) and
+    heights (id*3 % 200) — is a function of id % lcm(4,60,200) =
+    id % 600, so at most 600 distinct payloads exist and each is
+    rendered once per task.  NON-NEGATIVE ids assumed (the
+    synthesized-corpus contract); NULL id -> NULL payload/byte_len."""
     pre = bytes.fromhex(
         "ffd8" "ffe0" "0010" "4a46494600" "0101" "00" "0001" "0001" "0000"
         "ffc0" "0011" "08"
     )
     post = bytes.fromhex("03" "012200" "021101" "031101" "ffd9")
 
-    def _render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def render_factory():
         cache: dict[int, bytes] = {}
 
-        def payload(mid: int) -> bytes:
+        def render(mid) -> bytes | None:
+            if mid is None or mid != mid:
+                return None
+            mid = int(mid)
             key = mid % 600
             got = cache.get(key)
             if got is None:
@@ -670,31 +725,11 @@ def synthesize_video_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 cache[key] = got
             return got
 
-        for pdf in batches:
-            payloads, metas = [], []
-            for mid in pdf["media_id"]:
-                if mid is None or mid != mid:
-                    payloads.append(None)
-                    metas.append(
-                        {"mime": "video/x-motion-jpeg",
-                         "source": "synthetic", "byte_len": None}
-                    )
-                    continue
-                b = payload(int(mid))
-                payloads.append(b)
-                metas.append(
-                    {"mime": "video/x-motion-jpeg",
-                     "source": "synthetic", "byte_len": len(b)}
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": pd.Series(metas, dtype="object"),
-                }
-            )
+        return render
 
-    return src.mapInPandas(_render, schema=_MEDIA_SCHEMA)
+    return _synthesize_media(
+        df, id_col, None, "video/x-motion-jpeg", "synthetic", render_factory
+    )
 
 
 VIDEO_FRAME_SCHEMA = (
@@ -702,65 +737,62 @@ VIDEO_FRAME_SCHEMA = (
 )
 
 
+def _mjpeg_frames(payload) -> list[bytes] | None:
+    """The one MJPEG frame walk: split a payload on end-of-image
+    boundaries — frame ``f`` is the bytes up to and including its
+    ``ffd9`` — or None for a NULL payload or trailing bytes with no
+    EOI (a stream truncated mid-frame is corrupt, not "done").
+
+    The split is exact for the synthesized streams: their frames
+    carry no entropy-coded data (and COM fingerprints are ASCII hex),
+    so EOI bytes cannot occur mid-frame; a production deployment
+    registers a container demuxer — ffmpeg — in the decoder registry
+    for real codecs.  Every caller applies the same all-or-nothing
+    rule on top: a payload with any unreadable frame emits NO rows,
+    frames decoded before the corruption included, so a truncated or
+    garbled video never contributes a silently partial frame set
+    (it would skew per-video frame statistics downstream); decode
+    failures never fail the stage."""
+    if payload is None:
+        return None
+    b = bytes(payload)
+    frames, start = [], 0
+    while start < len(b):
+        end = b.find(b"\xff\xd9", start)
+        if end < 0:
+            return None
+        frames.append(b[start : end + 2])
+        start = end + 2
+    return frames
+
+
 def video_frame_dims(media: DataFrame, sample_every: int = 2) -> DataFrame:
     """Video frame sampling: split an MJPEG-style payload into its
-    JPEG frames, keep every ``sample_every``-th frame (the standard
-    decimation a vision-pretraining pipeline applies before feature
-    extraction), and parse each kept frame's header with the REAL
-    stdlib SOF parser — Arrow-batched ``mapInPandas``, one output row
-    per sampled frame.
-
-    The frame walk relies on each frame being a complete marker-
-    segment JPEG ending in EOI (true for MJPEG streams of header-only
-    synthetic frames; a production deployment registers a container
-    demuxer — ffmpeg — in the decoder registry for real codecs, same
-    registry contract as images/audio).  A corrupt payload emits
-    NOTHING — all-or-nothing per payload: rows for frames decoded
-    before a mid-stream corruption are buffered and discarded with
-    it, so a truncated/garbled video never contributes a silently
-    partial frame set (it would skew per-video frame statistics
-    downstream); decode failures never fail the stage.
-    """
-    decoder = jpeg_sof_decoder
+    JPEG frames (:func:`_mjpeg_frames`), keep every
+    ``sample_every``-th frame (the standard decimation a
+    vision-pretraining pipeline applies before feature extraction),
+    and parse each kept frame's header with the REAL stdlib SOF
+    parser — Arrow-batched ``mapInPandas``, one output row per
+    sampled frame.  Only the sampled frames are SOF-parsed; a payload
+    whose walk fails or whose sampled frame does not parse emits
+    nothing (the all-or-nothing rule)."""
 
     def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, fidx, ws, hs = [], [], [], []
             for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
+                frames = _mjpeg_frames(payload)
+                if frames is None:
                     continue
-                b = bytes(payload)
-                # split on EOI boundaries: frame f = bytes up to and
-                # including its ffd9 (no entropy data in synthetic
-                # frames, so EOI bytes cannot occur mid-frame);
-                # buffer this payload's rows and commit only if every
-                # sampled frame decodes
-                p_fidx, p_ws, p_hs = [], [], []
-                ok = True
-                start, f = 0, 0
-                while start < len(b):
-                    end = b.find(b"\xff\xd9", start)
-                    if end < 0:
-                        # trailing bytes with no EOI: the stream was
-                        # truncated mid-frame — corrupt, not "done"
-                        ok = False
-                        break
-                    if f % sample_every == 0:
-                        try:
-                            hdr = decoder(b[start : end + 2])
-                        except ValueError:
-                            ok = False
-                            break
-                        p_fidx.append(f)
-                        p_ws.append(hdr["width"])
-                        p_hs.append(hdr["height"])
-                    start = end + 2
-                    f += 1
-                if ok:
-                    ids.extend([media_id] * len(p_fidx))
-                    fidx.extend(p_fidx)
-                    ws.extend(p_ws)
-                    hs.extend(p_hs)
+                kept = range(0, len(frames), sample_every)
+                try:
+                    hdrs = [jpeg_sof_decoder(frames[f]) for f in kept]
+                except ValueError:
+                    continue
+                ids.extend([media_id] * len(hdrs))
+                fidx.extend(kept)
+                ws.extend(h["width"] for h in hdrs)
+                hs.extend(h["height"] for h in hdrs)
             yield pd.DataFrame(
                 {
                     "media_id": pd.Series(ids, dtype="int64"),
@@ -793,19 +825,6 @@ DHASH_BANDS = 4
 
 _PGM_HEADER = f"P5\n{DHASH_GRID_W} {DHASH_GRID_H}\n255\n".encode()
 
-#: output schema shared by the text->media Arrow synthesis kernels
-_MEDIA_SCHEMA = (
-    "media_id long, payload binary, "
-    "meta struct<mime:string,source:string,byte_len:long>"
-)
-
-#: per-task entry cap for the synthesis vocabulary caches (r14 ADVICE
-#: #1: an open-web partition's vocabulary can grow without bound; the
-#: heaviest cached value — the PGM 72x2 u64 digest block — is ~1.2 KB,
-#: so 2^16 entries bound each task at ~80 MB worst case).  Tokens past
-#: the cap are computed uncached — identical bytes, no eviction churn.
-SYNTH_VOCAB_CACHE_MAX = 1 << 16
-
 DHASH_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -822,9 +841,8 @@ def synthesize_minhash_pgm(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Deterministic REAL grayscale thumbnails from document text —
-    one Arrow ``mapInPandas`` pass (a pure map, no shuffle): pixel
-    ``i`` of the 9x8 grid is a uniform byte of the doc's ``i``-th
-    MinHash coordinate — ``min over distinct tokens of
+    pixel ``i`` of the 9x8 grid is a uniform byte of the doc's
+    ``i``-th MinHash coordinate — ``min over distinct tokens of
     md5(i || '|' || token)`` (the engine's established min-wise
     permutation family, ``functions/text.py:minhash_signature``),
     taking a LOW hex slice of the winning hash so the byte stays
@@ -832,17 +850,11 @@ def synthesize_minhash_pgm(
     magnitude does.  Serialized as a spec-correct binary PGM
     (``P5`` header + raster).
 
-    The kernel hashes each distinct TOKEN once per task (``md5(i ||
-    '|' || token)`` depends only on ``(i, token)``, so a per-task
-    vocabulary cache turns the former 72-hashes-per-doc-token
-    expression tree into 72 hashes per distinct vocabulary word —
-    guide §4.2's "heavy lifting in native code": C md5 + numpy mins
-    replaced the interpreted per-row HOF build, measured ~8x on the
-    sf0.1 corpus synthesis, byte-identical payloads including the
-    empty- and null-text edges).  The lexicographic hex min is taken
-    as an integer min over the digest's (hi, lo) u64 halves — hex
-    encoding is order-preserving — and pixel ``i`` is digest byte 8
-    (hex chars 17-18) of the winner.
+    Rendered through :func:`_synthesize_media` with each token's 72
+    digests held in the :func:`_token_cache`.  The lexicographic hex
+    min is taken as an integer min over the digest's (hi, lo) u64
+    halves — hex encoding is order-preserving — and pixel ``i`` is
+    digest byte 8 (hex chars 17-18) of the winner.
 
     The sketch rendering gives the downstream perceptual hash the
     statistics dHash needs: by the MinHash property two documents
@@ -857,81 +869,56 @@ def synthesize_minhash_pgm(
     Exactly replayable by a SQL oracle (no external codec in the
     loop; the container has no PIL/ffmpeg — the decode side parses
     the PGM with stdlib only, the registry contract of this module).
-    Documents with no tokens render the all-zero (flat black)
-    thumbnail, dHash 0 — the standard flat-image degeneracy of dHash,
-    kept rather than hidden.
+    Documents with no tokens — a NULL text too — render the all-zero
+    (flat black) thumbnail, dHash 0 — the standard flat-image
+    degeneracy of dHash, kept rather than hidden.
     """
     n_px = DHASH_GRID_W * DHASH_GRID_H
-    header = _PGM_HEADER
-    byte_len = len(header) + n_px
-    src = docs.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(text_col).alias("__t")
-    )
 
-    def _render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def render_factory():
         import hashlib
 
         import numpy as np
 
         u64max = np.uint64(0xFFFFFFFFFFFFFFFF)
         prefixes = [f"{i}|".encode() for i in range(n_px)]
-        vocab: dict[str, "np.ndarray"] = {}
 
-        def digests(tok: str) -> "np.ndarray":
-            got = vocab.get(tok)
-            if got is None:
-                tb = tok.encode("utf-8")
-                got = np.empty((n_px, 2), dtype=np.uint64)
-                for i, pre in enumerate(prefixes):
-                    d = hashlib.md5(pre + tb).digest()
-                    got[i, 0] = int.from_bytes(d[:8], "big")
-                    got[i, 1] = int.from_bytes(d[8:], "big")
-                if len(vocab) < SYNTH_VOCAB_CACHE_MAX:
-                    vocab[tok] = got
+        def token_digests(tok: str) -> "np.ndarray":
+            tb = tok.encode("utf-8")
+            got = np.empty((n_px, 2), dtype=np.uint64)
+            for i, pre in enumerate(prefixes):
+                d = hashlib.md5(pre + tb).digest()
+                got[i, 0] = int.from_bytes(d[:8], "big")
+                got[i, 1] = int.from_bytes(d[8:], "big")
             return got
 
-        zero_raster = bytes(n_px)
-        for pdf in batches:
-            payloads = []
-            for text in pdf["__t"]:
-                toks = (
-                    {t for t in text.split(" ") if t} if text is not None else ()
-                )
-                if not toks:
-                    payloads.append(header + zero_raster)
-                    continue
-                D = np.stack([digests(t) for t in toks])
-                hi = D[:, :, 0]
-                m_hi = hi.min(axis=0)
-                # the winner's low half: mask non-minimal hi rows to
-                # u64max, take the min — lexicographic tie-break on
-                # the second 8 digest bytes without an argmin
-                m_lo = np.where(hi == m_hi, D[:, :, 1], u64max).min(axis=0)
-                payloads.append(
-                    header
-                    + ((m_lo >> np.uint64(56)) & np.uint64(0xFF))
-                    .astype(np.uint8)
-                    .tobytes()
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": pd.Series(
-                        [
-                            {
-                                "mime": PGM_MIME,
-                                "source": "synthetic-minhash-sketch",
-                                "byte_len": byte_len,
-                            }
-                        ]
-                        * len(payloads),
-                        dtype="object",
-                    ),
-                }
+        digests = _token_cache(token_digests)
+        flat = _PGM_HEADER + bytes(n_px)
+
+        def render(text) -> bytes:
+            toks = {t for t in text.split(" ") if t} if text is not None else ()
+            if not toks:
+                return flat
+            D = np.stack([digests(t) for t in toks])
+            hi = D[:, :, 0]
+            m_hi = hi.min(axis=0)
+            # the winner's low half: mask non-minimal hi rows to
+            # u64max, take the min — lexicographic tie-break on the
+            # second 8 digest bytes without an argmin
+            m_lo = np.where(hi == m_hi, D[:, :, 1], u64max).min(axis=0)
+            return (
+                _PGM_HEADER
+                + ((m_lo >> np.uint64(56)) & np.uint64(0xFF))
+                .astype(np.uint8)
+                .tobytes()
             )
 
-    return src.mapInPandas(_render, schema=_MEDIA_SCHEMA)
+        return render
+
+    return _synthesize_media(
+        docs, id_col, text_col, PGM_MIME, "synthetic-minhash-sketch",
+        render_factory,
+    )
 
 
 def pgm_decoder(b: bytes) -> dict:
@@ -1086,106 +1073,56 @@ def synthesize_speech_wav(
     and in whichever document.  Near-duplicate texts therefore
     produce waveforms that are byte-identical along every shared
     token run — the property the audio segment matcher exploits —
-    while the RIFF/WAVE container stays spec-correct (fmt PCM, mono,
-    16 kHz, 16-bit; all sizes little-endian).  Empty documents render
-    a valid zero-sample WAV; a NULL text renders a NULL payload (the
-    former expression form's semantics, kept exactly).
-
-    One Arrow ``mapInPandas`` pass (a pure map, no shuffle) with a
-    per-task token cache: a token's 32-byte sample block is a pure
-    function of the token string, so each distinct vocabulary word is
-    md5'd and rendered ONCE per task instead of once per occurrence
-    through the interpreted per-sample HOF chain (guide §4.2 — the
-    synthesize_minhash_pgm kernel's trade, byte-identical output)."""
-    src = docs.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(text_col).alias("__t")
-    )
+    while the RIFF/WAVE container stays spec-correct
+    (:func:`_wav_header`).  Empty documents render a valid
+    zero-sample WAV; a NULL text renders a NULL payload (the former
+    expression form's semantics, kept exactly).  Rendered through
+    :func:`_synthesize_media` with each token's 32-byte sample block
+    held in the :func:`_token_cache`."""
     spt = SPEECH_SAMPLES_PER_TOKEN
-    fmt_hdr = (
-        b"WAVE"
-        + bytes.fromhex("666d7420" "10000000")
-        + bytes.fromhex("0100" "0100" "803e0000" "007d0000" "0200" "1000")
-        + b"data"
-    )
 
-    def _render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def render_factory():
         import hashlib
 
-        vocab: dict[str, bytes] = {}
-
-        def block(tok: str) -> bytes:
-            got = vocab.get(tok)
-            if got is None:
-                u16 = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:4], 16)
-                got = b"".join(
-                    ((u16 + 7 * j) % 65536).to_bytes(2, "little")
-                    for j in range(spt)
-                )
-                if len(vocab) < SYNTH_VOCAB_CACHE_MAX:
-                    vocab[tok] = got
-            return got
-
-        for pdf in batches:
-            payloads, lens = [], []
-            for text in pdf["__t"]:
-                if text is None:
-                    payloads.append(None)
-                    lens.append(None)
-                    continue
-                data = b"".join(
-                    block(t) for t in text.split(" ") if t
-                )
-                payloads.append(
-                    b"RIFF"
-                    + (len(data) + 36).to_bytes(4, "little")
-                    + fmt_hdr
-                    + len(data).to_bytes(4, "little")
-                    + data
-                )
-                lens.append(len(data) + 44)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": pd.Series(
-                        [
-                            {
-                                "mime": "audio/wav",
-                                "source": "synthetic-speech",
-                                "byte_len": n,
-                            }
-                            for n in lens
-                        ],
-                        dtype="object",
-                    ),
-                }
+        def token_block(tok: str) -> bytes:
+            u16 = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:4], 16)
+            return b"".join(
+                ((u16 + 7 * j) % 65536).to_bytes(2, "little") for j in range(spt)
             )
 
-    return src.mapInPandas(_render, schema=_MEDIA_SCHEMA)
+        block = _token_cache(token_block)
+
+        def render(text) -> bytes | None:
+            if text is None:
+                return None
+            data = b"".join(block(t) for t in text.split(" ") if t)
+            return _wav_header(len(data)) + data
+
+        return render
+
+    return _synthesize_media(
+        docs, id_col, text_col, "audio/wav", "synthetic-speech", render_factory
+    )
 
 
-def audio_gram_postings(
-    media: DataFrame,
-    *,
-    k: int = 4,
-    frame_samples: int = SPEECH_SAMPLES_PER_TOKEN,
+def _gram_postings(
+    media: DataFrame, k: int, sequence: Callable[[object], list | None]
 ) -> DataFrame:
-    """Positional energy-gram postings ``(media_id, __pos 1-based,
-    __h)`` for a media frame — the decode-and-fingerprint stage of
-    :func:`audio_segment_pairs`, factored out so the streaming audio
-    feature store (``streaming/audio_index.py``) can persist exactly
-    these rows per batch and the match stage can be served WITHOUT
-    re-decoding: the gram hash is a pure function of the decoded
-    int64 frame energies (md5 over the ``|``-joined window), so the
-    stored postings are engine- and run-stable.
+    """The one fused decode + gram-hash posting kernel: positional
+    gram postings ``(media_id, __pos 1-based, __h)`` with ``__h =
+    md5('|'-joined decimal window)`` over every ``k`` consecutive
+    values of ``sequence(payload)`` — one payload's decoded int
+    sequence, or None for the corrupt-payload branch (no rows).
 
     Decode AND gram-hash run in ONE map-side Arrow pass (r13
-    reassembled :func:`audio_frame_energy` rows through a
-    groupBy/collect_list EXCHANGE — removed in r14; the window md5s
-    then moved from interpreted array expressions into the decode
-    kernel itself, guide §4.2 — rows identical: the hash is
-    ``md5('|'-joined decimal window)`` either way, and Python's
-    ``str(int)`` matches Spark's long→string cast).
+    reassembled the decoded rows through a groupBy/collect_list
+    EXCHANGE — removed in r14; the window md5s then moved from
+    interpreted array expressions into the decode kernel itself,
+    guide §4.2 — rows identical: Python's ``str(int)`` matches
+    Spark's long→string cast), the fused per-row shape of "ML
+    Inference Pipeline Execution Using Pure SQL Based on Operator
+    Fusion" (ICDE 2025).  The gram hash is a pure function of the
+    decoded sequence, so stored postings are engine- and run-stable.
 
     PRECONDITION (r14 ADVICE #2): at most one payload row per
     ``media_id``.  The fused path emits an independent posting set per
@@ -1201,15 +1138,11 @@ def audio_gram_postings(
         for pdf in batches:
             ids, poss, hs = [], [], []
             for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                got = _pcm_frame_energies(payload, frame_samples)
-                if got is None:
+                seq = sequence(payload)
+                if seq is None or len(seq) < k:
                     continue
-                e = got[0]
-                n = len(e) - (k - 1)
-                if n <= 0:
-                    continue
-                parts = [str(v) for v in e.tolist()]
-                for i in range(n):
+                parts = [str(v) for v in seq]
+                for i in range(len(parts) - k + 1):
                     ids.append(media_id)
                     poss.append(i + 1)
                     hs.append(
@@ -1233,6 +1166,27 @@ def audio_gram_postings(
     return media.select("media_id", "payload").mapInPandas(
         _postings, schema="media_id long, __pos int, __h string"
     )
+
+
+def audio_gram_postings(
+    media: DataFrame,
+    *,
+    k: int = 4,
+    frame_samples: int = SPEECH_SAMPLES_PER_TOKEN,
+) -> DataFrame:
+    """Positional energy-gram postings ``(media_id, __pos 1-based,
+    __h)`` for a media frame — the decode-and-fingerprint stage of
+    :func:`audio_segment_pairs`, factored out so the streaming audio
+    feature store (``streaming/audio_index.py``) can persist exactly
+    these rows per batch and the match stage can be served WITHOUT
+    re-decoding.  :func:`_gram_postings` over the int64 frame
+    energies of :func:`_pcm_frame_energies`."""
+
+    def energies(payload) -> list | None:
+        got = _pcm_frame_energies(payload, frame_samples)
+        return None if got is None else got[0].tolist()
+
+    return _gram_postings(media, k, energies)
 
 
 def audio_segment_pairs(
@@ -1304,7 +1258,7 @@ def _posting_run_pairs(
     run extraction is identical.
 
     ``pos`` is materialized ONCE before the self-join: its upstream is
-    the full payload decode + collect_list + gram hashing, and a
+    the fused payload decode + gram hashing, and a
     self-join's branches do not reuse a common subtree under AQE's
     broadcast rewrite (the round-7 ReusedExchange finding the sibling
     banded operators all materialize against) — without it the decode
@@ -1387,21 +1341,11 @@ def synthesize_token_video(
     token run IS a shared scene — the property the scene matcher
     exploits — while every frame stays parseable by the stdlib SOF
     walker (:func:`jpeg_sof_decoder`) and the whole payload by the
-    MJPEG EOI-boundary walk (COM text is ASCII hex: no 0xFF byte, so
-    EOI pairs cannot occur mid-frame).  Empty documents render a
-    valid zero-frame (empty) stream; a NULL text renders a NULL
-    payload (the former expression form's semantics, kept exactly).
-
-    One Arrow ``mapInPandas`` pass (a pure map, no shuffle) with a
-    per-task token cache: a token's frame is a pure function of the
-    token string (fixed markers + the md5-prefix COM body), so each
-    distinct vocabulary word is md5'd and framed ONCE per task
-    instead of once per occurrence through the interpreted per-frame
-    HOF chain (guide §4.2 — the synthesize_minhash_pgm kernel's
-    trade, byte-identical output)."""
-    src = docs.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(text_col).alias("__t")
-    )
+    MJPEG EOI-boundary walk (:func:`_mjpeg_frames`).  Empty documents
+    render a valid zero-frame (empty) stream; a NULL text renders a
+    NULL payload (the former expression form's semantics, kept
+    exactly).  Rendered through :func:`_synthesize_media` with each
+    token's frame held in the :func:`_token_cache`."""
     com_len = VIDEO_FP_HEX + 2
     pre = bytes.fromhex(
         "ffd8"                                          # SOI
@@ -1417,51 +1361,27 @@ def synthesize_token_video(
         + "03" "012200" "021101" "031101"
         + "ffd9"                                        # EOI
     )
-    frame_bytes = len(pre) + VIDEO_FP_HEX + len(post)
 
-    def _render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def render_factory():
         import hashlib
 
-        vocab: dict[str, bytes] = {}
+        def token_frame(tok: str) -> bytes:
+            fp = hashlib.md5(tok.encode("utf-8")).hexdigest()[:VIDEO_FP_HEX]
+            return pre + fp.encode("ascii") + post
 
-        def frame(tok: str) -> bytes:
-            got = vocab.get(tok)
-            if got is None:
-                fp = hashlib.md5(tok.encode("utf-8")).hexdigest()[:VIDEO_FP_HEX]
-                got = pre + fp.encode("ascii") + post
-                if len(vocab) < SYNTH_VOCAB_CACHE_MAX:
-                    vocab[tok] = got
-            return got
+        frame = _token_cache(token_frame)
 
-        for pdf in batches:
-            payloads, lens = [], []
-            for text in pdf["__t"]:
-                if text is None:
-                    payloads.append(None)
-                    lens.append(None)
-                    continue
-                toks = [t for t in text.split(" ") if t]
-                payloads.append(b"".join(frame(t) for t in toks))
-                lens.append(len(toks) * frame_bytes)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": pd.Series(
-                        [
-                            {
-                                "mime": "video/x-motion-jpeg",
-                                "source": "synthetic-token-video",
-                                "byte_len": n,
-                            }
-                            for n in lens
-                        ],
-                        dtype="object",
-                    ),
-                }
-            )
+        def render(text) -> bytes | None:
+            if text is None:
+                return None
+            return b"".join(frame(t) for t in text.split(" ") if t)
 
-    return src.mapInPandas(_render, schema=_MEDIA_SCHEMA)
+        return render
+
+    return _synthesize_media(
+        docs, id_col, text_col, "video/x-motion-jpeg", "synthetic-token-video",
+        render_factory,
+    )
 
 
 VIDEO_SIG_SCHEMA = "media_id long, frame_index long, fp long"
@@ -1502,14 +1422,24 @@ def _frame_com_fp(frame: bytes) -> int:
     return int(txt, 16)
 
 
+def _frame_fps(payload) -> list[int] | None:
+    """The COM fingerprints of every frame of one MJPEG payload, or
+    None when the walk (:func:`_mjpeg_frames`) or any frame's
+    fingerprint fails — the all-or-nothing rule."""
+    frames = _mjpeg_frames(payload)
+    if frames is None:
+        return None
+    try:
+        return [_frame_com_fp(f) for f in frames]
+    except ValueError:
+        return None
+
+
 def video_frame_signatures(media: DataFrame) -> DataFrame:
-    """Per-frame fingerprints from a REAL MJPEG walk: split each
-    payload on EOI boundaries (exact for these streams — see
-    :func:`synthesize_token_video`), SOF-parse every frame and
-    recover its COM fingerprint.  Arrow-batched ``mapInPandas``, one
-    row per frame; the failure contract is all-or-nothing per payload
-    exactly like :func:`video_frame_dims` — a payload with ANY
-    unparseable frame (or trailing bytes after the last EOI)
+    """Per-frame fingerprints from a REAL MJPEG walk: SOF-parse every
+    frame and recover its COM fingerprint (:func:`_frame_fps`).
+    Arrow-batched ``mapInPandas``, one row per frame; a payload with
+    ANY unparseable frame (or trailing bytes after the last EOI)
     contributes nothing, so a truncated stream never skews downstream
     scene statistics."""
 
@@ -1517,29 +1447,12 @@ def video_frame_signatures(media: DataFrame) -> DataFrame:
         for pdf in batches:
             ids, fidx, fps = [], [], []
             for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
+                got = _frame_fps(payload)
+                if got is None:
                     continue
-                b = bytes(payload)
-                p_fidx, p_fps = [], []
-                ok = True
-                start, f = 0, 0
-                while start < len(b):
-                    end = b.find(b"\xff\xd9", start)
-                    if end < 0:
-                        ok = False
-                        break
-                    try:
-                        p_fps.append(_frame_com_fp(b[start : end + 2]))
-                    except ValueError:
-                        ok = False
-                        break
-                    p_fidx.append(f)
-                    start = end + 2
-                    f += 1
-                if ok:
-                    ids.extend([media_id] * len(p_fidx))
-                    fidx.extend(p_fidx)
-                    fps.extend(p_fps)
+                ids.extend([media_id] * len(got))
+                fidx.extend(range(len(got)))
+                fps.extend(got)
             yield pd.DataFrame(
                 {
                     "media_id": pd.Series(ids, dtype="int64"),
@@ -1554,67 +1467,10 @@ def video_frame_signatures(media: DataFrame) -> DataFrame:
 def video_gram_postings(media: DataFrame, *, k: int = 4) -> DataFrame:
     """Positional frame-fingerprint gram postings ``(media_id, __pos
     1-based, __h)`` — the video analog of :func:`audio_gram_postings`:
-    the MJPEG EOI walk + COM fingerprint recovery of
-    :func:`video_fp_sequences` and the ``md5('|'-joined decimal
-    window)`` gram hash, fused into ONE Arrow pass (guide §4.2).
-    Same all-or-nothing per-payload failure contract, and the same
-    PRECONDITION: at most one payload row per ``media_id`` (the fused
-    path emits one posting set per ROW — see
-    :func:`audio_gram_postings`)."""
-
-    def _postings(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        for pdf in batches:
-            ids, poss, hs = [], [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                p_fps: list[int] = []
-                ok = True
-                start = 0
-                while start < len(b):
-                    end = b.find(b"\xff\xd9", start)
-                    if end < 0:
-                        ok = False
-                        break
-                    try:
-                        p_fps.append(_frame_com_fp(b[start : end + 2]))
-                    except ValueError:
-                        ok = False
-                        break
-                    start = end + 2
-                n = len(p_fps) - (k - 1)
-                if not ok or n <= 0:
-                    continue
-                parts = [str(v) for v in p_fps]
-                for i in range(n):
-                    ids.append(media_id)
-                    poss.append(i + 1)
-                    hs.append(
-                        hashlib.md5(
-                            "|".join(parts[i : i + k]).encode()
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(
-                        np.asarray(ids, dtype=np.int64), dtype="int64"
-                    ),
-                    # int32, matching the former posexplode+1 column
-                    "__pos": pd.Series(
-                        np.asarray(poss, dtype=np.int32), dtype="int32"
-                    ),
-                    "__h": pd.Series(hs, dtype="object"),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _postings, schema="media_id long, __pos int, __h string"
-    )
+    :func:`_gram_postings` over the COM fingerprints of
+    :func:`_frame_fps`, so the same all-or-nothing per-payload rule
+    and the same one-row-per-``media_id`` precondition hold."""
+    return _gram_postings(media, k, _frame_fps)
 
 
 def video_scene_pairs(
@@ -1638,12 +1494,6 @@ def video_scene_pairs(
     1-based frame offsets, maximal-run lengths >= ``min_frames``."""
     if min_frames < k:
         raise ValueError(f"min_frames={min_frames} below the gram size k={k}")
-    # decode AND gram-hash in ONE map-side Arrow pass — r13's
-    # groupBy/collect_list reassembly exchange was removed in r14,
-    # then the window md5s moved from interpreted array expressions
-    # into the decode kernel (guide §4.2; the audio_gram_postings
-    # trade).  Rows identical: md5 over the '|'-joined decimal
-    # window either way.
     pos = video_gram_postings(media, k=k)
     return _posting_run_pairs(
         pos,

@@ -176,24 +176,6 @@ def _dmatrix(rows: list[list[float]]):
     )
 
 
-def with_lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 20260813,
-) -> DataFrame:
-    """Add a ``bucket`` int column: bit j = sign(dot(v, plane_j))."""
-    planes = hyperplanes(dim, n_planes, seed)
-    v = V.as_double(vec_col)
-    bucket = F.lit(0)
-    for j, plane in enumerate(planes):
-        bucket = bucket + F.when(
-            V.dot(v, _darray(plane)) > 0, F.lit(1 << j)
-        ).otherwise(F.lit(0))
-    return df.withColumn("bucket", bucket)
-
-
 #: With an OR-construction, a true near-dup pair co-buckets in most of
 #: the n_tables tables, so its score would be recomputed ~t times and
 #: the bucket-join output would carry 2 x dim doubles per duplicate.
@@ -2215,14 +2197,6 @@ def int8_sdc_topk(
     feed the SAME float scoring expression — fixed chain
     ``((s_q*s_c)*idot)/(n_q*n_c)``, rounded, neighbor-id tiebreak —
     so the two routes and the SQL oracle agree bit-for-bit."""
-    if max_queries is not None:
-        probe = queries.limit(max_queries + 1).count()
-        if probe > max_queries:
-            raise ValueError(
-                f"int8_sdc_topk broadcasts the query side, but it has "
-                f">{max_queries} rows; pre-filter the queries or raise "
-                f"max_queries explicitly"
-            )
     # a single-file corpus scan would serialize the quantize + score
     # work in one task — balance the PROJECTED input first (no-op
     # when the scan already has enough partitions)
@@ -2249,8 +2223,18 @@ def int8_sdc_topk(
         scorer = "blas"
     if scorer not in ("expr", "blas"):
         raise ValueError(f"unknown int8 scorer {scorer!r}")
+    # ONE build-time job both bounds the broadcast side and feeds the
+    # blas route: the quantized queries, collected up to one past the
+    # bound (zero vectors, which quantization drops, do not count)
+    if max_queries is not None or scorer == "blas":
+        qrows = (q if max_queries is None else q.limit(max_queries + 1)).collect()
+        if max_queries is not None and len(qrows) > max_queries:
+            raise ValueError(
+                f"int8_sdc_topk broadcasts the query side, but it has "
+                f">{max_queries} rows; pre-filter the queries or raise "
+                f"max_queries explicitly"
+            )
     if scorer == "blas":
-        qrows = q.collect()  # bounded by the max_queries guard above
         if not qrows:
             scorer = "expr"  # empty query side: the join is empty anyway
         else:

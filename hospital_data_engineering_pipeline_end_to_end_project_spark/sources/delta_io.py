@@ -80,8 +80,9 @@ def merge_match_condition(
 
 def merge_changed_condition(tracked: list[str]) -> str:
     """Null-safe any-attribute-changed predicate for the
-    ``whenMatchedUpdate`` branch (SQL-string twin of
-    ``operators/scd2.py:_changed_predicate``)."""
+    ``whenMatchedUpdate`` branch: the negation of the
+    ``<=>`` conjunction ``operators/scd2.merge`` tests each state row
+    against its key's winner with."""
     return " OR ".join(f"NOT (s.{c} <=> staged.{c})" for c in tracked) or "false"
 
 

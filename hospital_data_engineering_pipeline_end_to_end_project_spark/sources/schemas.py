@@ -75,12 +75,3 @@ BILLING_RAW = T.StructType(
         T.StructField("billing_date", T.StringType(), True),
     ]
 )
-
-RAW_SCHEMAS = {
-    "patients": PATIENTS_RAW,
-    "doctors": DOCTORS_RAW,
-    "admissions": ADMISSIONS_RAW,
-    "vitals": VITALS_RAW,
-    "procedures": PROCEDURES_RAW,
-    "billing": BILLING_RAW,
-}

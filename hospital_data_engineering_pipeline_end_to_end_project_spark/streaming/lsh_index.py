@@ -33,7 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import dedupe
 from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import shardstore
 
@@ -117,39 +116,6 @@ def incremental_join_against_index(
         )
         .distinct()
     )
-    # only candidate corpus docs are shingled: semi-join BEFORE the
-    # array build, so verification cost is candidates x doc length
-    corpus_cand = corpus.join(
-        cand.select(F.col("corpus_doc").alias(id_col)).distinct(),
-        id_col,
-        "left_semi",
-    )
-    shc = corpus_cand.select(
-        F.col(id_col).alias("corpus_doc"),
-        F.array_distinct(TX.shingles(text_col, shingle_n)).alias("__shc"),
-    )
-    shb = batch.select(
-        F.col(id_col).alias("batch_doc"),
-        F.array_distinct(TX.shingles(text_col, shingle_n)).alias("__shb"),
-    )
-    inter = F.size(F.array_intersect("__shb", "__shc"))
-    union = F.size("__shb") + F.size("__shc") - inter
-    return (
-        cand.join(F.broadcast(shb), "batch_doc")
-        .join(shc, "corpus_doc")
-        .withColumn("inter_size", inter.cast("long"))
-        .withColumn("union_size", union.cast("long"))
-        .filter(
-            (t_den + t_num) * F.col("inter_size")
-            >= t_num * (F.size("__shb") + F.size("__shc"))
-        )
-        .select(
-            "batch_doc",
-            "corpus_doc",
-            "inter_size",
-            "union_size",
-            F.round(
-                F.col("inter_size").cast("double") / F.col("union_size"), 6
-            ).alias("jaccard"),
-        )
+    return dedupe._lsh_verify(
+        cand, corpus, batch, id_col, text_col, shingle_n, t_num, t_den
     )

@@ -1,15 +1,18 @@
 #!/usr/bin/env python
-"""Round-15 optimization measurement harness.
+"""Query measurement harness.
 
 Times individual catalog queries with the bench's exact methodology
-(noop sink, min-of-N, warm JVM) and captures ``explain("formatted")``
-per query into plans/r15/.  Usage:
+(noop sink, min-of-N, warm JVM) and optionally captures
+``explain("formatted")`` per query into a plans directory.  Usage:
 
-    python measure_r15.py [--runs N] [--sf DIR] [--plans SUFFIX] q145 q149 ...
+    python measure.py [--runs N] [--sf DIR] [--plans SUFFIX]
+                      [--plans-dir DIR] q145 q149 ...
 
-``--plans before`` writes plans/r15/<name>_before.txt; ``--plans
-after`` the _after variant; omit to skip plan capture.  Prints one
-JSON line per query so partial runs still leave usable numbers.
+``--plans before`` writes <plans-dir>/<name>_before.txt; ``--plans
+after`` the _after variant; omit to skip plan capture.  ``--plans-dir``
+defaults to ``plans/`` next to this script (``plans/r14`` and
+``plans/r15`` hold earlier captures).  Prints one JSON line per query
+so partial runs still leave usable numbers.
 """
 
 from __future__ import annotations
@@ -28,25 +31,29 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--plans", default=None, help="before|after: capture explain into plans/r15/")
+    ap.add_argument("--plans", default=None, help="before|after: capture explain into --plans-dir")
+    ap.add_argument(
+        "--plans-dir",
+        default=os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans"),
+        help="directory the --plans captures are written to",
+    )
     args = ap.parse_args()
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="measure_r15", master=f"local[{cpus}]",
+    spark = get_spark(app_name="measure", master=f"local[{cpus}]",
                       shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
 
     # JVM warm-up, mirrors bench.py; derived from the measured SF's
-    # sibling layout rather than a hardcoded fixture path (r14 ADVICE
-    # #4) — fall back to the measured dir itself when no smaller
-    # sibling exists
+    # sibling layout rather than a hardcoded fixture path — fall back
+    # to the measured dir itself when no smaller sibling exists
     warm_dir = os.path.join(os.path.dirname(args.sf.rstrip("/")), "sf0.001")
     if not os.path.isdir(warm_dir):
         warm_dir = args.sf
     qs["q01_pricing_summary"](spark, warm_dir).count()
 
-    plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r15")
+    plans_dir = args.plans_dir
     if args.plans:
         os.makedirs(plans_dir, exist_ok=True)
 

@@ -4,6 +4,8 @@ time)."""
 
 from __future__ import annotations
 
+import bisect
+
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.writers import write_clustered
@@ -88,3 +90,55 @@ def test_zordered_files_are_selective_in_both_dims(spark, tmp_path):
             .count()
         )
         assert touched <= len(per_file) // 2, f"no skipping on {col}"
+
+
+def _spec_zb(bounds: list[float], x: float | None) -> int:
+    # the old binary when-tree computed "count of bounds <= x", with
+    # NULL/NaN comparisons falling through every else-branch to 0
+    if x is None or x != x:
+        return 0
+    return bisect.bisect_right(bounds, x)
+
+
+def _spec_zkey(zbs: list[int], bits: int) -> int:
+    n_dims = len(zbs)
+    key = 0
+    for d, zb in enumerate(zbs):
+        for i in range(bits):
+            key |= ((zb >> i) & 1) << (i * n_dims + d)
+    return key
+
+
+def test_zorder_kernel_matches_expression_spec(spark):
+    from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.writers import (
+        with_zorder_key,
+    )
+
+    rows = [
+        (1, 0.5, 10.0),
+        (2, 99.9, -5.0),
+        (3, None, 3.0),       # NULL dim -> bucket 0 (when-tree else-chain)
+        (4, float("nan"), 7.0),  # NaN dim -> bucket 0
+        (5, 42.0, None),
+        (6, 42.0, 42.0),      # duplicate values across rows
+        (7, 42.0, 42.0),
+        (8, -1e18, 1e18),     # beyond every boundary
+        (9, 0.0, 0.0),
+    ] + [(10 + i, float(i * 37 % 101), float(i * 13 % 53)) for i in range(200)]
+    df = spark.createDataFrame(rows, "id long, x double, y double")
+
+    keyed = with_zorder_key(df, ["x", "y"], bits_per_dim=8)
+    got = {r["id"]: (r["__zb0"], r["__zb1"], r["__zkey"]) for r in keyed.collect()}
+
+    # reproduce the quantile boundaries the operator used
+    bounds = df.approxQuantile(["x", "y"], [i / 256 for i in range(1, 256)], 0.01)
+    for (rid, x, y) in rows:
+        zb0 = _spec_zb(bounds[0], x)
+        zb1 = _spec_zb(bounds[1], y)
+        zkey = _spec_zkey([zb0, zb1], 8)
+        assert got[rid] == (zb0, zb1, zkey), rid
+
+    # schema contract: int buckets, long key, payload columns unchanged
+    assert dict(keyed.dtypes)["__zb0"] == "int"
+    assert dict(keyed.dtypes)["__zkey"] == "bigint"
+    assert [c for c in keyed.columns[:3]] == ["id", "x", "y"]

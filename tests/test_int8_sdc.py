@@ -10,11 +10,14 @@ parity suites; these pin the operator's semantic properties:
 - top-k recall vs the exact float cosine top-k is far above chance
   on the concentrated synthetic embeddings;
 - the auto route (always the integer gemm — it won at every measured
-  query count) agrees with the pinned reference path.
+  query count) agrees with the pinned reference path;
+- the ``max_queries`` guard rejects an oversize query side, and a
+  bounded one costs one build-time job, shared with the gemm route.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import similarity
@@ -104,3 +107,20 @@ def test_auto_route_matches_reference(spark):
         )
     )
     assert auto == expr and len(auto) == 10
+
+
+def test_query_side_guard_is_one_job(spark):
+    from tests.test_readers import _jobs_fired
+
+    e = _emb(spark)
+    q = e.filter(F.col("vec_id") < 16)
+    with pytest.raises(ValueError, match="max_queries"):
+        similarity.int8_sdc_topk(e, q, "vec_id", "embedding", max_queries=15)
+    got, jobs = _jobs_fired(
+        spark,
+        lambda: similarity.int8_sdc_topk(
+            e, q, "vec_id", "embedding", max_queries=16
+        ),
+    )
+    assert jobs == 1, "one bounded collect both guards and feeds the gemm"
+    assert got.count() == 16 * 5

@@ -1,26 +1,18 @@
-"""Round-14 optimization pins.
+"""Byte-level spec pins for the media synthesis and gram-posting
+kernels of ``operators/multimodal.py``.
 
-The r14 waves rewrote operator INTERNALS with value-identical intent:
-text->media synthesis moved from Column expressions to vocab-cached
-Arrow kernels, the media gram stage fused into the decode kernel, and
-shard writes became AQE-sized.  The oracle suite attests the query
-outputs end-to-end; these tests pin the internals DIRECTLY against
-independent stdlib reimplementations of the specs, so a kernel
-regression is caught at the operator, not two stages downstream.
+Each Arrow kernel is checked against an independent stdlib
+reimplementation of its spec, including the edge rows (empty and NULL
+text, NULL ids, duplicate tokens), so a kernel regression is caught at
+the operator rather than two stages downstream in a query's oracle.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
-
-from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import (
     multimodal as M,
-)
-from hospital_data_engineering_pipeline_end_to_end_project_spark.streaming import (
-    shardstore,
 )
 
 _DOCS = [
@@ -173,16 +165,66 @@ def test_video_gram_postings_match_spec(spark):
     assert got == sorted(want)
 
 
-def test_write_shard_is_aqe_sized(spark, tmp_path):
-    """A tiny shard written through a wide compute stage must land as
-    ONE AQE-coalesced parquet file, not one file per upstream task."""
-    dest = os.path.join(str(tmp_path), "batch=0")
-    df = spark.range(0, 1000).repartition(16).withColumn(
-        "v", F.col("id") * 2
+def _spec_wav(mid: int) -> bytes:
+    # independent stdlib replay of the closed-form WAV the former
+    # expression chain produced
+    n = 64 + mid % 64
+    data = b"".join(
+        ((mid * 31 + i * 7) % 65536).to_bytes(2, "little") for i in range(n)
     )
-    shardstore.write_shard(df, dest)
-    files = [f for f in os.listdir(dest) if f.endswith(".parquet")]
-    assert len(files) == 1, files
-    back = spark.read.parquet(dest)
-    assert back.count() == 1000
-    assert back.agg(F.sum("v")).collect()[0][0] == 999 * 1000
+    return (
+        b"RIFF"
+        + (len(data) + 36).to_bytes(4, "little")
+        + b"WAVE"
+        + bytes.fromhex("666d742010000000")
+        + bytes.fromhex("01000100803e0000007d000002001000")
+        + b"data"
+        + len(data).to_bytes(4, "little")
+        + data
+    )
+
+
+def _spec_mjpeg(mid: int) -> bytes:
+    frames = []
+    for f in range(mid % 4 + 3):
+        w = (mid * 5 + f) % 300 + 1
+        h = (mid * 3 + f * 7) % 200 + 1
+        frames.append(
+            bytes.fromhex(
+                "ffd8ffe000104a4649460001010000010001" "0000ffc0001108"
+            )
+            + h.to_bytes(2, "big")
+            + w.to_bytes(2, "big")
+            + bytes.fromhex("03012200021101031101ffd9")
+        )
+    return b"".join(frames)
+
+
+def test_id_synth_kernels_match_expression_spec(spark):
+    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import (
+        multimodal,
+    )
+
+    ids = [0, 1, 5, 63, 64, 599, 600, 601, 12345]
+    d = spark.createDataFrame([(i,) for i in ids] + [(None,)], "doc_id long")
+
+    wav = {r["media_id"]: r for r in
+           multimodal.synthesize_wav_media(d, "doc_id").collect()}
+    for i in ids:
+        assert bytes(wav[i]["payload"]) == _spec_wav(i), i
+        assert wav[i]["meta"]["byte_len"] == len(_spec_wav(i))
+        assert wav[i]["meta"]["mime"] == "audio/wav"
+    # NULL id: NULL payload, non-null meta struct with NULL byte_len
+    # (the expression form's semantics)
+    null_row = wav[None]
+    assert null_row["payload"] is None
+    assert null_row["meta"]["byte_len"] is None
+
+    vid = {r["media_id"]: r for r in
+           multimodal.synthesize_video_media(d, "doc_id").collect()}
+    for i in ids:
+        assert bytes(vid[i]["payload"]) == _spec_mjpeg(i), i
+        assert vid[i]["meta"]["byte_len"] == len(_spec_mjpeg(i))
+        assert vid[i]["meta"]["mime"] == "video/x-motion-jpeg"
+    assert vid[None]["payload"] is None
+    assert vid[None]["meta"]["byte_len"] is None

@@ -217,3 +217,18 @@ def test_reading_a_committed_store_fires_no_job(spark, tmp_path):
     assert df.schema == plain.schema
     assert sorted(map(tuple, df.collect())) == sorted(map(tuple, plain.collect()))
     assert df.count() == 24
+
+
+def test_write_shard_is_aqe_sized(spark, tmp_path):
+    """A tiny shard written through a wide compute stage must land as
+    ONE AQE-coalesced parquet file, not one file per upstream task."""
+    dest = os.path.join(str(tmp_path), "batch=0")
+    df = spark.range(0, 1000).repartition(16).withColumn(
+        "v", F.col("id") * 2
+    )
+    shardstore.write_shard(df, dest)
+    files = [f for f in os.listdir(dest) if f.endswith(".parquet")]
+    assert len(files) == 1, files
+    back = spark.read.parquet(dest)
+    assert back.count() == 1000
+    assert back.agg(F.sum("v")).collect()[0][0] == 999 * 1000

@@ -70,6 +70,11 @@ def test_video_signatures_all_or_nothing(spark):
     sigs = multimodal.video_frame_signatures(cut)
     got = {(r["media_id"], r["frame_index"]) for r in sigs.collect()}
     assert got == {(1, 0), (1, 1), (1, 2), (1, 3)}
+    # the fused gram-posting kernel applies the same rule: doc 2's
+    # three intact leading frames post no bigram either
+    grams = multimodal.video_gram_postings(cut, k=2)
+    got = {(r["media_id"], r["__pos"]) for r in grams.collect()}
+    assert got == {(1, 1), (1, 2), (1, 3)}
 
 
 def test_video_scene_pairs_find_planted_runs(spark):
