@@ -172,21 +172,27 @@ def jpeg_sof_decoder(b: bytes) -> dict:
         if seg_len < 2 or off + 2 + seg_len > len(b):
             raise ValueError("JPEG segment exceeds payload (truncated)")
         if marker in _JPEG_SOF_MARKERS:
-            if seg_len < 8:
-                raise ValueError("SOF segment too short")
-            precision, height, width, n_comp = struct.unpack_from(
-                ">BHHB", b, off + 4
-            )
-            if width == 0 or height == 0:
-                raise ValueError("zero JPEG dimension")
-            return {
-                "width": width,
-                "height": height,
-                "precision": precision,
-                "n_components": n_comp,
-            }
+            return _jpeg_sof(b, off, seg_len)
         off += 2 + seg_len
     raise ValueError("no SOF marker")
+
+
+def _jpeg_sof(b: bytes, off: int, seg_len: int) -> dict:
+    """The fields of the SOF segment at ``off``; raises when it is too
+    short or has a zero dimension."""
+    import struct
+
+    if seg_len < 8:
+        raise ValueError("SOF segment too short")
+    precision, height, width, n_comp = struct.unpack_from(">BHHB", b, off + 4)
+    if width == 0 or height == 0:
+        raise ValueError("zero JPEG dimension")
+    return {
+        "width": width,
+        "height": height,
+        "precision": precision,
+        "n_components": n_comp,
+    }
 
 
 register_decoder("image/png", png_header_decoder)
@@ -1388,16 +1394,19 @@ VIDEO_SIG_SCHEMA = "media_id long, frame_index long, fp long"
 
 
 def _frame_com_fp(frame: bytes) -> int:
-    """Fingerprint of one JPEG frame: validate the frame with the
-    registered SOF parser (raises on a malformed chain), then walk
-    the marker segments for exactly one COM carrying the ASCII-hex
+    """Fingerprint of one JPEG frame, in one walk of its marker
+    segments: the frame must pass the checks of the registered SOF
+    parser (:func:`jpeg_sof_decoder`: SOI, an unbroken chain, a valid
+    first SOF) and carry exactly one COM holding the ASCII-hex
     fingerprint.  Raises ``ValueError`` on any deviation — the
     all-or-nothing per-payload contract maps it to exclusion."""
     import struct
 
-    jpeg_sof_decoder(frame)
+    if len(frame) < 4 or frame[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload (no SOI)")
     off = 2
     com = None
+    sof = False
     while off + 4 <= len(frame):
         if frame[off] != 0xFF:
             raise ValueError("broken JPEG marker chain")
@@ -1411,7 +1420,12 @@ def _frame_com_fp(frame: bytes) -> int:
             if com is not None:
                 raise ValueError("multiple COM segments")
             com = frame[off + 4 : off + 2 + seg_len]
+        elif not sof and marker in _JPEG_SOF_MARKERS:
+            _jpeg_sof(frame, off, seg_len)
+            sof = True
         off += 2 + seg_len
+    if not sof:
+        raise ValueError("no SOF marker")
     if com is None:
         raise ValueError("no COM fingerprint segment")
     txt = com.decode("ascii", errors="strict")

@@ -65,6 +65,27 @@ def _with_unit(df: DataFrame, vec_col, out_col: str) -> DataFrame:
     )
 
 
+def _bounded_collect(
+    df: DataFrame,
+    max_queries: int,
+    op: str,
+    advice: str = "pre-filter the queries or raise max_queries explicitly",
+) -> list:
+    """``df``'s rows, collected up to one past ``max_queries``, for an
+    operator that broadcasts its query side; raises ``ValueError`` when
+    there are more than ``max_queries``.  One build-time job on a
+    single-partition side: a ``limit(n + 1).count()`` probe fires two
+    under AQE (its global limit's single-partition exchange runs as a
+    job of its own)."""
+    rows = df.limit(max_queries + 1).collect()
+    if len(rows) > max_queries:
+        raise ValueError(
+            f"{op} broadcasts the query side, but it has >{max_queries} "
+            f"rows; {advice}"
+        )
+    return rows
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -81,21 +102,20 @@ def cosine_topk(
 
     The query side is unconditionally broadcast (that is the whole
     design: the corpus never shuffles), so it must be small.
-    ``max_queries`` enforces that contract with a bounded probe —
-    ``limit(n+1).count()`` stops scanning once the limit is hit — and
-    raises an actionable error instead of letting an oversized query
-    set OOM the driver/executors mid-broadcast.  Callers that have
-    already bounded the query side can pass ``max_queries=None``.
+    ``max_queries`` enforces that contract with a bounded collect of
+    the query ids (:func:`_bounded_collect` stops scanning once the
+    limit is hit) and raises an actionable error instead of letting an
+    oversized query set OOM the driver/executors mid-broadcast.
+    Callers that have already bounded the query side can pass
+    ``max_queries=None``.
     """
     if max_queries is not None:
-        probe = queries.limit(max_queries + 1).count()
-        if probe > max_queries:
-            raise ValueError(
-                f"cosine_topk broadcasts the query side, but it has "
-                f">{max_queries} rows; pre-filter the queries, raise "
-                f"max_queries explicitly, or use the LSH/IVF paths "
-                f"(lsh_bucket_topk / ivf_topk) for corpus-scale input"
-            )
+        _bounded_collect(
+            queries.select(id_col), max_queries, "cosine_topk",
+            "pre-filter the queries, raise max_queries explicitly, or use "
+            "the LSH/IVF paths (lsh_bucket_topk / ivf_topk) for "
+            "corpus-scale input",
+        )
     q = _with_unit(
         queries.select(F.col(id_col).alias("query_id"), V.as_double(vec_col).alias("qv")),
         F.col("qv"),
@@ -1693,13 +1713,7 @@ def pq_adc_topk(
     total tiebreak.  The lookup-and-add chain is written in fixed
     subspace order, so scores replay bit-for-bit in SQL."""
     if max_queries is not None:
-        probe = queries.limit(max_queries + 1).count()
-        if probe > max_queries:
-            raise ValueError(
-                f"pq_adc_topk broadcasts the query side, but it has "
-                f">{max_queries} rows; pre-filter the queries or raise "
-                f"max_queries explicitly"
-            )
+        _bounded_collect(queries.select(id_col), max_queries, "pq_adc_topk")
     _require_codebooks(codebooks, "pq_adc_topk")
     ds = len(codebooks[0][0])
     codes = pq_encode(
@@ -1873,13 +1887,7 @@ def ivf_pq_adc_topk(
     under either route (residual = vector - ASSIGNED cell's centroid,
     and search probes assigned cells)."""
     if max_queries is not None:
-        probe_n = queries.limit(max_queries + 1).count()
-        if probe_n > max_queries:
-            raise ValueError(
-                f"ivf_pq_adc_topk broadcasts the query side, but it "
-                f"has >{max_queries} rows; pre-filter the queries or "
-                f"raise max_queries explicitly"
-            )
+        _bounded_collect(queries.select(id_col), max_queries, "ivf_pq_adc_topk")
     coarse, books = (
         model
         if model is not None
@@ -2226,14 +2234,10 @@ def int8_sdc_topk(
     # ONE build-time job both bounds the broadcast side and feeds the
     # blas route: the quantized queries, collected up to one past the
     # bound (zero vectors, which quantization drops, do not count)
-    if max_queries is not None or scorer == "blas":
-        qrows = (q if max_queries is None else q.limit(max_queries + 1)).collect()
-        if max_queries is not None and len(qrows) > max_queries:
-            raise ValueError(
-                f"int8_sdc_topk broadcasts the query side, but it has "
-                f">{max_queries} rows; pre-filter the queries or raise "
-                f"max_queries explicitly"
-            )
+    if max_queries is not None:
+        qrows = _bounded_collect(q, max_queries, "int8_sdc_topk")
+    elif scorer == "blas":
+        qrows = q.collect()
     if scorer == "blas":
         if not qrows:
             scorer = "expr"  # empty query side: the join is empty anyway
@@ -2603,13 +2607,7 @@ def binary_hamming_topk(
     Returns ``(query_id, neighbor_id, hamming, rank)``.
     """
     if max_queries is not None:
-        probe = queries.limit(max_queries + 1).count()
-        if probe > max_queries:
-            raise ValueError(
-                f"binary_hamming_topk broadcasts the query side, but it "
-                f"has >{max_queries} rows; pre-filter the queries or "
-                f"raise max_queries explicitly"
-            )
+        _bounded_collect(queries.select(id_col), max_queries, "binary_hamming_topk")
     n_words = (dim + 31) // 32
     q = binary_sign_pack(queries, id_col, vec_col, dim).select(
         F.col(id_col).alias("query_id"), F.col("code").alias("qc")

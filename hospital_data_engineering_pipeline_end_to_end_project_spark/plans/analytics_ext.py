@@ -32,6 +32,7 @@ from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.llm_ops i
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import (
     load_events,
     load_table,
+    read_parquet,
 )
 
 # ---------------------------------------------------------------------------
@@ -1377,7 +1378,7 @@ def q90_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_zordered(
         li, tmp, ["l_extendedprice", "l_quantity"], num_files=32
     )
-    back = spark.read.parquet(tmp)
+    back = read_parquet(spark, tmp)
     boxed = back.filter(
         (F.col("l_extendedprice") >= 10000.0)
         & (F.col("l_extendedprice") < 30000.0)

@@ -24,7 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.scratch import scratch_path
-from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import load_table
+from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import (
+    load_table,
+    read_parquet,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -76,7 +79,7 @@ def q40_hospital_medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = scratch_path("q40", "wh")
     medallion.run_silver(spark, raw, wh, "2026-01-15")
     star.run_gold(spark, wh)
-    mart = spark.read.parquet(os.path.join(wh, "gold", "agg_revenue_month"))
+    mart = read_parquet(spark, os.path.join(wh, "gold", "agg_revenue_month"))
     return mart.orderBy("year", "month")
 
 

@@ -221,9 +221,8 @@ def refresh_fact_partitions(
     for y, m in months:
         pred = pred | ((F.col("year") == y) & (F.col("month") == m))
     return write_observed(
-        df.filter(pred),
-        lambda sub: sub.repartition("year", "month")
-        .write.mode("overwrite")
+        df.filter(pred).repartition("year", "month"),
+        lambda sub: sub.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("year", "month")
         .parquet(os.path.join(warehouse, "gold", fact_name)),
@@ -244,7 +243,10 @@ def _write_tables(
         path = os.path.join(gold, name)
         if name in partitioned:
             return write_observed(
-                df, lambda d: write_partitioned(d, path, ["year", "month"])
+                df.repartition("year", "month"),
+                lambda d: write_partitioned(
+                    d, path, ["year", "month"], coalesce_per_partition=False
+                ),
             )["rows"]
         return write_observed(df, lambda d: write_table(d, path))["rows"]
 

@@ -39,6 +39,25 @@ created once per JVM, from the configuration of the JVM's first
 session, so it only takes effect when :func:`get_spark` builds that
 first session.  A session a caller builds itself, before or instead of
 ``get_spark``, keeps Spark's 100.
+
+Column call-site capture.  PySpark 4 turns
+``spark.python.sql.dataFrameDebugging.enabled`` on by default: every
+wrapped Column call (``F.col``, ``+``, ``F.when``, ...) then walks the
+Python stack for the first frame outside pyspark and records it in the
+JVM as the expression's origin, several extra Py4J round trips per
+call.  For every engine operator that frame is a line of the engine's
+own modules (``operators/*.py``, ``plans/*.py``), not the caller's
+code, so the context buys little in error messages while it is paid on
+every node of every DataFrame built.  ``get_spark`` turns it off.
+Measured per call on a 4-vCPU VM (local[2], warm session, on -> off):
+``col + col`` 0.95 -> 0.13 ms, ``F.when(..).otherwise(..)`` 2.48 ->
+0.55 ms, ``F.col`` 1.12 -> 0.29 ms.  The setting is static too, and
+PySpark reads it once per process
+(``pyspark.errors.utils.is_debugging_enabled`` caches the first
+answer), so it only takes effect when :func:`get_spark` builds the
+process's first session.  A caller who wants the call sites passes
+``{"spark.python.sql.dataFrameDebugging.enabled": "true"}`` through
+``extra_conf``.
 """
 
 from __future__ import annotations
@@ -81,6 +100,10 @@ def get_spark(
     - ``spark.sql.codegen.cache.maxEntries``: :data:`CODEGEN_CACHE_ENTRIES`,
       so a generated class is compiled once per JVM instead of once per
       pass (static: effective only in the JVM's first session).
+    - ``spark.python.sql.dataFrameDebugging.enabled`` = false: no Python
+      stack walk and JVM call-site record per Column call (static:
+      effective only in the process's first session; see the module
+      docstring).
     - ``spark.sql.parquet.filterPushdown`` / vectorized reader are Spark
       defaults and intentionally left on.
     """
@@ -96,6 +119,7 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # push full-scan MIN/MAX/COUNT to parquet footer statistics
         # (exact — the reader falls back to a normal scan whenever a
         # predicate, group-by, or non-pushable type makes stats

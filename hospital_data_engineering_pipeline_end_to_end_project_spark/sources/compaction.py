@@ -24,6 +24,8 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import read_parquet
+
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
@@ -60,7 +62,7 @@ def compact_table(
     before/after file counts and bytes.
     """
     bytes_before, files_before = _dir_stats(path)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if partition_cols:
         out = df.repartition(*partition_cols)
         writer = out.write.mode("overwrite").partitionBy(*partition_cols)
@@ -105,7 +107,7 @@ def zorder_table(
     from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.writers import write_zordered
 
     bytes_before, files_before = _dir_stats(path)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     n = num_files or max(1, math.ceil(bytes_before / target_file_bytes))
     tmp = f"{path}.zorder-{uuid.uuid4().hex[:8]}"
     write_zordered(df, tmp, cluster_cols, num_files=n, bits_per_dim=bits_per_dim)

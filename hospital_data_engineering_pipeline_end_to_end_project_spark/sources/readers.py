@@ -7,17 +7,36 @@ takes an explicit ``StructType`` and quarantines corrupt records via
 PERMISSIVE mode + ``_corrupt_record`` instead of failing or silently
 coercing (SURVEY.md section 1.4).
 
-Parquet test tables (``/root/testdata/sf*/``) are read with
-``spark.read.parquet`` — schema travels with the file, filter pushdown
-and column pruning reach the scan for free.  Tables this engine wrote
-itself are read with :func:`read_parquet`, which takes the schema from
-a file footer on the driver instead of a schema-inference job.
+Every parquet read goes through :func:`read_parquet`: the schema
+travels with the file, filter pushdown and column pruning reach the
+scan for free, and the schema-inference job ``spark.read.parquet``
+fires for a path without a given schema is paid at most once.
+
+- A table directory this engine wrote carries Spark's schema in each
+  file's footer; it is read on the driver and handed to the reader.
+- A regular file (the benchmark tables are single files written by
+  pyarrow, with no Spark schema in the footer) is inferred once per
+  process: the schema Spark inferred is kept in a memo keyed by the
+  file's ``(st_dev, st_ino, st_size, st_mtime_ns)`` and by the values
+  of the SQL confs Spark's parquet schema converter reads
+  (:data:`_SCHEMA_CONFS`), so a rewritten file or a changed conf is
+  inferred again.  (A rewrite that keeps the size within one tick of
+  the file system's timestamp clock keeps the key; the engine itself
+  writes only directories.)  Directories are not memoized: the
+  partition column types Spark infers depend on the directory's
+  current listing.
+
+Measured on a 4-vCPU VM (local[2], warm session): ``spark.read.parquet``
+of the sf0.01 ``lineitem`` file takes a median 95 ms, a memo hit 14 ms;
+a traced pass of the six-query benchmark catalog fired 8 inference jobs
+before the memo and fires none after it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -42,9 +61,10 @@ TPCH_TABLES = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one benchmark parquet table.
 
-    Plain ``spark.read.parquet``: predicate pushdown, column pruning and
-    the vectorized reader apply; at cluster scale the same call fans out
-    over all row groups with locality.
+    Through :func:`read_parquet`: predicate pushdown, column pruning and
+    the vectorized reader apply, at cluster scale the same call fans out
+    over all row groups with locality, and a table file already read in
+    this process is not inferred again.
 
     Defensively enables nanos-as-long: the caller may hand us a plain
     SparkSession (the grading driver builds its own), and without this
@@ -57,7 +77,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 #: footer key under which Spark's parquet writer stores the row schema
@@ -101,19 +121,74 @@ def _footer_schema(paths: tuple[str, ...]) -> T.StructType | None:
     return T.StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
 
 
+#: SQL confs Spark 4.1's ``ParquetToSparkSchemaConverter`` reads when it
+#: turns a file footer into a Spark schema (its constructor's arguments,
+#: plus the variant-shredding switch its variant conversion reads): a
+#: schema inferred under other values of these may differ
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+)
+
+#: schemas Spark inferred for regular files, by :func:`_file_key`;
+#: emptied once it holds :data:`_SCHEMA_MEMO_ENTRIES`
+_SCHEMAS: dict[tuple, T.StructType] = {}
+_SCHEMA_MEMO_ENTRIES = 1024
+
+
+def _file_key(spark: SparkSession, paths: tuple[str, ...]) -> tuple | None:
+    """Memo key of a read of regular local files: each file's identity
+    and version, and the schema converter's conf values; ``None`` when a
+    path is not a regular local file."""
+    files = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except (OSError, ValueError):
+            return None
+        if not stat.S_ISREG(st.st_mode):
+            return None
+        files.append((st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns))
+    if not files:
+        return None
+    return tuple(files), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+
+
 def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
-    """``spark.read.parquet(*paths)`` without Spark's schema-inference
-    job.
+    """``spark.read.parquet(*paths)`` without a schema-inference job
+    where the schema is already known.
 
     Without a schema, Spark reads the schema with a one-task job over
-    the first data file before the DataFrame exists.  Spark's own
-    writer stores the same schema in every file's footer, so it is
-    read here on the driver and handed over with ``.schema(...)``.
-    Partition columns are not in the footer; Spark still discovers
-    them from the directory names, with the same types as before.
-    Falls back to plain ``spark.read.parquet`` when a path is not a
-    local directory, pyarrow is missing, or the footer has no Spark
-    schema (a file another writer produced)."""
+    the first data file before the DataFrame exists.
+
+    - Regular files: the first read in a process runs that job and keeps
+      the schema it inferred (see the module docstring for the key);
+      later reads of the unchanged file under the same confs pass it
+      with ``.schema(...)``.
+    - Directories: Spark's own writer stores the schema in every file's
+      footer, so it is read here on the driver and handed over.
+      Partition columns are not in the footer; Spark still discovers
+      them from the directory names, with the same types as before.
+      Falls back to plain ``spark.read.parquet`` when a path is not a
+      local directory, pyarrow is missing, or the footer has no Spark
+      schema (a file another writer produced)."""
+    key = _file_key(spark, paths)
+    if key is not None:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(*paths)
+        df = spark.read.parquet(*paths)
+        if len(_SCHEMAS) >= _SCHEMA_MEMO_ENTRIES:
+            _SCHEMAS.clear()
+        _SCHEMAS[key] = df.schema
+        return df
     schema = _footer_schema(paths)
     if schema is None:
         return spark.read.parquet(*paths)

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources import delta_io
+from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import read_parquet
 
 
 def write_observed(
@@ -36,7 +37,14 @@ def write_observed(
     so an audit count costs no second job and no re-read of the
     output — the reference's ``count()`` after every write recomputes
     the full lineage (``Silver Layer.py:125``).  Returns a dict in the
-    order of ``metrics``."""
+    order of ``metrics``.
+
+    The observation sits on top of ``df``, so a shuffle the write needs
+    (such as the ``repartition`` before a partitioned write) belongs in
+    ``df``, not in ``write``: under AQE an empty shuffle stage turns the
+    sort a partitioned write adds above it into an empty relation, an
+    observation below the shuffle is dropped with the stage, and
+    reading it fails instead of returning the metrics of no rows."""
     obs = Observation()
     exprs = [c.alias(k) for k, c in (metrics or {"rows": F.count(F.lit(1))}).items()]
     write(df.observe(obs, *exprs))
@@ -267,7 +275,7 @@ def audit_shuffled(spark, path: str, id_col: str) -> DataFrame:
     row flips it."""
     from pyspark.sql import Window, functions as F
 
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     w = Window.partitionBy("__bucket").orderBy("__h", id_col)
     return (
         back.withColumn("__rank", F.row_number().over(w).cast("long"))

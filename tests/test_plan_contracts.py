@@ -461,3 +461,18 @@ def test_cdc_probe_broadcasts_batch_hashes(plans):
     p = plans["q185_cdc_probe_vs_index"]
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["q01_pricing_summary", "q04_star_join", "q06_latest_event_per_user", "q25_minhash_bands"],
+)
+def test_warm_build_fires_no_job(spark, name):
+    # the tables' schemas were inferred by the first build; a second
+    # build in the same process reads them with the schema it kept
+    from tests.test_readers import _jobs_fired
+
+    query = registry.queries()[name]
+    query(spark, SF)
+    _, jobs = _jobs_fired(spark, lambda: query(spark, SF))
+    assert jobs == 0

@@ -9,6 +9,7 @@ that mismatch and the correct whole-file path.
 from __future__ import annotations
 
 import textwrap
+import uuid
 
 import pytest
 
@@ -17,6 +18,7 @@ from pyspark.sql import types as T
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.sources.readers import (
     CORRUPT_COL,
+    load_table,
     read_ndjson,
     read_parquet,
 )
@@ -120,7 +122,10 @@ def test_register_views_sql_surface(spark):
 def _jobs_fired(spark, fn):
     """``fn()``'s result and the number of Spark jobs it fired."""
     sc = spark.sparkContext
-    group = f"read-parquet-{id(fn)}"
+    # a group no other call uses, in this or a second import of this
+    # module (pytest imports it as ``test_readers`` and, through other
+    # suites, ``tests.test_readers``): a shared group counts both calls' jobs
+    group = f"read-parquet-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         out = fn()
@@ -176,3 +181,94 @@ def test_read_parquet_falls_back_without_spark_footer(spark, tmp_path):
     plain = spark.read.parquet(str(path))
     assert df.schema == plain.schema
     assert sorted(map(repr, df.collect())) == sorted(map(repr, plain.collect()))
+
+
+# -- regular files: the inferred schema is kept per process --------------
+
+def _pyarrow_file(path, **columns):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(columns), str(path))
+    return str(path)
+
+
+def test_second_read_of_a_file_fires_no_job(spark, tmp_path):
+    import pyarrow as pa
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = _pyarrow_file(
+        sf / "lineitem.parquet",
+        id=[1, 2, None],
+        price=pa.array([1.5, None, 3.25]),
+        name=["a", None, "c"],
+    )
+    first, jobs = _jobs_fired(spark, lambda: read_parquet(spark, path))
+    assert jobs == 1, "the first read of a file infers its schema"
+    again, jobs = _jobs_fired(spark, lambda: read_parquet(spark, path))
+    assert jobs == 0, "the schema inferred for the unchanged file is reused"
+    table, jobs = _jobs_fired(spark, lambda: load_table(spark, str(sf), "lineitem"))
+    assert jobs == 0, "load_table goes through the same memo"
+    plain = spark.read.parquet(path)
+    want = sorted(map(repr, plain.collect()))
+    for df in (first, again, table):
+        assert df.schema == plain.schema
+        assert sorted(map(repr, df.collect())) == want
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    path = _pyarrow_file(tmp_path / "t.parquet", id=[1, 2])
+    read_parquet(spark, path)
+    _pyarrow_file(tmp_path / "t.parquet", id=["x", "y", "z"], n=[1.0, 2.0, 3.0])
+    df, jobs = _jobs_fired(spark, lambda: read_parquet(spark, path))
+    assert jobs == 1, "another file version: its schema is inferred"
+    assert df.schema == spark.read.parquet(path).schema
+    assert df.schema.simpleString() == "struct<id:string,n:double>"
+    assert sorted(r["id"] for r in df.collect()) == ["x", "y", "z"]
+
+
+def _with_conf(spark, key, value, fn):
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        return fn()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_schema_conf_is_part_of_the_key(spark, tmp_path):
+    import pyarrow as pa
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    nanos = _pyarrow_file(
+        tmp_path / "nanos.parquet",
+        ts=pa.array([1_700_000_000_123_456_789], type=pa.timestamp("ns")),
+    )
+    as_long = _with_conf(spark, key, "true", lambda: read_parquet(spark, nanos))
+    assert as_long.schema.simpleString() == "struct<ts:bigint>"
+    assert as_long.collect()[0]["ts"] == 1_700_000_000_123_456_789
+    # the other value of the conf: Spark rejects the nanos column, and so
+    # does a read that might have reused the schema inferred above
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        _with_conf(spark, key, "false", lambda: spark.read.parquet(nanos))
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        _with_conf(spark, key, "false", lambda: read_parquet(spark, nanos))
+    _, jobs = _jobs_fired(
+        spark, lambda: _with_conf(spark, key, "true", lambda: read_parquet(spark, nanos))
+    )
+    assert jobs == 0
+
+    # a conf whose other value yields another schema
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    micros = _pyarrow_file(
+        tmp_path / "micros.parquet",
+        ts=pa.array([1_700_000_000_123_456], type=pa.timestamp("us")),
+    )
+    ntz = _with_conf(spark, key, "true", lambda: read_parquet(spark, micros))
+    ltz = _with_conf(spark, key, "false", lambda: read_parquet(spark, micros))
+    assert ntz.schema.simpleString() == "struct<ts:timestamp_ntz>"
+    assert ltz.schema.simpleString() == "struct<ts:timestamp>"
+    assert ltz.schema == _with_conf(
+        spark, key, "false", lambda: spark.read.parquet(micros).schema
+    )

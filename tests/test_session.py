@@ -1,10 +1,11 @@
-"""The session factory's generated-code cache bound.
+"""The session factory's static settings.
 
 Spark keeps compiled generated classes in one JVM-wide LRU cache
 (``spark.sql.codegen.cache.maxEntries``, 100 by default).  The
 engine's working set is far larger, so ``get_spark`` raises the bound;
 these tests pin the setting and its effect: a query's classes survive
-the compilation of more than 100 other classes.
+the compilation of more than 100 other classes.  ``get_spark`` also
+turns PySpark's per-Column-call call-site capture off.
 """
 
 from __future__ import annotations
@@ -49,3 +50,10 @@ def test_query_classes_survive_more_than_100_other_compiles(spark):
     start = _compiled(spark)
     assert aggregate() == want
     assert _compiled(spark) == start, "the aggregate's classes were recompiled"
+
+
+def test_get_spark_turns_column_call_site_capture_off(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False

@@ -189,6 +189,23 @@ def test_local_checkpoint_only_in_materialize():
     }
 
 
+def test_parquet_reads_only_through_read_parquet():
+    """Every parquet read of the package goes through
+    ``readers.read_parquet``, so none pays a schema-inference job the
+    footer or the per-process schema memo already answers."""
+    pkg = os.path.dirname(os.path.dirname(shardstore.__file__))
+    hits = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                if ".read.parquet(" in fh.read():
+                    hits.append(os.path.relpath(path, pkg))
+    assert hits == [os.path.join("sources", "readers.py")]
+
+
 def test_reading_a_committed_store_fires_no_job(spark, tmp_path):
     # shards are Spark-written, so the read (and compaction's merge
     # read) take the schema from a footer instead of an inference job
