@@ -1,40 +1,39 @@
-"""Vector math over ``array<float>`` embedding columns.
+"""Vector math over ``array<float>`` embedding columns, as SQL text.
 
-Pure Column expressions (``zip_with`` + ``aggregate`` left-folds) —
-JVM-side, no UDF.  The fold order is the element order, so dot
-products are bit-identical to any engine that loops the list
+Builders take SQL text (a column name is SQL text) and return SQL
+text (see :mod:`.sqltext`), so ``as_double -> dot -> norm -> cosine``
+compose as strings and an operator wraps the result once with
+``F.expr``: one JVM call per expression instead of 24 Py4J round
+trips per Python lambda.  The folds are ``zip_with`` + ``aggregate``
+left-folds — JVM-side, no UDF.  The fold order is the element order,
+so dot products are bit-identical to any engine that loops the list
 sequentially (DuckDB's ``list_dot_product``), which is what makes
 similarity results oracle-checkable.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+def as_double(vec: str) -> str:
+    return f"transform({vec}, __e -> CAST(__e AS DOUBLE))"
 
 
-def as_double(vec: Column | str) -> Column:
-    v = F.col(vec) if isinstance(vec, str) else vec
-    return F.transform(v, lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def dot(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (__l, __r) -> __l * __r), 0.0D,"
+        " (__acc, __p) -> __acc + __p)"
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def norm(a: str) -> str:
+    return f"sqrt({dot(a, a)})"
 
 
-def cosine(a: Column, b: Column) -> Column:
+def cosine(a: str, b: str) -> str:
     """dot / (|a| * |b|) — written exactly like the oracle SQL
     (``sqrt(dot(a,a)) * sqrt(dot(b,b))`` — NOT ``sqrt(na*nb)``, which
     is a different float expression).  The denominator is nullif-
     guarded so a zero vector yields NULL on BOTH engines (Spark's
     non-ANSI x/0.0 is NULL; DuckDB's IEEE default is inf/NaN — NaN
     would sort above real similarities in a DESC top-k)."""
-    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
+    return f"{dot(a, b)} / nullif({norm(a)} * {norm(b)}, 0.0D)"

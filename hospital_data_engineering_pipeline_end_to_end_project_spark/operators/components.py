@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize, release
 
 #: Plain propagation rounds before pointer-jumping engages.  Near-dup
 #: graphs (diameter 2-4) converge before this and never pay the
@@ -125,7 +125,7 @@ def connected_components(
             # failure, same as the dedup indexes).  Monotone: every
             # label satisfies label(x) <= x after round one, so sums
             # still strictly decrease until the fixpoint.
-            labels = materialize(labels)
+            shortcut = labels = materialize(labels)
             l2 = labels.select(
                 F.col("node").alias("__n"), F.col("component").alias("__c")
             )
@@ -140,7 +140,12 @@ def connected_components(
         cur = labels.agg(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
+        # the collect materialized this round's checkpoint: nothing
+        # reads the persisted shortcut frame any more
+        if i >= _SHORTCUT_AFTER:
+            release(shortcut)
         if cur == prev_sum and (cur is not None or converged_empty):
+            release(closed)
             return labels
         converged_empty = cur is None
         prev_sum = cur

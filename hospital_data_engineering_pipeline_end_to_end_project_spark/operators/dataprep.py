@@ -260,14 +260,14 @@ def contamination(
     # most, but the bench slice shingles serially too without it
     bench_sh = (
         fan_out(df.filter(is_bench).select(id_col, text_col), by=id_col)
-        .select(F.explode(F.array_distinct(TX.shingles(text_col, shingle_n))).alias("s"))
+        .select(F.explode(F.array_distinct(F.expr(TX.shingles(text_col, shingle_n)))).alias("s"))
         .distinct()
     )
     train_sh = fan_out(
         df.filter(~is_bench).select(id_col, text_col), by=id_col
     ).select(
         id_col,
-        F.explode(F.array_distinct(TX.shingles(text_col, shingle_n))).alias("s"),
+        F.explode(F.array_distinct(F.expr(TX.shingles(text_col, shingle_n)))).alias("s"),
     )
     return (
         train_sh.join(F.broadcast(bench_sh), "s")
@@ -569,19 +569,14 @@ def quality_filter(
     # cheap attribute, and CollapseProject keeps the projections
     # separate because the alias is non-cheap and multiply-referenced
     # (r15; the linear cousin of the r14 HOF-binding class)
-    tk = F.col("__t")
-    stop = (
-        F.size(F.filter(tk, lambda x: x.isin(*TX.LANG_STOPWORDS["en"])))
-        .cast("double")
-        / F.size(tk)
-    )
+    stop = f"CAST({TX.hits('__t', TX.LANG_STOPWORDS['en'])} AS DOUBLE) / size(__t)"
     base = docs.select(
-        F.col(id_col), TX.tokens(text_col).alias("__t"), punct.alias("__punct")
+        F.col(id_col), F.expr(TX.tokens(text_col)).alias("__t"), punct.alias("__punct")
     ).select(
         F.col(id_col),
-        F.size(tk).cast("long").alias("n_tokens"),
+        F.size("__t").cast("long").alias("n_tokens"),
         F.col("__punct"),
-        stop.alias("__stop"),
+        F.expr(stop).alias("__stop"),
     )
     # shingling is a ~50x row expansion over an interpreted HOF: a
     # compact single-file scan would run it on ONE core — balance the
@@ -592,7 +587,7 @@ def quality_filter(
     rep = (
         fan_out(docs.select(F.col(id_col), F.col(text_col)), by=id_col)
         .select(
-            F.col(id_col), F.explode(TX.shingles(text_col, shingle_n)).alias("s")
+            F.col(id_col), F.explode(F.expr(TX.shingles(text_col, shingle_n))).alias("s")
         )
         .groupBy(id_col, "s")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -742,7 +737,7 @@ def boilerplate_stats(
 
     ex = fan_out(docs.select(F.col(id_col), F.col(text_col)), by=id_col).select(
         F.col(id_col),
-        F.explode(F.array_distinct(TX.shingles(text_col, shingle_n))).alias(
+        F.explode(F.array_distinct(F.expr(TX.shingles(text_col, shingle_n)))).alias(
             "s"
         ),
     )
@@ -830,7 +825,7 @@ def duplicated_passage_stats(
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
 
     toks = docs.select(
-        F.col(id_col), TX.tokens(text_col).alias("__t")
+        F.col(id_col), F.expr(TX.tokens(text_col)).alias("__t")
     ).filter(F.size("__t") >= gram_k)
     grams = materialize(
         _positional_grams(fan_out(toks, by=id_col), id_col, gram_k)
@@ -912,11 +907,11 @@ def contamination_scrub(
 
     bench_grams = (
         df.filter(is_bench)
-        .select(F.explode(TX.shingles(text_col, gram_k)).alias("g"))
+        .select(F.explode(F.expr(TX.shingles(text_col, gram_k))).alias("g"))
         .distinct()
     )
     train = df.filter(~is_bench).select(
-        F.col(id_col), TX.tokens(text_col).alias("__t")
+        F.col(id_col), F.expr(TX.tokens(text_col)).alias("__t")
     )
     grams = _positional_grams(
         fan_out(train.filter(F.size("__t") >= gram_k), by=id_col),
@@ -938,14 +933,13 @@ def contamination_scrub(
     joined = train.join(cov, id_col, "left").withColumn(
         "__cov", F.coalesce(F.col("__cov"), F.array().cast("array<int>"))
     )
-    kept = F.filter(
-        F.col("__t"), lambda x, i: ~F.array_contains(F.col("__cov"), i)
-    )
     return joined.select(
         F.col(id_col),
         F.size("__t").cast("long").alias("n_tokens"),
         F.size("__cov").cast("long").alias("n_masked"),
-        F.array_join(kept, " ").alias("clean_text"),
+        F.expr(
+            "array_join(filter(__t, (__kx, __ki) -> NOT array_contains(__cov, __ki)), ' ')"
+        ).alias("clean_text"),
     )
 
 
@@ -985,7 +979,7 @@ def source_divergence(
     # definition); the (group, token) aggregate's map-side combine
     # absorbs the scattered groups
     tok = fan_out(docs.select(F.col(group_col), F.col(text_col))).select(
-        F.col(group_col), F.explode(TX.tokens(text_col)).alias("t")
+        F.col(group_col), F.explode(F.expr(TX.tokens(text_col))).alias("t")
     )
     c_st = materialize(
         tok.groupBy(group_col, "t").agg(F.count(F.lit(1)).alias("c"))
@@ -1165,10 +1159,10 @@ def bigram_fluency(
     Returns ``(id_col, n_bigrams, fluency)`` for documents with at
     least one bigram (>= 2 tokens).
     """
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as _text
+    from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
 
     toks = df.select(
-        F.col(id_col), _text.tokens(text_col).alias("__t")
+        F.col(id_col), F.expr(TX.tokens(text_col)).alias("__t")
     ).filter(F.size("__t") >= 2)
     bg = toks.select(
         id_col,
@@ -1195,9 +1189,7 @@ def bigram_fluency(
         joined.groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.array_sort(
-                F.collect_list(F.struct("__pos", "__num", "__den"))
-            ).alias("__ps"),
+            F.expr("array_sort(collect_list(struct(__pos, __num, __den)))").alias("__ps"),
         )
         .select(
             id_col,
@@ -1331,7 +1323,7 @@ def token_gini(
     from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
 
     tok = df.select(
-        F.col(id_col), F.explode(TX.tokens(text_col)).alias("__t")
+        F.col(id_col), F.explode(F.expr(TX.tokens(text_col))).alias("__t")
     )
     c = F.col("__c")
     per = tok.groupBy(id_col, "__t").agg(F.count(F.lit(1)).alias("__c"))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
+from hospital_data_engineering_pipeline_end_to_end_project_spark.functions.sqltext import bind
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
 
@@ -117,7 +118,7 @@ def minhash_bands(
     # across cores first (no-op on an already-parallel scan)
     src = fan_out(df.select(F.col(id_col), F.col(text_col)), by=id_col)
     exploded = src.select(
-        F.col(id_col), F.explode(TX.shingles(text_col, shingle_n)).alias("s")
+        F.col(id_col), F.explode(F.expr(TX.shingles(text_col, shingle_n))).alias("s")
     )
     # 60 bits of the md5, reduced mod P; conv()'s decimal string fits
     # a long.  Every op here exists verbatim in the DuckDB oracle.
@@ -204,7 +205,7 @@ def jaccard_pair_counts(
     # in the scan stage, serially for a single-file input
     sh = fan_out(df.select(F.col(id_col), F.col(text_col)), by=id_col).select(
         F.col(id_col),
-        F.array_distinct(TX.shingles(text_col, shingle_n)).alias("sh"),
+        F.array_distinct(F.expr(TX.shingles(text_col, shingle_n))).alias("sh"),
     )
     a = sh.alias("a")
     b = sh.alias("b")
@@ -258,7 +259,7 @@ def _sparse_pair_counts(
     exploded = fan_out(df.select(id_col, key_col, text_col), by=id_col).select(
         F.col(id_col),
         F.col(key_col),
-        F.explode(F.array_distinct(TX.shingles(text_col, shingle_n))).alias("s"),
+        F.explode(F.array_distinct(F.expr(TX.shingles(text_col, shingle_n)))).alias("s"),
     )
     # one pass over the exploded stream computes BOTH per-doc set size
     # (window over the doc) and per-(key, shingle) document frequency
@@ -386,48 +387,25 @@ def containment_pairs(
     )
 
 
-def simhash16(col: Column | str) -> Column:
-    """16-bit SimHash from md5 nibbles, as a pure Column expression.
+def simhash16(col: str) -> Column:
+    """16-bit SimHash from md5 nibbles of the tokens of the SQL text
+    ``col``, as one expression.
 
     For bit ``i``: nibble = hex digit ``i DIV 4`` of md5(token),
     bit = ``(nibble >> (i mod 4)) & 1``; the simhash bit is set when
     the (+1/-1) balance over all tokens is strictly positive.
     16 bits keeps the expression tree codegen-friendly; at scale the
     same construction widens via an explode-aggregate formulation.
+    The md5 array is BOUND so the 16 per-bit folds share one
+    evaluation (each fold re-hashing every token would cost 16x).
     """
-    t = TX.tokens(col)
-
-    def bit_fold(pos: int, shift: int):
-        # closure factory: keeps the fold lambda strictly 2-arg
-        def fold(acc, h):
-            nib = (
-                F.instr(F.lit("0123456789abcdef"), F.substring(h, pos + 1, 1)) - 1
-            )
-            return acc + F.when(
-                nib.bitwiseAND(F.lit(1 << shift)) != 0, F.lit(1)
-            ).otherwise(F.lit(-1))
-
-        return fold
-
-    # the md5 array is BOUND as a lambda variable so the 16 per-bit
-    # folds share ONE evaluation — each fold referencing the
-    # tokenize+md5 expression directly re-hashes every token per bit
-    # (16x; interpreted HOF bodies, no subexpression cache — r14)
-    def _sim_of(hexes: Column) -> Column:
-        bit_terms = []
-        for i in range(16):
-            balance = F.aggregate(hexes, F.lit(0), bit_fold(i // 4, i % 4))
-            bit_terms.append(
-                F.when(balance > 0, F.lit(1 << i)).otherwise(F.lit(0))
-            )
-        out = bit_terms[0]
-        for term in bit_terms[1:]:
-            out = out + term
-        return out
-
-    return F.element_at(
-        F.transform(F.array(F.transform(t, lambda x: F.md5(x))), _sim_of), 1
+    bits = " + ".join(
+        "CASE WHEN aggregate(__hx, 0, (__hacc, __h) -> __hacc + CASE WHEN"
+        f" ((instr('0123456789abcdef', substring(__h, {i // 4 + 1}, 1)) - 1)"
+        f" & {1 << (i % 4)}) != 0 THEN 1 ELSE -1 END) > 0 THEN {1 << i} ELSE 0 END"
+        for i in range(16)
     )
+    return F.expr(bind(f"transform({TX.tokens(col)}, __ht -> md5(__ht))", "__hx", bits))
 
 
 #: Two's-complement value of a set bit 63 in a signed 64-bit long —
@@ -460,7 +438,7 @@ def simhash_agg(
     if not 1 <= bits <= 64:
         raise ValueError(f"simhash width must be 1..64, got {bits}")
     hx = fan_out(df.select(id_col, text_col), by=id_col).select(
-        F.col(id_col), F.explode(TX.tokens(text_col)).alias("tok")
+        F.col(id_col), F.explode(F.expr(TX.tokens(text_col))).alias("tok")
     ).select(F.col(id_col), F.md5("tok").alias("h"))
 
     # Decode the 16-hex-char md5 prefix to ONE signed 64-bit long per
@@ -820,7 +798,7 @@ def prefix_jaccard_join(
         raise ValueError(f"threshold must be in (0, 1]: {t_num}/{t_den}")
     sh = docs.select(
         F.col(id_col).alias("__doc"),
-        F.explode(F.array_distinct(TX.shingles(text_col, shingle_n))).alias("__s"),
+        F.explode(F.array_distinct(F.expr(TX.shingles(text_col, shingle_n)))).alias("__s"),
     )
     # consumed by FIVE subtrees (sizes, df table, ranking, both
     # verification probes) — materialize once (trap: AQE's one-side
@@ -955,63 +933,38 @@ def _winnow_fp_arrays(
     # into slice(start=0) and aborts the job.  For clamped short
     # docs the junk single-element arrays are dropped by the guard;
     # for guarded docs the clamp is inert (n_grams >= w >= 1).
-    # the TOKEN array is bound as a lambda variable too (r14): slicing
-    # the tokens() EXPRESSION from inside the per-gram lambda re-runs
-    # the split per gram — O(n²) per document, the same interpreted-HOF
-    # re-evaluation the `hs` binding below guards against one level up
-    def _hs_of(tk: Column) -> Column:
-        n_grams = F.greatest(F.size(tk) - (k - 1), F.lit(1))
-        return F.transform(
-            F.sequence(F.lit(1), n_grams),
-            lambda i: F.conv(F.substring(F.md5(F.array_join(F.slice(tk, i, k), " ")), 1, 15), 16, 10).cast("long"),
-        )
-
-    # the hash array is BOUND as a lambda variable (transform over a
-    # one-element wrapper) so the whole selection is a single
-    # expression in which `hs` is evaluated exactly once per row.
-    # Referencing an `__hs` COLUMN instead lets CollapseProject +
-    # InferFiltersFromGenerate inline the ~600-md5 transform once per
-    # reference — measured 30.3 s vs 1.1 s on the sf0.001 explode
-    # (the streaming index writer hit it; winnowing_pairs had always
-    # been shielded by materialize() cutting the plan).
-    def _select(hsv: Column) -> Column:
-        win_pos = F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.size(hsv) - (w - 1), F.lit(1))
-                ),
-                lambda j: j
-                + w
-                - F.array_position(
-                    F.reverse(F.slice(hsv, j, w)),
-                    F.array_min(F.slice(hsv, j, w)),
-                ),
-            )
-        )
-        # try_element_at keeps the expression TOTAL on guarded-out
-        # short docs, where the w-window position arithmetic can
-        # exceed the (junk, clamped) array; for guarded docs every
-        # position is in range and the value is identical
-        return F.array_distinct(
-            F.transform(
-                win_pos, lambda p: F.try_element_at(hsv, p.cast("int"))
-            )
-        )
-
-    fps = F.element_at(
-        F.transform(
-            F.array(toks),
-            lambda tk: F.element_at(F.transform(F.array(_hs_of(tk)), _select), 1),
-        ),
-        1,
+    # The token array and the hash array are both BOUND, so the whole
+    # selection is a single expression in which each is evaluated
+    # once per row.  Referencing an `__hs` COLUMN instead lets
+    # CollapseProject + InferFiltersFromGenerate inline the ~600-md5
+    # transform once per reference — measured 30.3 s vs 1.1 s on the
+    # sf0.001 explode (the streaming index writer hit it;
+    # winnowing_pairs had always been shielded by materialize()
+    # cutting the plan).  Each window's rightmost minimum position is
+    # ``j + w - position-in-reversed-window``; try_element_at keeps the
+    # expression TOTAL on guarded-out short docs, where that position
+    # can exceed the (junk, clamped) array.
+    select = (
+        f"array_distinct(transform(array_distinct(transform(sequence(1,"
+        f" greatest(size(__whs) - {w - 1}, 1)), __wj -> __wj + {w} -"
+        f" array_position(reverse(slice(__whs, __wj, {w})), array_min(slice(__whs, __wj, {w}))))),"
+        " __wp -> try_element_at(__whs, CAST(__wp AS INT))))"
     )
+    fps = bind(toks, "__gtk", bind(_gram_hashes("__gtk", k), "__whs", select))
+    return docs.filter(F.expr(f"size({toks}) >= {w + k - 1}")).select(
+        F.col(id_col),
+        F.expr(f"CAST(size({toks}) - {k - 1} AS INT)").alias("__nh"),
+        F.expr(fps).alias("__fps"),
+    )
+
+
+def _gram_hashes(tk: str, k: int) -> str:
+    """60-bit md5-derived hash of every ``k``-token window of the bound
+    token array ``tk`` (1-based positions; the sequence end is clamped
+    to 1, see ``_winnow_fp_arrays``)."""
     return (
-        docs.filter(F.size(toks) >= w + k - 1)
-        .select(
-            F.col(id_col),
-            (F.size(toks) - (k - 1)).cast("int").alias("__nh"),
-            fps.alias("__fps"),
-        )
+        f"transform(sequence(1, greatest(size({tk}) - {k - 1}, 1)), __gi ->"
+        f" CAST(conv(substring(md5(array_join(slice({tk}, __gi, {k}), ' ')), 1, 15), 16, 10) AS BIGINT))"
     )
 
 
@@ -1261,11 +1214,11 @@ def _lsh_verify(
     )
     shc = corpus_cand.select(
         F.col(id_col).alias("corpus_doc"),
-        F.array_distinct(TX.shingles(text_col, shingle_n)).alias("__shc"),
+        F.array_distinct(F.expr(TX.shingles(text_col, shingle_n))).alias("__shc"),
     )
     shb = batch.select(
         F.col(id_col).alias("batch_doc"),
-        F.array_distinct(TX.shingles(text_col, shingle_n)).alias("__shb"),
+        F.array_distinct(F.expr(TX.shingles(text_col, shingle_n))).alias("__shb"),
     )
     inter = F.size(F.array_intersect("__shb", "__shc"))
     union = F.size("__shb") + F.size("__shc") - inter
@@ -1347,9 +1300,7 @@ def tf_cosine_join(
     """
     if not (0 < t_num <= t_den):
         raise ValueError(f"threshold must be in (0, 1]: {t_num}/{t_den}")
-    terms = (
-        TX.tokens(text_col) if term_n == 1 else TX.shingles(text_col, term_n)
-    )
+    terms = F.expr(TX.tokens(text_col) if term_n == 1 else TX.shingles(text_col, term_n))
     cnt = (
         fan_out(docs.select(F.col(id_col), F.col(text_col)), by=id_col)
         .select(F.col(id_col).alias("__doc"), F.explode(terms).alias("__t"))
@@ -1575,31 +1526,13 @@ def positional_gram_hashes(
     InferFiltersFromGenerate evaluates it beside (not after) the
     short-doc guard — see the note in ``_winnow_fp_arrays``."""
     toks = TX.tokens(text_col)
-    # bind the token array as a lambda variable: slicing the tokens()
-    # EXPRESSION from inside the per-gram lambda re-runs the split per
-    # gram (interpreted HOF bodies, no subexpression cache) — O(n²)
-    # per document (the r14 finding; same trap as _winnow_fp_arrays)
-    hs = F.element_at(
-        F.transform(
-            F.array(toks),
-            lambda tk: F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.size(tk) - (k - 1), F.lit(1))
-                ),
-                lambda i: F.conv(
-                    F.substring(
-                        F.md5(F.array_join(F.slice(tk, i, k), " ")), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-            ),
-        ),
-        1,
-    )
+    # bind the token array: slicing the tokens() EXPRESSION from
+    # inside the per-gram lambda re-runs the split per gram — O(n²)
+    # per document (same trap as _winnow_fp_arrays)
+    hs = bind(toks, "__gtk", _gram_hashes("__gtk", k))
     return (
-        docs.filter(F.size(toks) >= k)
-        .select(F.col(id_col), F.posexplode(hs).alias("__p0", "__h"))
+        docs.filter(F.expr(f"size({toks}) >= {k}"))
+        .select(F.col(id_col), F.posexplode(F.expr(hs)).alias("__p0", "__h"))
         .select(id_col, (F.col("__p0") + 1).alias("__pos"), "__h")
     )
 
@@ -1737,26 +1670,21 @@ def boundary_stitch_pairs(
         broadcast_anchors = n_docs <= ANCHOR_BROADCAST_MAX_DOCS
     base = materialize(
         fan_out(docs.select(F.col(id_col), F.col(text_col)), by=id_col)
-        .select(F.col(id_col).alias("__id"), TX.tokens(text_col).alias("__t"))
+        .select(F.col(id_col).alias("__id"), F.expr(TX.tokens(text_col)).alias("__t"))
         .withColumn("__n", F.size("__t"))
         .filter(F.col("__n") >= k)
     )
-    gram = lambda t, i: F.md5(F.array_join(F.slice(t, i, k), " "))  # noqa: E731
+    grams = f"transform(sequence(1, __n - {k - 1}), __ai -> md5(array_join(slice(__t, __ai, {k}), ' ')))"
     post = base.select(
         F.col("__id").alias("left_doc"),
         F.col("__n").alias("__na"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("__n") - (k - 1)),
-                lambda i: gram(F.col("__t"), i),
-            )
-        ).alias("__p0", "__g"),
+        F.posexplode(F.expr(grams)).alias("__p0", "__g"),
     ).select(
         "left_doc", "__na", (F.col("__p0") + 1).alias("__p"), "__g"
     )
     anchors = base.select(
         F.col("__id").alias("right_doc"),
-        gram(F.col("__t"), F.lit(1)).alias("__g"),
+        F.expr(f"md5(array_join(slice(__t, 1, {k}), ' '))").alias("__g"),
     )
     if max_df is not None:
         # anti-join the tiny ABOVE-cap set (AQE broadcasts it) — the
@@ -1866,7 +1794,7 @@ def stitch_merge(
         mids.select(F.col("__mid").alias("right_doc")), "right_doc", "left_anti"
     )
     toks = docs.select(
-        F.col(id_col).alias("__id"), TX.tokens(text_col).alias("__t")
+        F.col(id_col).alias("__id"), F.expr(TX.tokens(text_col)).alias("__t")
     )
     ta = toks.select(F.col("__id").alias("left_doc"), F.col("__t").alias("__ta"))
     tb = toks.select(
@@ -1927,56 +1855,39 @@ def cdc_chunks(
     n_tokens)`` — one row per chunk, ``chunk_idx`` 0-based in
     document order; empty documents yield no rows.
     """
-    toks = TX.tokens(text_col)
-
-    # token array and break list are BOUND as lambda variables
-    # (transform over a one-element wrapper — the established idiom):
+    # token array and break list are BOUND (:func:`~.sqltext.bind`):
     # slicing the tokens() EXPRESSION from inside the boundary filter
-    # re-runs the split per candidate position (interpreted HOF
-    # bodies, no subexpression cache) — O(n²) per document — and the
-    # `breaks` expression referenced from both `starts` and `ends`
-    # would re-run the whole md5 boundary scan twice (r14)
-    def _chunks_of(tk: Column) -> Column:
-        n = F.size(tk)
-        gram_of = lambda i: F.concat_ws("|", F.slice(tk, i - w + 1, F.lit(w)))  # noqa: E731
-        is_boundary = (
-            lambda i: F.conv(F.substring(F.md5(gram_of(i)), 1, 4), 16, 10).cast(
-                "long"
-            )
-            % boundary_mod
-            == 0
-        )  # noqa: E731
-        # candidate boundary positions are w..n-1 (a break at n would
-        # open an empty trailing chunk); sequence() descends when
-        # start > stop, so guard the short-doc case explicitly
-        idxs = F.when(n > w, F.sequence(F.lit(w), n - 1)).otherwise(
-            F.array().cast("array<int>")
+    # re-runs the split per candidate position — O(n²) per document —
+    # and the break list referenced from both the starts and the ends
+    # would re-run the whole md5 boundary scan twice.  Candidate
+    # boundary positions are w..n-1 (a break at n would open an empty
+    # trailing chunk); sequence() descends when start > stop, so the
+    # short-doc case is guarded explicitly.
+    gram = f"concat_ws('|', slice(__ctk, __ci - {w} + 1, {w}))"
+    idxs = (
+        f"CASE WHEN size(__ctk) > {w} THEN sequence({w}, size(__ctk) - 1)"
+        " ELSE CAST(array() AS array<int>) END"
+    )
+    breaks = (
+        f"filter({idxs}, __ci -> CAST(conv(substring(md5({gram}), 1, 4), 16, 10)"
+        f" AS BIGINT) % {boundary_mod} = 0)"
+    )
+    segs = (
+        "zip_with(concat(array(1), transform(__cbr, __cb -> __cb + 1)),"
+        " concat(__cbr, array(size(__ctk))),"
+        " (__cs, __ce) -> concat_ws(' ', slice(__ctk, __cs, __ce - __cs + 1)))"
+    )
+    chunks = bind(TX.tokens(text_col), "__ctk", bind(breaks, "__cbr", segs))
+    return (
+        docs.selectExpr(id_col, f"posexplode({chunks}) AS (chunk_idx, chunk_text)")
+        .filter("chunk_text != ''")
+        .selectExpr(
+            id_col,
+            "CAST(chunk_idx AS BIGINT) AS chunk_idx",
+            "chunk_text",
+            "md5(chunk_text) AS chunk_hash",
+            "CAST(size(split(chunk_text, ' ', -1)) AS BIGINT) AS n_tokens",
         )
-
-        def _segs_of(br: Column) -> Column:
-            starts = F.concat(F.array(F.lit(1)), F.transform(br, lambda b: b + 1))
-            ends = F.concat(br, F.array(n))
-            return F.zip_with(
-                starts,
-                ends,
-                lambda s, e: F.concat_ws(" ", F.slice(tk, s, e - s + 1)),
-            )
-
-        return F.element_at(
-            F.transform(F.array(F.filter(idxs, is_boundary)), _segs_of), 1
-        )
-
-    chunks = F.element_at(F.transform(F.array(toks), _chunks_of), 1)
-    out = docs.select(
-        F.col(id_col),
-        F.posexplode(chunks).alias("chunk_idx", "chunk_text"),
-    ).filter(F.col("chunk_text") != "")
-    return out.select(
-        id_col,
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        "chunk_text",
-        F.md5("chunk_text").alias("chunk_hash"),
-        F.size(F.split("chunk_text", " ")).cast("long").alias("n_tokens"),
     )
 
 

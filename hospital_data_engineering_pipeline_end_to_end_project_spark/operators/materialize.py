@@ -28,8 +28,12 @@ session on every call, so one setting covers every operator::
     Lineage is retained, so an executor loss recomputes the lost
     blocks instead of failing — the fault-tolerant choice for long
     multi-hour jobs on preemptible hardware.  Still pays the
-    construction-time job; the caller owns ``unpersist()`` (or
-    ``spark.catalog.clearCache()``) if the session lives on.
+    construction-time job.  An operator that supersedes one of its
+    own persisted intermediates (a training step's vocabulary, a
+    sample whose centroids are collected) frees it with
+    :func:`release` once the successor is materialized; the caller
+    owns ``unpersist()`` (or ``spark.catalog.clearCache()``) of what
+    an operator returns if the session lives on.
 
 ``"lazy"``
     No materialization.  Construction is free; the caller either
@@ -69,3 +73,12 @@ def materialize(df: DataFrame) -> DataFrame:
         f"unknown materialize mode {mode!r} in {CONF_KEY}: "
         f"expected one of {MODES}"
     )
+
+
+def release(df: DataFrame) -> None:
+    """Free a frame :func:`materialize` persisted, once nothing still
+    reads its blocks: ``unpersist()`` under ``persist``, nothing under
+    ``eager`` and ``lazy``.  A frame whose lineage runs through the
+    released one stays correct; it recomputes instead of reading."""
+    if df.sparkSession.conf.get(CONF_KEY, EAGER) == PERSIST:
+        df.unpersist()

@@ -181,8 +181,17 @@ def merge(
         in_scope = in_scope & pf
         bypass = bypass | ~pf
     history = state.filter(bypass).selectExpr(*out_cols)
-    rows = batch.withColumns(
-        {**_stamp_cols(processing_date), _SIDE: F.lit(0)}
+    # the batch side carries a NULL effective date; the final select
+    # sets it.  A date literal here would be inlined into the
+    # generated classes of the batch's whole map side (Spark inlines
+    # Date literals into the Java source), so every processing date
+    # compiled them anew
+    rows = batch.selectExpr(
+        *entity_sql,
+        f"CAST(NULL AS DATE) AS {EFFECTIVE}",
+        f"CAST(NULL AS DATE) AS {END}",
+        f"true AS {CURRENT}",
+        f"0 AS {_SIDE}",
     ).unionByName(state.filter(in_scope).selectExpr(*out_cols, f"1 AS {_SIDE}"))
 
     # Window partitioning groups NULL keys together, so a NULL
@@ -216,7 +225,10 @@ def merge(
         f"{_SIDE} = 1 OR ({_RANK} = 1 AND NOT {_UNCHANGED})"
     ).select(
         *map(F.expr, entity_sql),
-        F.expr(_q(EFFECTIVE)),
+        F.expr(
+            f"CASE WHEN {_SIDE} = 0 THEN CAST('{processing_date}' AS DATE)"
+            f" ELSE {_q(EFFECTIVE)} END AS {EFFECTIVE}"
+        ),
         F.when(expire, F.lit(processing_date).cast("date"))
         .otherwise(F.expr(_q(END)))
         .alias(END),

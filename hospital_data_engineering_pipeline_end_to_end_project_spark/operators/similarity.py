@@ -38,12 +38,14 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import vectors as V
-from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
+from hospital_data_engineering_pipeline_end_to_end_project_spark.functions.sqltext import bind, darray, dlit, dmatrix
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize, release
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
 
 
-def _with_unit(df: DataFrame, vec_col, out_col: str) -> DataFrame:
-    """Append a unit-normalized double copy of ``vec_col``.
+def _with_unit(df: DataFrame, vec: str, out_col: str) -> DataFrame:
+    """Append a unit-normalized copy of the ``array<double>`` SQL
+    expression ``vec`` (usually the name of an ``as_double`` column).
 
     The norm is materialized as a column first so its fold runs once
     per ROW — inlining ``norm(v)`` inside the transform lambda would
@@ -57,10 +59,9 @@ def _with_unit(df: DataFrame, vec_col, out_col: str) -> DataFrame:
     last under DESC on both (Spark desc = nulls last; DuckDB default
     null order = nulls last).  The oracle SQL applies the identical
     guard (``_UNIT`` in ``plans/llm_ops.py``)."""
-    v = V.as_double(vec_col) if isinstance(vec_col, str) else vec_col
     return (
-        df.withColumn("__norm", F.nullif(V.norm(v), F.lit(0.0)))
-        .withColumn(out_col, F.transform(v, lambda x: x / F.col("__norm")))
+        df.withColumn("__norm", F.expr(f"nullif({V.norm(vec)}, 0.0D)"))
+        .withColumn(out_col, F.expr(f"transform({vec}, __u -> __u / __norm)"))
         .drop("__norm")
     )
 
@@ -117,8 +118,8 @@ def cosine_topk(
             "corpus-scale input",
         )
     q = _with_unit(
-        queries.select(F.col(id_col).alias("query_id"), V.as_double(vec_col).alias("qv")),
-        F.col("qv"),
+        queries.select(F.col(id_col).alias("query_id"), F.expr(V.as_double(vec_col)).alias("qv")),
+        "qv",
         "qnv",
     ).drop("qv")
     # the corpus side does all the scoring work (|corpus| x |queries|
@@ -128,10 +129,10 @@ def cosine_topk(
         fan_out(
             corpus.select(
                 F.col(id_col).alias("neighbor_id"),
-                V.as_double(vec_col).alias("cv"),
+                F.expr(V.as_double(vec_col)).alias("cv"),
             )
         ),
-        F.col("cv"),
+        "cv",
         "cnv",
     ).drop("cv")
     # broadcast the query side: it is the small, pre-filtered side by
@@ -144,7 +145,7 @@ def cosine_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(V.dot(F.col("qnv"), F.col("cnv")), round_scale).alias("cos_sim"),
+            F.expr(f"round({V.dot('qnv', 'cnv')}, {round_scale})").alias("cos_sim"),
         )
     )
     # per-query rank via the salted TWO-LEVEL top-k (identical by the
@@ -165,35 +166,6 @@ def hyperplanes(dim: int, n_planes: int = 8, seed: int = 20260813) -> list[list[
     return [
         [rng.uniform(-1.0, 1.0) for _ in range(dim)] for _ in range(n_planes)
     ]
-
-
-def _dlit(x: float) -> str:
-    """A double literal as SQL text: ``repr`` is the shortest string
-    that round-trips the exact IEEE value, and the ``D`` suffix keeps
-    Spark from parsing bare decimals as DECIMAL."""
-    return repr(float(x)) + "D"
-
-
-def _darray(values: list[float]):
-    """A literal ``array<double>`` built as ONE parsed expression.
-    The ``F.array(*[F.lit(x) ...])`` form costs one py4j round trip
-    PER ELEMENT — measured ~3 s of pure driver time per q31-shaped
-    plan build (24 tables x 3 planes x 64 dims of literals); the
-    expr-string form is one call and one parse (the same lesson as
-    the SimHash/zorder expression strings)."""
-    return F.expr("array(" + ", ".join(_dlit(x) for x in values) + ")")
-
-
-def _dmatrix(rows: list[list[float]]):
-    """A literal ``array<array<double>>`` as ONE parsed expression
-    (K x dim centroid matrices: K=80 was ~5k py4j calls)."""
-    return F.expr(
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(_dlit(x) for x in r) + ")" for r in rows
-        )
-        + ")"
-    )
 
 
 #: With an OR-construction, a true near-dup pair co-buckets in most of
@@ -223,7 +195,7 @@ def _score_unique_pairs(
         .select(
             left,
             right,
-            F.round(V.dot(F.col("__ln"), F.col("__rn")), 6).alias("cos_sim"),
+            F.expr(f"round({V.dot('__ln', '__rn')}, 6)").alias("cos_sim"),
         )
     )
 
@@ -235,8 +207,8 @@ def _unit_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     n_tables x n_planes dot products PER ROW, so the compact scan is
     balanced across cores first (no-op on an already-parallel scan)."""
     return _with_unit(
-        fan_out(df.select(F.col(id_col), V.as_double(vec_col).alias("v"))),
-        F.col("v"),
+        fan_out(df.select(F.col(id_col), F.expr(V.as_double(vec_col)).alias("v"))),
+        "v",
         "nv",
     ).drop("v")
 
@@ -258,12 +230,14 @@ def _multi_table_buckets(
     buckets = []
     for t in range(n_tables):
         planes = hyperplanes(dim, n_planes, seed=20260813 + 7919 * t)
-        b = F.lit(0)
-        for j, plane in enumerate(planes):
-            b = b + F.when(
-                V.dot(F.col("nv"), _darray(plane)) > 0, F.lit(1 << j)
-            ).otherwise(F.lit(0))
-        buckets.append(b.alias(f"b{t}"))
+        b = " + ".join([
+            "0",
+            *(
+                f"CASE WHEN {V.dot('nv', darray(plane))} > 0 THEN {1 << j} ELSE 0 END"
+                for j, plane in enumerate(planes)
+            ),
+        ])
+        buckets.append(F.expr(b).alias(f"b{t}"))
     return base.select(F.col(id_col), F.col("nv"), *buckets).select(
         F.col(id_col),
         F.col("nv"),
@@ -356,7 +330,7 @@ def lsh_bucket_topk(
             .select(
                 F.col(f"a.{id_col}").alias("query_id"),
                 F.col(f"c.{id_col}").alias("neighbor_id"),
-                F.round(V.dot(F.col("a.nv"), F.col("c.nv")), 6).alias("cos_sim"),
+                F.expr(f"round({V.dot('a.nv', 'c.nv')}, 6)").alias("cos_sim"),
             )
             .dropDuplicates(["query_id", "neighbor_id"])
         )
@@ -463,7 +437,7 @@ def build_ivf_centroids(
     ):
         rows = [
             [float(x) for x in r["__tv"]]
-            for r in df.select(F.col(id_col), V.as_double(vec_col).alias("__tv"))
+            for r in df.select(F.col(id_col), F.expr(V.as_double(vec_col)).alias("__tv"))
             .orderBy(*order)
             .limit(cap)
             .collect()
@@ -482,14 +456,14 @@ def build_ivf_centroids(
     if not _force_distributed and cap <= NUMPY_TRAIN_MAX_ROWS:
         rows = [
             [float(x) for x in r["__tv"]]
-            for r in df.select(F.col(id_col), V.as_double(vec_col).alias("__tv"))
+            for r in df.select(F.col(id_col), F.expr(V.as_double(vec_col)).alias("__tv"))
             .orderBy(*order)
             .limit(cap)
             .collect()
         ]
         return _numpy_lloyd(rows, min(k, len(rows)), iterations)
     sample = materialize(
-        df.select(F.col(id_col), V.as_double(vec_col).alias("__tv"))
+        df.select(F.col(id_col), F.expr(V.as_double(vec_col)).alias("__tv"))
         .orderBy(*order)
         .limit(cap)
     )
@@ -520,33 +494,43 @@ def build_ivf_centroids(
         for r in rows:
             new[r["cluster"]][r["dim"]] = r["m"]
         centroids = [new[c] for c in sorted(new)]
+    release(sample)
     return centroids
 
 
-def _centroid_dists(v, centroids: list[list[float]]):
-    """array<double> of squared L2 distances from ``v`` to each
-    centroid: the K x dim centroid matrix enters the plan ONCE as a
-    2-D array literal (one parsed expression — see :func:`_dmatrix`),
-    and each distance is the same sequential zip_with/aggregate fold
-    the oracles replay."""
-    cents = _dmatrix(centroids)
-    # the vector is BOUND as a lambda variable: referencing the
-    # as_double() cast expression from inside the per-centroid lambda
-    # re-casts the vector once per centroid (K x dim instead of dim —
-    # interpreted HOF bodies re-evaluate their subtrees, r14)
-    return F.element_at(
-        F.transform(
-            F.array(v),
-            lambda vv: F.transform(
-                cents,
-                lambda p: F.aggregate(
-                    F.zip_with(vv, p, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-            ),
-        ),
-        1,
+def _sq_dist(a: str, b: str) -> str:
+    """Squared L2 distance of two ``array<double>`` SQL expressions: the
+    sequential zip_with/aggregate fold the oracles replay."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (__da, __db) -> (__da - __db) * (__da - __db)),"
+        " 0.0D, (__dacc, __dx) -> __dacc + __dx)"
+    )
+
+
+def _centroid_dists(v: str, centroids: list[list[float]]) -> str:
+    """array<double> of squared L2 distances from the SQL vector ``v``
+    to each centroid: the K x dim centroid matrix enters the plan ONCE
+    as a 2-D array literal (:func:`~.sqltext.dmatrix`).  The vector is
+    BOUND (:func:`~.sqltext.bind`): referencing the as_double() cast
+    from inside the per-centroid lambda re-casts it once per centroid
+    (K x dim instead of dim)."""
+    return bind(v, "__cv", f"transform({dmatrix(centroids)}, __cp -> {_sq_dist('__cv', '__cp')})")
+
+
+def _argmin0(d: str) -> str:
+    """0-based int position of the first minimum of the SQL array
+    ``d``, which is bound once (array_position and array_min would
+    each re-run all K distance folds)."""
+    return bind(d, "__am", "CAST(array_position(__am, array_min(__am)) - 1 AS INT)")
+
+
+def _probe_list(dists: str, ids: str, nprobe: int) -> str:
+    """The ``nprobe`` ids of the smallest distances, ties to the lower
+    id (struct sort on (d, c))."""
+    return (
+        f"transform(slice(array_sort(zip_with({dists}, {ids},"
+        " (__pd, __pc) -> named_struct('d', __pd, 'c', __pc))), 1, "
+        f"{nprobe}), __ps -> CAST(__ps.c AS INT))"
     )
 
 
@@ -563,22 +547,8 @@ def assign_ivf_cluster(
     EXPONENTIAL in K (driver OOM around K ~ 80, found by
     ``scale_check.py``).  The array form is linear in K x dim and
     survives production cluster counts (K ~ sqrt(n))."""
-    v = V.as_double(vec_col)
-    d = _centroid_dists(v, centroids)
-    # bind the K-entry distance array once: argmin references it twice
-    # (array_position + array_min), and each reference re-runs all K
-    # distance folds (r14)
     return df.withColumn(
-        "cluster",
-        F.element_at(
-            F.transform(
-                F.array(d),
-                lambda dd: (
-                    F.array_position(dd, F.array_min(dd)) - 1
-                ).cast("int"),
-            ),
-            1,
-        ),
+        "cluster", F.expr(_argmin0(_centroid_dists(V.as_double(vec_col), centroids)))
     )
 
 
@@ -688,59 +658,26 @@ def ivf_topk(
         # the index build is a per-row distance pass — balance a
         # compact scan across cores first (no-op when the scan is
         # already parallel)
-        fan_out(df.select(F.col(id_col), V.as_double(vec_col).alias("v"))),
-        F.col("v"),
+        fan_out(df.select(F.col(id_col), F.expr(V.as_double(vec_col)).alias("v"))),
+        "v",
         "nv",
     )
     if hierarchical:
         meta, super_cents = _hier_routing(df.sparkSession, centroids, None)
-        sup_d = _centroid_dists(F.col("v"), super_cents)
-        # bind the routing-distance array once (argmin = two
-        # references, each re-running the sqrt(K) folds — r14)
-        sup = F.element_at(
-            F.transform(
-                F.array(sup_d),
-                lambda sd: (
-                    F.array_position(sd, F.array_min(sd)) - 1
-                ).cast("int"),
-            ),
-            1,
-        )
-        routed = base.withColumn("__sup", sup).join(F.broadcast(meta), "__sup")
-        structs = F.zip_with(
-            F.col("__kids"),
-            F.col("__kid_ids"),
-            lambda p, c: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("v"), p, lambda a, b: (a - b) * (a - b)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                c.alias("c"),
-            ),
-        )
-        probes = F.transform(
-            F.slice(F.array_sort(structs), 1, nprobe),
-            lambda s: s["c"].cast("int"),
+        sup = _argmin0(_centroid_dists("v", super_cents))
+        routed = base.withColumn("__sup", F.expr(sup)).join(F.broadcast(meta), "__sup")
+        probes = _probe_list(
+            f"transform(__kids, __kp -> {_sq_dist('v', '__kp')})", "__kid_ids", nprobe
         )
         index = materialize(
-            routed.select(F.col(id_col), probes.alias("__probes"), F.col("nv"))
+            routed.select(F.col(id_col), F.expr(probes).alias("__probes"), F.col("nv"))
         )
     else:
-        dists = _centroid_dists(F.col("v"), centroids)
-        structs = F.zip_with(
-            dists,
-            F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-            lambda d, c: F.struct(d.alias("d"), c.alias("c")),
-        )
-        probes = F.transform(
-            F.slice(F.array_sort(structs), 1, nprobe),
-            lambda s: s["c"].cast("int"),
+        probes = _probe_list(
+            _centroid_dists("v", centroids), f"sequence(0, {len(centroids) - 1})", nprobe
         )
         index = materialize(
-            base.select(F.col(id_col), probes.alias("__probes"), F.col("nv"))
+            base.select(F.col(id_col), F.expr(probes).alias("__probes"), F.col("nv"))
         )
     if scorer == "blocked":
         scored = _blocked_cluster_topk(index, id_col, k)
@@ -766,7 +703,7 @@ def ivf_topk(
         scored = cand.select(
             F.col(f"q.{id_col}").alias("query_id"),
             F.col(f"c.{id_col}").alias("neighbor_id"),
-            F.round(V.dot(F.col("q.nv"), F.col("c.nv")), 6).alias("cos_sim"),
+            F.expr(f"round({V.dot('q.nv', 'c.nv')}, 6)").alias("cos_sim"),
         )
     else:
         raise ValueError(
@@ -1145,7 +1082,7 @@ def embedding_near_dup_pairs(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.round(V.dot(F.col("a.nv"), F.col("b.nv")), 6).alias("cos_sim"),
+            F.expr(f"round({V.dot('a.nv', 'b.nv')}, 6)").alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
@@ -1163,13 +1100,13 @@ def brute_force_near_dup_pairs(
     pre-normalized scoring formula, so boundary pairs round the same
     way on both sides of the recall comparison)."""
     a = _with_unit(
-        df.select(F.col(id_col).alias("id_a"), V.as_double(vec_col).alias("va")),
-        F.col("va"),
+        df.select(F.col(id_col).alias("id_a"), F.expr(V.as_double(vec_col)).alias("va")),
+        "va",
         "na",
     ).drop("va")
     b = _with_unit(
-        df.select(F.col(id_col).alias("id_b"), V.as_double(vec_col).alias("vb")),
-        F.col("vb"),
+        df.select(F.col(id_col).alias("id_b"), F.expr(V.as_double(vec_col)).alias("vb")),
+        "vb",
         "nb",
     ).drop("vb")
     return (
@@ -1177,7 +1114,7 @@ def brute_force_near_dup_pairs(
         .select(
             "id_a",
             "id_b",
-            F.round(V.dot(F.col("na"), F.col("nb")), 6).alias("cos_sim"),
+            F.expr(f"round({V.dot('na', 'nb')}, 6)").alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -1240,7 +1177,6 @@ def semantic_dedup(
     # runs the whole pass on one core: measured 6.7 s -> <1 s at
     # 20k x K=80)
     src = fan_out(df.select(F.col(id_col), F.col(vec_col)))
-    v = V.as_double(vec_col)
     if hierarchical:
         assigned = assign_ivf_cluster_hierarchical(
             src, centroids, vec_col, with_dist=True
@@ -1250,8 +1186,8 @@ def semantic_dedup(
             F.col("__hdist").alias("__dist"),
         )
     else:
-        d = _centroid_dists(v, centroids)
-        assigned = src.select(F.col(id_col), d.alias("__d")).select(
+        d = _centroid_dists(V.as_double(vec_col), centroids)
+        assigned = src.select(F.col(id_col), F.expr(d).alias("__d")).select(
             F.col(id_col),
             (F.array_position("__d", F.array_min("__d")) - 1)
             .cast("long")
@@ -1382,51 +1318,22 @@ def assign_ivf_cluster_hierarchical(
     """
     meta, super_cents = _hier_routing(df.sparkSession, centroids, n_super)
     v = V.as_double(vec_col)
-    sup_d = _centroid_dists(v, super_cents)
-    # bind the routing-distance array once (argmin = two references,
-    # each re-running the sqrt(K) folds otherwise — r14)
-    sup = F.element_at(
-        F.transform(
-            F.array(sup_d),
-            lambda sd: (F.array_position(sd, F.array_min(sd)) - 1).cast("int"),
-        ),
-        1,
-    )
-    routed = df.withColumn("__sup", sup).join(F.broadcast(meta), "__sup")
+    sup = _argmin0(_centroid_dists(v, super_cents))
+    routed = df.withColumn("__sup", F.expr(sup)).join(F.broadcast(meta), "__sup")
     # child distances: the vector cast is bound (one evaluation, not
-    # one per child centroid), and each consumer binds the kd array
-    # so its argmin/min references share one evaluation
-    kd = F.element_at(
-        F.transform(
-            F.array(v),
-            lambda vv: F.transform(
-                F.col("__kids"),
-                lambda p: F.aggregate(
-                    F.zip_with(vv, p, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-            ),
-        ),
-        1,
-    )
+    # one per child centroid), and the argmin binds the kd array so
+    # its two references share one evaluation
+    kd = bind(v, "__cv", f"transform(__kids, __cp -> {_sq_dist('__cv', '__cp')})")
     out = routed.withColumn(
         "cluster",
-        F.element_at(
-            F.transform(
-                F.array(kd),
-                lambda kdv: F.element_at(
-                    F.col("__kid_ids"),
-                    F.array_position(kdv, F.array_min(kdv)).cast("int"),
-                ),
-            ),
-            1,
-        ).cast("int"),
+        F.expr(
+            f"CAST({bind(kd, '__kd', 'element_at(__kid_ids, CAST(array_position(__kd, array_min(__kd)) AS INT))')} AS INT)"
+        ),
     )
     if with_dist:
         # squared distance to the chosen centroid (``__hdist``) rides
         # along for callers ranking within clusters (semantic_dedup)
-        out = out.withColumn("__hdist", F.array_min(kd))
+        out = out.withColumn("__hdist", F.expr(f"array_min({kd})"))
     return out.drop("__sup", "__kid_ids", "__kids")
 
 
@@ -1557,7 +1464,7 @@ def build_pq_codebooks(
     order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
     rows = [
         [float(x) for x in r["__tv"]]
-        for r in df.select(F.col(id_col), V.as_double(vec_col).alias("__tv"))
+        for r in df.select(F.col(id_col), F.expr(V.as_double(vec_col)).alias("__tv"))
         .orderBy(*order)
         .limit(cap)
         .collect()
@@ -1664,23 +1571,10 @@ def pq_encode(
     if _resolve_pq_encoder(len(codebooks[0]), encoder) == "blas":
         return _pq_codes_blas(df, id_col, vec_col, codebooks)
     ds = len(codebooks[0][0])
-    out = df.select(F.col(id_col), V.as_double(vec_col).alias("__xd"))
+    out = df.select(F.col(id_col), F.expr(V.as_double(vec_col)).alias("__xd"))
     for m, book in enumerate(codebooks):
-        d = _centroid_dists(F.slice(F.col("__xd"), m * ds + 1, ds), book)
-        # bind the k-entry distance array once per subspace: argmin
-        # references it twice, each re-running all k folds (r14)
-        out = out.withColumn(
-            f"code_{m}",
-            F.element_at(
-                F.transform(
-                    F.array(d),
-                    lambda dd: (
-                        F.array_position(dd, F.array_min(dd)) - 1
-                    ).cast("int"),
-                ),
-                1,
-            ),
-        )
+        d = _centroid_dists(f"slice(__xd, {m * ds + 1}, {ds})", book)
+        out = out.withColumn(f"code_{m}", F.expr(_argmin0(d)))
     return out.drop("__xd")
 
 
@@ -1720,12 +1614,12 @@ def pq_adc_topk(
         corpus, id_col, vec_col, codebooks, encoder=encoder
     ).withColumnRenamed(id_col, "neighbor_id")
     q = queries.select(
-        F.col(id_col).alias("query_id"), V.as_double(vec_col).alias("__qd")
+        F.col(id_col).alias("query_id"), F.expr(V.as_double(vec_col)).alias("__qd")
     )
     for m, book in enumerate(codebooks):
         q = q.withColumn(
             f"__qt{m}",
-            _centroid_dists(F.slice(F.col("__qd"), m * ds + 1, ds), book),
+            F.expr(_centroid_dists(f"slice(__qd, {m * ds + 1}, {ds})", book)),
         )
     q = q.drop("__qd")
     # fixed left-to-right subspace order — the oracle writes the same
@@ -1791,7 +1685,7 @@ def build_ivf_pq(
     order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
     rows = [
         [float(x) for x in r["__tv"]]
-        for r in df.select(F.col(id_col), V.as_double(vec_col).alias("__tv"))
+        for r in df.select(F.col(id_col), F.expr(V.as_double(vec_col)).alias("__tv"))
         .orderBy(*order)
         .limit(cap)
         .collect()
@@ -1908,7 +1802,7 @@ def ivf_pq_adc_topk(
     src = fan_out(
         corpus.select(
             F.col(id_col).alias("neighbor_id"),
-            V.as_double(vec_col).alias("__xd"),
+            F.expr(V.as_double(vec_col)).alias("__xd"),
         )
     )
     if _resolve_hierarchical(len(coarse), hierarchical):
@@ -1929,37 +1823,24 @@ def ivf_pq_adc_topk(
             cluster_col="cluster",
         )
     else:
-        resid = assigned.withColumn("__cm", _dmatrix(coarse)).withColumn(
+        resid = assigned.withColumn("__cm", F.expr(dmatrix(coarse))).withColumn(
             "__rd",
             F.expr(
                 "zip_with(__xd, element_at(__cm, cluster + 1), (a, b) -> a - b)"
             ),
         )
         for m, book in enumerate(books):
-            d = _centroid_dists(F.slice(F.col("__rd"), m * ds + 1, ds), book)
-            # bind the k-entry distance array once per subspace (the
-            # pq_encode argmin fix — r14)
-            resid = resid.withColumn(
-                f"code_{m}",
-                F.element_at(
-                    F.transform(
-                        F.array(d),
-                        lambda dd: (
-                            F.array_position(dd, F.array_min(dd)) - 1
-                        ).cast("int"),
-                    ),
-                    1,
-                ),
-            )
+            d = _centroid_dists(f"slice(__rd, {m * ds + 1}, {ds})", book)
+            resid = resid.withColumn(f"code_{m}", F.expr(_argmin0(d)))
         codes = resid.select(
             "neighbor_id", "cluster", *[f"code_{m}" for m in range(n_sub)]
         )
 
     # --- query side: nprobe cells + per-cell residual tables ---
     q = queries.select(
-        F.col(id_col).alias("query_id"), V.as_double(vec_col).alias("__qd")
+        F.col(id_col).alias("query_id"), F.expr(V.as_double(vec_col)).alias("__qd")
     )
-    cd = _centroid_dists(F.col("__qd"), coarse)
+    cd = F.expr(_centroid_dists("__qd", coarse))
     probes = (
         q.select(
             "query_id",
@@ -1976,7 +1857,7 @@ def ivf_pq_adc_topk(
         )
         .filter(F.col("__crank") <= nprobe)
         .select("query_id", F.col("__c0").alias("cluster"), "__qd")
-        .withColumn("__cm", _dmatrix(coarse))
+        .withColumn("__cm", F.expr(dmatrix(coarse)))
         .withColumn(
             "__qr",
             F.expr(
@@ -1987,7 +1868,7 @@ def ivf_pq_adc_topk(
     for m, book in enumerate(books):
         probes = probes.withColumn(
             f"__qt{m}",
-            _centroid_dists(F.slice(F.col("__qr"), m * ds + 1, ds), book),
+            F.expr(_centroid_dists(f"slice(__qr, {m * ds + 1}, {ds})", book)),
         )
     probes = probes.drop("__qd", "__cm", "__qr")
 
@@ -2094,7 +1975,6 @@ def int8_quantize(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     single IEEE op, so codes, scales and norms replay bit-for-bit in
     SQL.  Returns ``(id_col, __s, __n, __qv)``."""
     v = V.as_double(vec_col)
-    amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
     # __s is BOUND as a projection column and the code transform
     # references it per element as a cheap attribute: a second
     # array_max reference in the same projection would re-scan the
@@ -2104,20 +1984,16 @@ def int8_quantize(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     # is pushed below the projection by the optimizer, so amax is
     # still evaluated once in the filter and once in the projection
     # (2 linear scans total, down from 3).
-    pre = df.select(
-        F.col(id_col),
-        v.alias("__v"),
-        (amax / F.lit(127.0)).alias("__s"),
-    )
-    return pre.select(
-        F.col(id_col),
+    return df.selectExpr(
+        id_col,
+        f"{v} AS __v",
+        f"array_max(transform({v}, __e -> abs(__e))) / 127.0D AS __s",
+    ).selectExpr(
+        id_col,
         "__s",
-        V.norm(F.col("__v")).alias("__n"),
-        F.transform(
-            "__v",
-            lambda x: F.floor(x / F.col("__s") + F.lit(0.5)).cast("int"),
-        ).alias("__qv"),
-    ).filter(F.col("__s") > 0)
+        f"{V.norm('__v')} AS __n",
+        "transform(__v, __e -> CAST(floor(__e / __s + 0.5D) AS INT)) AS __qv",
+    ).filter("__s > 0")
 
 
 def _int8_idot_blas(codes: DataFrame, qrows: list) -> DataFrame:
@@ -2255,12 +2131,9 @@ def int8_sdc_topk(
                 "query_id",
                 "__s_q",
                 "__n_q",
-                F.aggregate(
-                    F.zip_with(
-                        "__qv", "__qv_q", lambda a, b: (a * b).cast("long")
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
+                F.expr(
+                    "aggregate(zip_with(__qv, __qv_q, (__a, __b) -> CAST(__a * __b AS BIGINT)),"
+                    " 0L, (__acc, __x) -> __acc + __x)"
                 ).alias("__idot"),
             )
         )
@@ -2339,18 +2212,10 @@ def power_iteration_pc(
     deterministic 3-step direction.  The one ``collect`` is bounded
     driver control flow: dim(dim+3)/2 + 1 scalar rows.  Returns
     ``(id_col, pc1_proj, rank)``."""
-    v = V.as_double(vec_col)
     C = _exact_covariance(df, vec_col, dim, quant_scale)
     vec = _power_steps(C, dim, iterations)
 
-    proj = F.round(
-        F.aggregate(
-            F.zip_with(v, _darray(vec), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        round_scale,
-    )
+    proj = F.expr(f"round({V.dot(V.as_double(vec_col), darray(vec))}, {round_scale})")
     scored = df.select(F.col(id_col), proj.alias("pc1_proj"))
     # distributed top-k FIRST (TakeOrderedAndProject: per-partition
     # partial top-k, merged at the driver), THEN rank the bounded k
@@ -2374,8 +2239,7 @@ def _exact_covariance(
     import numpy as np
     import pandas as pd
 
-    v = V.as_double(vec_col)
-    src = fan_out(df.select(v.alias("__v")))
+    src = fan_out(df.select(F.expr(V.as_double(vec_col)).alias("__v")))
     n_sums = 1 + dim + dim * (dim + 1) // 2
 
     def gen(batches):
@@ -2504,19 +2368,13 @@ def pca_project(
             for i in range(dim)
         ]
     v = V.as_double(vec_col)
-    cols = [F.col(id_col)]
-    for m, d in enumerate(dirs):
-        cols.append(
-            F.round(
-                F.aggregate(
-                    F.zip_with(v, _darray(d), lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                round_scale,
-            ).alias(f"pc{m + 1}_proj")
-        )
-    return df.select(*cols)
+    return df.select(
+        F.col(id_col),
+        *[
+            F.expr(f"round({V.dot(v, darray(d))}, {round_scale})").alias(f"pc{m + 1}_proj")
+            for m, d in enumerate(dirs)
+        ],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2552,32 +2410,16 @@ def binary_sign_pack(
     scan speed and the packed corpus is ``dim/8`` bytes per vector.
     """
     n_words = (dim + 31) // 32
-    v = V.as_double(vec_col)
-
-    def _word(vv: Column, base: int):
-        # closure factory, NOT a default arg: F.aggregate inspects the
-        # lambda's arity and a bound default would read as 3 params
-        return F.aggregate(
-            F.sequence(F.lit(31), F.lit(0), F.lit(-1)),
-            F.lit(0).cast("long"),
-            lambda acc, i: acc * 2
-            + F.when(
-                F.element_at(vv, (i + F.lit(base + 1)).cast("int")) > 0,
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-
-    # the cast vector is BOUND as a lambda variable: element_at on the
-    # as_double() expression from inside the fold re-casts the whole
-    # vector once per BIT (dim² — interpreted HOF bodies, r14)
-    packed = F.element_at(
-        F.transform(
-            F.array(v),
-            lambda vv: F.array(*[_word(vv, 32 * w) for w in range(n_words)]),
-        ),
-        1,
+    words = ", ".join(
+        "aggregate(sequence(31, 0, -1), 0L, (__wacc, __wi) -> __wacc * 2"
+        f" + CASE WHEN element_at(__bv, CAST(__wi + {32 * w + 1} AS INT)) > 0 THEN 1 ELSE 0 END)"
+        for w in range(n_words)
     )
-    return df.select(F.col(id_col), packed.alias(out_col))
+    # the cast vector is BOUND: element_at on the as_double()
+    # expression from inside the fold re-casts the whole vector once
+    # per BIT (dim²)
+    packed = bind(V.as_double(vec_col), "__bv", f"array({words})")
+    return df.select(F.col(id_col), F.expr(packed).alias(out_col))
 
 
 def binary_hamming_topk(
@@ -2691,7 +2533,7 @@ def jl_project(
     (nullif-guarded for zero vectors).
 
     Scale shape: a pure per-row map — the projection matrix is a
-    literal in the plan (ONE parsed expression via :func:`_dmatrix`,
+    literal in the plan (ONE parsed expression via :func:`~.sqltext.dmatrix`,
     never per-element ``F.lit``), no shuffle, no UDF; at 100 TB this
     is the cheap front of an ANN pipeline (project 64->16, then
     bucket/search in the reduced space at 4x less compute and I/O).
@@ -2702,17 +2544,12 @@ def jl_project(
     inv = 1.0 / math.sqrt(float(out_dim))
     v = V.as_double(vec_col)
     comps = [
-        (V.dot(v, _darray(s)) * F.lit(inv)).alias(f"__p{k}")
+        F.expr(f"{V.dot(v, darray(s))} * {dlit(inv)}").alias(f"__p{k}")
         for k, s in enumerate(signs)
     ]
-    base = df.select(F.col(id_col), V.norm(v).alias("__vn"), *comps)
-    pn = F.sqrt(
-        F.aggregate(
-            F.array(*[F.col(f"__p{k}") for k in range(out_dim)]),
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-        )
-    )
+    base = df.select(F.col(id_col), F.expr(V.norm(v)).alias("__vn"), *comps)
+    ps = ", ".join(f"__p{k}" for k in range(out_dim))
+    pn = F.expr(f"sqrt(aggregate(array({ps}), 0.0D, (__jacc, __jx) -> __jacc + __jx * __jx))")
     return base.select(
         F.col(id_col),
         *[
@@ -2773,16 +2610,16 @@ def hamming_rerank_topk(
     c = _with_unit(
         corpus.select(
             F.col(id_col).alias("neighbor_id"),
-            V.as_double(vec_col).alias("cv"),
+            F.expr(V.as_double(vec_col)).alias("cv"),
         ),
-        F.col("cv"),
+        "cv",
         "cnv",
     ).drop("cv")
     q = _with_unit(
         queries.select(
-            F.col(id_col).alias("query_id"), V.as_double(vec_col).alias("qv")
+            F.col(id_col).alias("query_id"), F.expr(V.as_double(vec_col)).alias("qv")
         ),
-        F.col("qv"),
+        "qv",
         "qnv",
     ).drop("qv")
     scored = (
@@ -2791,9 +2628,7 @@ def hamming_rerank_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(V.dot(F.col("qnv"), F.col("cnv")), round_scale).alias(
-                "cos_sim"
-            ),
+            F.expr(f"round({V.dot('qnv', 'cnv')}, {round_scale})").alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -26,7 +26,7 @@ bit-for-bit):
 - the winning pair per step is ``ORDER BY count DESC, a ASC, b ASC
   LIMIT 1`` — a total deterministic order, no engine tie luck;
 - the merge itself is a GREEDY LEFT-TO-RIGHT fold implemented as
-  ``F.aggregate`` (Spark) / ``list_reduce`` (DuckDB) over the symbol
+  ``aggregate`` (Spark SQL) / ``list_reduce`` (DuckDB) over the symbol
   list with a string accumulator: append each symbol, except when the
   accumulator ends with the complete symbol ``' '||a`` and the next
   symbol is ``b`` — then replace the tail with ``' '||a||b``.  The
@@ -45,18 +45,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize
+from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
+from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.materialize import materialize, release
 
 
 def word_freqs(df: DataFrame, text_col: str) -> DataFrame:
     """Collapse the corpus to its ``(word, freq)`` vocabulary — the
     ONE corpus-sized pass.  Words are whitespace tokens; empty tokens
     from repeated spaces are dropped."""
-    tok = df.select(
-        F.explode(
-            F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-        ).alias("word")
-    )
+    tok = df.select(F.explode(F.expr(TX.tokens(text_col))).alias("word"))
     return tok.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("freq"))
 
 
@@ -106,25 +103,15 @@ def bpe_train_steps(
     return steps_df
 
 
-def _merge_fold(sym: Column, a: Column, b: Column) -> Column:
+def _merge_fold(sym: str, a: str, b: str) -> Column:
     """Greedy left-to-right merge of pair (a, b) over a spaced symbol
     string — the string-accumulator fold the module docstring proves
-    exact (separator-bounded suffix test)."""
-    syms = F.filter(F.split(sym, " "), lambda x: x != "")
-    return F.aggregate(
-        syms,
-        F.lit(""),
-        lambda acc, x: F.when(
-            (x == b) & acc.endswith(F.concat(F.lit(" "), a)),
-            F.concat(
-                F.substring(
-                    acc, F.lit(1), F.length(acc) - F.length(a) - F.lit(1)
-                ),
-                F.lit(" "),
-                a,
-                b,
-            ),
-        ).otherwise(F.concat(acc, F.lit(" "), x)),
+    exact (separator-bounded suffix test).  Arguments are SQL text."""
+    return F.expr(
+        f"aggregate({TX.tokens(sym)}, '', (__macc, __mx) -> CASE WHEN __mx = {b}"
+        f" AND endswith(__macc, concat(' ', {a})) THEN concat(substring(__macc, 1,"
+        f" length(__macc) - length({a}) - 1), ' ', {a}, {b})"
+        " ELSE concat(__macc, ' ', __mx) END)"
     )
 
 
@@ -151,9 +138,7 @@ def bpe_train_from_vocab(
 
     out: DataFrame | None = None
     for step in range(1, steps + 1):
-        wsyms = words.withColumn(
-            "_syms", F.filter(F.split(F.col("_sym"), " "), lambda x: x != "")
-        )
+        wsyms = words.withColumn("_syms", F.expr(TX.tokens("_sym")))
         counts = _pair_counts(wsyms)
         # global-order window over the POST-AGGREGATE pair table —
         # bounded by (symbol vocabulary)^2 observed pairs, not corpus
@@ -181,12 +166,11 @@ def bpe_train_from_vocab(
         merged = (
             words.withColumn("_wk", F.lit(1))
             .join(F.broadcast(winner), "_wk", "left")
-            .withColumn(
-                "_sym", _merge_fold(F.col("_sym"), F.col("_ma"), F.col("_mb"))
-            )
+            .withColumn("_sym", _merge_fold("_sym", "_ma", "_mb"))
             .select("word", "freq", "_sym")
         )
-        words = materialize(merged)
+        superseded, words = words, materialize(merged)
+        release(superseded)
     return out, words.select("word", "freq", F.col("_sym").alias("sym"))
 
 
@@ -208,9 +192,7 @@ def bpe_compression_by_group(
     the output aggregate is map-side combinable."""
     tok = df.select(
         F.col(group_col),
-        F.explode(
-            F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-        ).alias("word"),
+        F.explode(F.expr(TX.tokens(text_col))).alias("word"),
     )
     gw = tok.groupBy(group_col, "word").agg(
         F.count(F.lit(1)).cast("long").alias("_f")
@@ -218,9 +200,7 @@ def bpe_compression_by_group(
     enc = final_vocab.select(
         "word",
         F.length("word").cast("long").alias("_nc"),
-        F.size(F.filter(F.split(F.col("sym"), " "), lambda x: x != ""))
-        .cast("long")
-        .alias("_ns"),
+        F.expr(f"CAST({TX.token_count('sym')} AS BIGINT)").alias("_ns"),
     )
     return (
         gw.join(enc, "word")

@@ -23,6 +23,7 @@ from hospital_data_engineering_pipeline_end_to_end_project_spark.operators impor
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import dataprep
 from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import similarity
 from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
+from hospital_data_engineering_pipeline_end_to_end_project_spark.functions.sqltext import lit
 from hospital_data_engineering_pipeline_end_to_end_project_spark.plans import llm_ops
 from hospital_data_engineering_pipeline_end_to_end_project_spark.plans.llm_ops import (
     Q25_SQL,
@@ -796,7 +797,7 @@ def q79_corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents").filter(
-        TX.token_count("text") >= Q79_MIN_TOKENS
+        f"{TX.token_count('text')} >= {Q79_MIN_TOKENS}"
     )
     bands = dedupe.minhash_bands(
         d, "doc_id", "text", num_hashes=8, bands=4, shingle_n=5
@@ -961,7 +962,7 @@ def q82_outer_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
 
     sh = fan_out(d.select("doc_id", "text"), by="doc_id").select(
-        "doc_id", TX.shingles("text", 40).alias("sh")
+        "doc_id", F.expr(TX.shingles("text", 40)).alias("sh")
     )
     flat = sh.select(
         "doc_id", F.posexplode_outer("sh").alias("pos", "shingle")
@@ -1192,12 +1193,11 @@ def q87_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc lengths via size() — no explode, no corpus-wide shuffle —
     # and the token array is filtered to the query terms BEFORE the
     # explode, so only matching occurrences ever become rows
-    dl = d.select("doc_id", F.size(TX.tokens("text")).cast("long").alias("dl"))
+    dl = d.selectExpr("doc_id", f"CAST({TX.token_count('text')} AS BIGINT) AS dl")
+    terms = ", ".join(map(lit, Q87_TERMS))
     qtok = d.select(
         "doc_id",
-        F.explode(
-            F.filter(TX.tokens("text"), lambda x: x.isin(*Q87_TERMS))
-        ).alias("term"),
+        F.explode(F.expr(f"filter({TX.tokens('text')}, __w -> __w IN ({terms}))")).alias("term"),
     )
     return dataprep.bm25_topk(
         qtok, "doc_id", "term", Q87_TERMS, k=Q87_K, doc_lengths=dl

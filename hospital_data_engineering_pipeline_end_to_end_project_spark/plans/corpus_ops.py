@@ -353,7 +353,7 @@ def q103_mergeable_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = materialize(
         fan_out(d.select("source", "text")).select(
             "source",
-            F.explode(F.array_distinct(TX.shingles("text", 3))).alias("t"),
+            F.explode(F.array_distinct(F.expr(TX.shingles("text", 3)))).alias("t"),
         )
     )
     # the per-source sketch feeds the per-source estimates AND the
@@ -559,7 +559,7 @@ def q106_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = fan_out(d.select("source", "text")).select(
         "source",
-        F.explode(F.array_distinct(TX.shingles("text", 3))).alias("t"),
+        F.explode(F.array_distinct(F.expr(TX.shingles("text", 3)))).alias("t"),
     )
     # the sketch feeds per-source estimates AND both sides of the
     # pair union (three consumers) — materialize the parts x k rows
@@ -967,7 +967,7 @@ def q124_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     sized = d.select(
-        "source", "doc_id", F.size(text.tokens("text")).alias("n_tokens")
+        "source", "doc_id", F.size(F.expr(text.tokens("text"))).alias("n_tokens")
     )
     return dataprep.token_budget_mix(
         sized, "source", "doc_id", "n_tokens", budget=_Q124_BUDGET

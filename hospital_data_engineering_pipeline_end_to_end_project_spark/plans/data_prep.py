@@ -90,7 +90,7 @@ Q52_BUDGET = 2048
 def q52_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sized = d.select(
-        "doc_id", "source", TX.token_count("text").cast("long").alias("n_tokens")
+        "doc_id", "source", F.expr(TX.token_count("text")).cast("long").alias("n_tokens")
     )
     # packed per source shard: the window partitions on source, so the
     # layout parallelizes across shards instead of one global sort
@@ -122,7 +122,7 @@ Q53_WINDOW = 64
 def q53_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sized = d.select(
-        "doc_id", TX.token_count("text").cast("long").alias("n_tokens")
+        "doc_id", F.expr(TX.token_count("text")).cast("long").alias("n_tokens")
     )
     return dataprep.chunk_documents(sized, "doc_id", "n_tokens", Q53_WINDOW)
 
@@ -255,7 +255,7 @@ def q56_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = (
         fan_out(d.select("doc_id", "text"), by="doc_id")
         .select(
-            "doc_id", F.explode(TX.shingles("text", Q56_SHINGLE_N)).alias("s")
+            "doc_id", F.explode(F.expr(TX.shingles("text", Q56_SHINGLE_N))).alias("s")
         )
         .groupBy("doc_id", "s")
         .agg(F.count(F.lit(1)).alias("c"))

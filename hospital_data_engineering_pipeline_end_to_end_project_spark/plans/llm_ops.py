@@ -71,12 +71,12 @@ FROM documents
 
 def q21_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    qf = TX.quality_features(F.col("text"))
-    return d.select(
+    qf = TX.quality_features("text")
+    return d.selectExpr(
         "doc_id",
-        qf["n_chars"].cast("long").alias("n_chars"),
-        qf["n_tokens"].cast("long").alias("n_tokens"),
-        qf["avg_token_len"].alias("avg_token_len"),
+        f"CAST({qf['n_chars']} AS BIGINT) AS n_chars",
+        f"CAST({qf['n_tokens']} AS BIGINT) AS n_tokens",
+        f"{qf['avg_token_len']} AS avg_token_len",
     )
 
 
@@ -107,15 +107,10 @@ def q22_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bind the unrounded ratios as columns (r15): the one-projection
     # form re-split the text per `stop` reference (x2) and re-ran the
     # regexp per `punct` reference (x2)
-    tk = F.col("__t")
-    stop_raw = (
-        F.size(F.filter(tk, lambda x: x.isin(*TX.LANG_STOPWORDS["en"])))
-        .cast("double")
-        / F.size(tk)
-    )
+    stop_raw = f"CAST({TX.hits('__t', TX.LANG_STOPWORDS['en'])} AS DOUBLE) / size(__t)"
     return (
-        d.select("doc_id", TX.tokens(F.col("text")).alias("__t"), punct_raw.alias("__punct"))
-        .select("doc_id", stop_raw.alias("__stop"), "__punct")
+        d.select("doc_id", F.expr(TX.tokens("text")).alias("__t"), punct_raw.alias("__punct"))
+        .select("doc_id", F.expr(stop_raw).alias("__stop"), "__punct")
         .select(
             "doc_id",
             F.round("__punct", 6).alias("punct_ratio"),
@@ -154,34 +149,19 @@ def q23_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array, then derive the guess from the hit COLUMNS: the flat form
     # (4x lang_hits + lang_guess) re-split the text ~14x per row (r15)
     d = load_table(spark, sf_dir, "documents")
-    tk = F.col("__t")
-
-    def is_stopword(lang: str):
-        # closure factory — a default-arg lambda would make PySpark
-        # pass the array INDEX as the second parameter
-        words = TX.LANG_STOPWORDS[lang]
-        return lambda x: x.isin(*words)
-
-    hit_cols = [
-        F.size(F.filter(tk, is_stopword(L))).cast("long").alias(f"{L}_hits")
-        for L in ("en", "es", "de", "fr")
-    ]
+    langs = ("en", "es", "de", "fr")
     return (
-        d.select("doc_id", "lang", TX.tokens("text").alias("__t"))
-        .select("doc_id", "lang", *hit_cols)
-        .select(
+        d.select("doc_id", "lang", F.expr(TX.tokens("text")).alias("__t"))
+        .selectExpr(
             "doc_id",
             "lang",
-            "en_hits",
-            "es_hits",
-            "de_hits",
-            "fr_hits",
-            TX.lang_guess_from_hits(
-                F.col("en_hits"),
-                F.col("es_hits"),
-                F.col("de_hits"),
-                F.col("fr_hits"),
-            ).alias("lang_guess"),
+            *[f"CAST({TX.hits('__t', TX.LANG_STOPWORDS[L])} AS BIGINT) AS {L}_hits" for L in langs],
+        )
+        .selectExpr(
+            "doc_id",
+            "lang",
+            *[f"{L}_hits" for L in langs],
+            f"{TX.lang_guess_from_hits(*[f'{L}_hits' for L in langs])} AS lang_guess",
         )
     )
 
@@ -216,7 +196,7 @@ FROM h
 
 def q24_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", TX.fingerprint("text").alias("fp"))
+    return d.select("doc_id", F.expr(TX.fingerprint("text")).alias("fp"))
 
 
 Q24_SQL = f"""
@@ -568,7 +548,7 @@ def q46_top_words_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regardless of layout
     counts = (
         fan_out(d.select("lang", "text"))
-        .select("lang", F.explode(TX.tokens("text")).alias("word"))
+        .select("lang", F.explode(F.expr(TX.tokens("text"))).alias("word"))
         .groupBy("lang", "word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -908,42 +888,15 @@ Q48_SQL = _q48_sql()
 # ---------------------------------------------------------------------------
 
 def q58_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import vectors as V
+    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.similarity import int8_quantize
 
     e = load_table(spark, sf_dir, "embeddings")
-    v = V.as_double("embedding")
-    amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
-    # scale is BOUND as a projection column (r15): the code transform
-    # references it as a cheap attribute instead of re-evaluating the
-    # array_max chain per reference (the r14 dim²/duplicate-scan
-    # class).  The pushed-down scale > 0 predicate still costs one
-    # amax scan in the filter — accepted residual (2 scans, was 3).
-    return (
-        e.select(
-            "vec_id",
-            v.alias("__v"),
-            (amax / F.lit(127.0)).alias("scale"),
-        )
-        .select(
-            "vec_id",
-            V.norm(F.col("__v")).alias("l2_norm"),
-            "scale",
-            F.transform(
-                "__v", lambda x: F.floor(x / F.col("scale") + 0.5).cast("int")
-            ).alias("qv"),
-        )
-        .filter(F.col("scale") > 0)  # zero vectors are unquantizable
-        .select(
-            "vec_id",
-            "l2_norm",
-            "scale",
-            F.aggregate(
-                "qv", F.lit(0).cast("long"), lambda acc, x: acc + x
-            ).alias("q_sum"),
-            F.md5(
-                F.concat_ws(",", F.transform("qv", lambda x: x.cast("string")))
-            ).alias("q_md5"),
-        )
+    return int8_quantize(e, "vec_id", "embedding").selectExpr(
+        "vec_id",
+        "__n AS l2_norm",
+        "__s AS scale",
+        "aggregate(__qv, 0L, (__acc, __x) -> __acc + __x) AS q_sum",
+        "md5(concat_ws(',', transform(__qv, __x -> CAST(__x AS STRING)))) AS q_md5",
     )
 
 

@@ -248,7 +248,7 @@ def q122_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-parquet-file explode serializes without a fan-out of the
     # PROJECTED input (the q111 lesson)
     toks = fan_out(d.select("text")).select(
-        F.explode(text.tokens("text")).alias("tok")
+        F.explode(F.expr(text.tokens("text"))).alias("tok")
     )
     counts = metrics.countmin_counts(
         toks, "tok", depth=_Q122_DEPTH, width=_Q122_WIDTH

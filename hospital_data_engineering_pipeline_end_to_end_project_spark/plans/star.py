@@ -217,9 +217,11 @@ def refresh_fact_partitions(
     """
     builder, _ = FACT_BUILDERS[fact_name]
     df = builder(SilverStore(spark, warehouse))
-    pred = F.lit(False)
-    for y, m in months:
-        pred = pred | ((F.col("year") == y) & (F.col("month") == m))
+    # one array literal, not a chain of int literals: Spark inlines Int
+    # literals into the generated Java source (every new set of months
+    # compiled new classes), but passes array literals by reference
+    keys = ", ".join(str(y * 100 + m) for y, m in months)
+    pred = f"array_contains(array({keys}), year * 100 + month)" if months else "false"
     return write_observed(
         df.filter(pred).repartition("year", "month"),
         lambda sub: sub.write.mode("overwrite")

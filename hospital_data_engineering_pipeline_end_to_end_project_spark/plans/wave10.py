@@ -262,7 +262,7 @@ def q130_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", _synth_url_spark().alias("url")
     )
     return (
-        d.select("doc_id", text.canonical_url("url").alias("canonical_url"))
+        d.select("doc_id", F.expr(text.canonical_url("url")).alias("canonical_url"))
         .groupBy("canonical_url")
         .agg(
             F.min("doc_id").cast("long").alias("canonical_doc"),
@@ -505,7 +505,7 @@ _Q134_CUT = 0.98
 
 def q134_source_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", text.token_count("text").cast("long").alias("n_tokens")
+        "doc_id", "source", F.expr(text.token_count("text")).cast("long").alias("n_tokens")
     )
     out = dataprep.percentile_calibrate(d, "source", "n_tokens")
     return out.filter(F.col("pct") >= _Q134_CUT).select(
@@ -586,7 +586,7 @@ def q136_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = dedupe.near_dup_candidates(bands, "doc_id")
     labels = components.label_propagation_min(pairs, rounds=_Q128_ROUNDS)
-    quality = d.select("doc_id", text.token_count("text").cast("long").alias("n_tokens"))
+    quality = d.select("doc_id", F.expr(text.token_count("text")).cast("long").alias("n_tokens"))
     return dedupe.cluster_keepers(labels, quality, "doc_id", "n_tokens")
 
 

@@ -603,7 +603,7 @@ def fetch_records_from_docs(d: DataFrame) -> DataFrame:
     from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
 
     base = d.select(
-        "doc_id", TX.tokens("text").alias("__t")
+        "doc_id", F.expr(TX.tokens("text")).alias("__t")
     ).withColumn("__n", F.size("__t"))
     cut = F.floor(F.col("__n") / 2).cast("int")
     ov = (F.lit(_Q150_MIN) + F.col("doc_id") % 5).cast("int")

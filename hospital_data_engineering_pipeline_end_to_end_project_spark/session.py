@@ -58,6 +58,20 @@ answer), so it only takes effect when :func:`get_spark` builds the
 process's first session.  A caller who wants the call sites passes
 ``{"spark.python.sql.dataFrameDebugging.enabled": "true"}`` through
 ``extra_conf``.
+
+Worker daemon.  For a local master, ``get_spark`` sets
+``spark.python.daemon.module`` to :mod:`.worker_daemon` and prepends
+the directory holding the package to ``spark.executorEnv.PYTHONPATH``
+so the Python workers can import it.  Each Python task (mapInArrow,
+mapInPandas, pandas_udf, RDD) otherwise spends 106-160 ms in PySpark's
+``setup_spark_files``, whose ``importlib.invalidate_caches()`` makes
+every cached ``zipimporter`` re-read ``pyspark.zip``'s central
+directory (Python 3.11); the daemon drops those finders before each
+task.  Measured on a 4-vCPU VM (local[2]): an identity mapInArrow job
+249 -> 131 ms, mapInPandas 247 -> 115 ms.  Other masters keep Spark's
+stock daemon: their executors need not have the package installed.
+Both settings are static, effective only when ``get_spark`` builds the
+JVM's first SparkContext.
 """
 
 from __future__ import annotations
@@ -67,6 +81,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+#: ``spark.python.daemon.module`` for local masters (module docstring)
+WORKER_DAEMON = f"{__package__}.worker_daemon"
 
 #: ``spark.sql.codegen.cache.maxEntries``: compiled generated classes
 #: kept per JVM (Spark's default is 100).  Sized from the measured
@@ -104,6 +121,10 @@ def get_spark(
       stack walk and JVM call-site record per Column call (static:
       effective only in the process's first session; see the module
       docstring).
+    - ``spark.python.daemon.module`` = :data:`WORKER_DAEMON` and the
+      package's directory on ``spark.executorEnv.PYTHONPATH``, for local
+      masters only: Python tasks skip re-reading ``pyspark.zip`` (static;
+      see the module docstring).
     - ``spark.sql.parquet.filterPushdown`` / vectorized reader are Spark
       defaults and intentionally left on.
     """
@@ -136,11 +157,19 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    extra_conf = dict(extra_conf or {})
+    if master is None and "SPARK_MASTER" not in os.environ:
+        master = f"local[{_cpus()}]"
     if master is not None:
         builder = builder.master(master)
-    elif "SPARK_MASTER" not in os.environ:
-        builder = builder.master(f"local[{_cpus()}]")
-    for k, v in (extra_conf or {}).items():
+    if master is not None and master.startswith("local"):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        path_key = "spark.executorEnv.PYTHONPATH"
+        builder = builder.config("spark.python.daemon.module", WORKER_DAEMON)
+        extra_conf[path_key] = os.pathsep.join(
+            p for p in (root, extra_conf.get(path_key)) if p
+        )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -247,6 +247,7 @@ def ivf_topk_against_index(
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.parallelism import fan_out
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.similarity import (
         _centroid_dists,
+        _probe_list,
         _with_unit,
     )
 
@@ -263,26 +264,19 @@ def ivf_topk_against_index(
         idx.select(
             F.col(id_col).alias("neighbor_id"),
             F.col("cluster"),
-            V.as_double(vec_col).alias("v"),
+            F.expr(V.as_double(vec_col)).alias("v"),
         ),
-        F.col("v"),
+        "v",
         "cn",
     ).select("neighbor_id", "cluster", "cn")
     base = _with_unit(
-        fan_out(batch.select(F.col(id_col), V.as_double(vec_col).alias("v"))),
-        F.col("v"),
+        fan_out(batch.select(F.col(id_col), F.expr(V.as_double(vec_col)).alias("v"))),
+        "v",
         "qn",
     )
-    dists = _centroid_dists(F.col("v"), centroids)
-    structs = F.zip_with(
-        dists,
-        F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-        lambda d, c: F.struct(d.alias("d"), c.alias("c")),
-    )
-    probes = F.transform(
-        F.slice(F.array_sort(structs), 1, nprobe),
-        lambda s: s["c"].cast("int"),
-    )
+    probes = F.expr(_probe_list(
+        _centroid_dists("v", centroids), f"sequence(0, {len(centroids) - 1})", nprobe
+    ))
     queries = base.select(
         F.col(id_col).alias("query_id"),
         F.explode(probes).alias("cluster"),
@@ -294,7 +288,7 @@ def ivf_topk_against_index(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(V.dot(F.col("qn"), F.col("cn")), 6).alias("cos_sim"),
+            F.expr(f"round({V.dot('qn', 'cn')}, 6)").alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

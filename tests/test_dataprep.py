@@ -70,7 +70,7 @@ def test_pack_sequences_window_arithmetic(spark, docs):
     from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
 
     sized = docs.select(
-        "doc_id", "source", TX.token_count("text").cast("long").alias("n_tokens")
+        "doc_id", "source", F.expr(TX.token_count("text")).cast("long").alias("n_tokens")
     )
     packed = dataprep.pack_sequences(
         sized, "doc_id", "n_tokens", 512, group_cols=["source"]
@@ -94,7 +94,7 @@ def test_pack_sequences_window_arithmetic(spark, docs):
 def test_chunk_documents_cover_exactly(spark, docs):
     from hospital_data_engineering_pipeline_end_to_end_project_spark.functions import text as TX
 
-    sized = docs.select("doc_id", TX.token_count("text").cast("long").alias("n_tokens"))
+    sized = docs.select("doc_id", F.expr(TX.token_count("text")).cast("long").alias("n_tokens"))
     chunks = dataprep.chunk_documents(sized, "doc_id", "n_tokens", 50).cache()
     cover = chunks.groupBy("doc_id", "n_tokens").agg(
         F.sum(F.col("tok_end") - F.col("tok_start")).alias("covered"),
@@ -151,7 +151,7 @@ def test_repetition_stats_flag_degenerate_doc(spark):
             (2, "one two three four five six seven eight nine ten")]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     per = (
-        d.select("doc_id", F.explode(TX.shingles("text", 3)).alias("s"))
+        d.select("doc_id", F.explode(F.expr(TX.shingles("text", 3))).alias("s"))
         .groupBy("doc_id", "s").agg(F.count(F.lit(1)).alias("c"))
         .groupBy("doc_id").agg(
             (F.max("c").cast("double") / F.sum("c")).alias("top_ratio"))
@@ -543,7 +543,7 @@ def test_token_budget_mix_equals_one_level_window(spark):
     from hospital_data_engineering_pipeline_end_to_end_project_spark.operators import dataprep
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "source", "doc_id", F.size(text.tokens("text")).alias("n_tokens")
+        "source", "doc_id", F.size(F.expr(text.tokens("text"))).alias("n_tokens")
     )
     got = sorted(
         map(

@@ -166,3 +166,29 @@ def test_run_gold_with_an_empty_entity_feed(spark, tmp_path):
     assert counts["fact_billing"] > 0
     back = spark.read.parquet(os.path.join(wh, "gold", "fact_billing"))
     assert back.count() == counts["fact_billing"]
+
+
+def test_new_date_and_months_reuse_compiled_classes(spark, pipeline):
+    """A batch with a new processing date compiles only the classes of
+    the merge's final select, and a refresh of new months compiles
+    none: the date and the months no longer reach the generated Java
+    source as inlined literals (the parent compiled 24 and 8)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    wh = pipeline
+    raw = os.path.join(os.path.dirname(wh), "raw")
+    months = star.months_touched(medallion.SilverStore(spark, wh).read("billing"), "billing_date")
+    assert len(months) >= 4
+    medallion.run_silver(spark, raw, wh, "2031-07-09")
+    for fact in star.FACT_BUILDERS:
+        star.refresh_fact_partitions(spark, wh, fact, months[:2])
+    start = compiled()
+    medallion.run_silver(spark, raw, wh, "2031-07-10")
+    silver = compiled() - start
+    start = compiled()
+    for fact in star.FACT_BUILDERS:
+        star.refresh_fact_partitions(spark, wh, fact, months[2:4])
+    assert silver <= 12 and compiled() == start

@@ -310,12 +310,11 @@ def test_quantization_roundtrip_fidelity(spark):
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     v = V.as_double("embedding")
-    amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
-    scale = amax / 127.0
-    qv = F.transform(v, lambda x: F.floor(x / (amax / 127.0) + 0.5).cast("int"))
-    deq = F.transform(qv, lambda q: q.cast("double") * scale)
+    scale = f"(array_max(transform({v}, x -> abs(x))) / 127.0D)"
+    qv = f"transform({v}, x -> CAST(floor(x / {scale} + 0.5D) AS INT))"
+    deq = f"transform({qv}, q -> CAST(q AS DOUBLE) * {scale})"
     worst = (
-        e.select(V.cosine(v, deq).alias("c"))
+        e.select(F.expr(V.cosine(v, deq)).alias("c"))
         .agg(F.min("c"))
         .collect()[0][0]
     )
@@ -764,7 +763,7 @@ def test_mid_k_training_routes_to_numpy_driver_side(spark):
     sample = [
         [float(x) for x in r["__tv"]]
         for r in e.select(
-            "vec_id", V.as_double("embedding").alias("__tv")
+            "vec_id", F.expr(V.as_double("embedding")).alias("__tv")
         )
         .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(cap)

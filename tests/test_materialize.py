@@ -20,6 +20,7 @@ from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.mater
     MODES,
     PERSIST,
     materialize,
+    release,
 )
 from hospital_data_engineering_pipeline_end_to_end_project_spark.plans import registry
 from tests.conftest import SF_SMOKE
@@ -128,3 +129,51 @@ def test_policy_keeps_oracle_parity(spark, mode):
     assert "Scan ExistingRDD" not in plan
     if mode == PERSIST:
         assert "InMemoryTableScan" in plan
+
+
+def _policy_indexes(spark) -> set[int]:
+    """Ids of the cached RDDs that are not local checkpoints (the
+    per-round lineage caps, which no policy drops)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in rdds.keySet().toArray() if not rdds.get(k).isCheckpointed()}
+
+
+def test_persist_releases_superseded_intermediates(spark):
+    """Under ``persist`` an operator frees what its own later steps
+    superseded (the per-step BPE vocabularies, the IVF training sample,
+    the connected-components edge frame and shortcut labels): after a
+    query only the indexes that returned frames read stay cached."""
+    queries = registry.queries()
+    with policy(spark, PERSIST):
+        before = _policy_indexes(spark)
+        queries["q61_dup_clusters"](spark, SF_SMOKE).collect()
+        # the band index the LSH pair frame reads; the component
+        # labels are a local checkpoint
+        after_q61 = _policy_indexes(spark)
+        assert len(after_q61 - before) == 1
+        queries["q154_bpe_merge_steps"](spark, SF_SMOKE).collect()
+        # the final vocabulary bpe_train_from_vocab returns
+        assert len(_policy_indexes(spark) - after_q61) == 1
+
+
+def test_persist_releases_component_shortcut_labels(spark):
+    # a 40-node path needs the pointer-jumping rounds
+    from hospital_data_engineering_pipeline_end_to_end_project_spark.operators.components import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(40)], "id_a long, id_b long")
+    with policy(spark, PERSIST):
+        before = _policy_indexes(spark)
+        labels = connected_components(edges)
+        assert _policy_indexes(spark) - before == set()
+        assert {r.component for r in labels.collect()} == {0}
+
+
+@pytest.mark.parametrize("mode", [EAGER, LAZY])
+def test_release_is_a_no_op_outside_persist(spark, mode):
+    with policy(spark, mode):
+        df = spark.range(3).persist()
+        df.count()
+        release(df)
+        assert df.storageLevel.useMemory

@@ -180,7 +180,7 @@ def test_canonical_url_cases(spark):
     df = spark.createDataFrame(rows, "id int, url string")
     got = {
         r["id"]: r["c"]
-        for r in df.select("id", text.canonical_url("url").alias("c")).collect()
+        for r in df.select("id", F.expr(text.canonical_url("url")).alias("c")).collect()
     }
     assert got[1] == got[2] == "https://example.com/Docs/Page?a=1&b=2"
     assert got[3] == got[4] == "http://example.com/"
